@@ -55,32 +55,36 @@ def rotate_persist(
     return df
 
 
-def no_aqe_count(df: DataFrame) -> int:
-    """Run ``df.count()`` with adaptive execution OFF — for driver-side
-    bookkeeping actions (cache materialization, convergence probes) whose
-    plans are fixed: AQE submits each internal shuffle map stage as its
+def _without_aqe(df: DataFrame, action):
+    """Run ``action`` (a bound action of ``df``) with adaptive execution
+    OFF — for driver-side bookkeeping actions (cache materialization,
+    convergence probes) whose plans are fixed: AQE submits each internal shuffle map stage as its
     OWN job before the result job, paying one scheduling round-trip per
     stage for re-optimization the action can't use (OPTIMIZATION r13 —
     measured: dedup_minhash's sig materialization 2 jobs -> 1,
     grouped_stats' box-prefilter action 4 -> 1). The conf is restored
-    before returning, so the QUERY plans consumers build stay adaptive."""
+    before returning, so the QUERY plans consumers build stay adaptive.
+
+    Contract: ``spark.sql.adaptive.enabled`` is a SESSION-wide conf, so
+    for the duration of the action every query on the session plans
+    without AQE. This is safe only while no other thread plans or runs a
+    query on the same session; callers that share one session across
+    threads (``plans.pipeline.fan_out`` with ``max_parallel > 1``) must
+    not reach these helpers concurrently."""
     conf = df.sparkSession.conf
     prev = conf.get("spark.sql.adaptive.enabled", "true")
     try:
         conf.set("spark.sql.adaptive.enabled", "false")
-        return df.count()
+        return action()
     finally:
         conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def no_aqe_count(df: DataFrame) -> int:
+    """``df.count()`` with adaptive execution off — see ``_without_aqe``."""
+    return _without_aqe(df, df.count)
 
 
 def no_aqe_first(df: DataFrame):
-    """``df.first()`` with adaptive execution off — see ``no_aqe_count``."""
-    conf = df.sparkSession.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        return df.first()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
-
-
+    """``df.first()`` with adaptive execution off — see ``_without_aqe``."""
+    return _without_aqe(df, df.first)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators._cache import rotate_persist
 
 # Inputs whose Catalyst size estimate is below this buffer the whole group in
@@ -32,9 +33,7 @@ from airflow_etl_elt_spark.operators._cache import rotate_persist
 # Above it, the bracketed-selection algorithm keeps state O(n/accuracy).
 # 256 MiB of scan ≈ well under a reducer's working memory even if one group
 # holds every row.
-_MEDIAN_SMALL_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MEDIAN_SMALL_BYTES", str(256 * 1024 * 1024))
-)
+_MEDIAN_SMALL_BYTES = 256 * 1024 * 1024
 
 # Histogram-bracketed selection knobs (exact median, large regime).
 # _HIST_BUCKETS equal-width cells per refinement level: hist shuffle volume
@@ -472,9 +471,6 @@ def guarded_long_sum_agg(
     )
 
 
-_PLAN_SIZE_CACHE: dict[tuple[str, int], int] = {}
-
-
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the optimized plan (bytes). This is the
     same statistic the optimizer itself uses to pick broadcast joins —
@@ -482,26 +478,19 @@ def _plan_size_bytes(df: DataFrame) -> int:
     and conservative. Returns a huge sentinel when unavailable so callers
     fall back to the scale-safe path.
 
-    Memoized per (application, semanticHash of the ANALYZED plan):
-    re-running optimization for the estimate costs ~34 ms of driver time,
-    which cost-gated operators would otherwise re-pay on EVERY invocation;
-    semanticHash is ~1.2 ms. The UNanalyzed plan string would be the wrong
-    key — Spark 4 prints a fresh parquet read as "UnresolvedDataSource …
-    paths: 1 provided" with no path, so different tables collide.
-    Session-lived, same staleness contract as the reader's relation cache —
-    fixture files don't change mid-session.
+    Memoized per semanticHash of the ANALYZED plan: re-running optimization
+    for the estimate costs ~34 ms of driver time, which cost-gated operators
+    would otherwise re-pay on EVERY invocation; semanticHash is ~1.2 ms. The
+    UNanalyzed plan string would be the wrong key — Spark 4 prints a fresh
+    parquet read as "UnresolvedDataSource … paths: 1 provided" with no path,
+    so different tables collide.
     """
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
+        return memo.get(
+            "plan_sizes",
             df.semanticHash(),
+            lambda: int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
         )
-        cached = _PLAN_SIZE_CACHE.get(key)
-        if cached is not None:
-            return cached
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        _PLAN_SIZE_CACHE[key] = size
-        return size
     except Exception:
         return 1 << 62
 
@@ -1135,23 +1124,10 @@ def grouped_stats(
     # median machinery share one computation of the agg. __mn/__mx are the
     # NaN-free bucketing bounds (F.min/F.max treat NaN as the largest
     # double, which would poison every cell width).
-    from airflow_etl_elt_spark.operators._cache import rotate_persist
-
     vd = F.col(value_col).cast("double")
     vals = df.filter(F.col(value_col).isNotNull()).select(
         group_col, vd.alias("__v")
     )
-    # r12 probe knob (VERDICT r11 stretch 7): the median machinery re-reads
-    # vals for each hist level + the selection scan — 2-3 parquet re-decodes
-    # of the 2-col projection (~0.32 s each at the 100x replica). "persist"
-    # serves those passes from a MEMORY_AND_DISK materialization instead
-    # (rotated per invocation, so fresh-mode benches stay fresh: every
-    # sample pays its own materialization). Probe-gated, default unchanged;
-    # measured A/B in scripts/exp_gs_vals_probe.py before any flip.
-    if os.environ.get("SPARK_GRAFT_GS_VALS", "scan") == "persist":
-        vals = rotate_persist(
-            f"grouped_stats_vals:{group_col}:{value_col}", vals, materialize=False
-        )
     tag = f"grouped_stats_med:{group_col}:{value_col}"
     with_stats = _usable_bounds(value_bounds)
     base_aggs = [

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators._cache import rotate_persist
 from airflow_etl_elt_spark.operators.text import (
     ASCII_LOWER_TABLE,
@@ -36,10 +37,6 @@ from airflow_etl_elt_spark.operators.text import (
 from pyspark.sql.functions import pandas_udf
 
 from airflow_etl_elt_spark.sources.readers import fan_out
-
-# Measurement hook: force the minhash verify-join broadcast gate on (True) /
-# off (False) for interleaved A/Bs; None = the size gate decides (production).
-_FORCE_VERIFY_BROADCAST: "bool | None" = None
 
 # Mersenne prime 2^31-1: universal-hash modulus (h_i(x) = (a_i*x + b_i) mod p).
 # Chosen < 2^31 so (h mod p) * a stays under 2^62 — Spark 4 runs ANSI mode by
@@ -232,61 +229,15 @@ def minhash_signatures(
     every core even from a few-big-files layout; no shuffle of text beyond
     that; signatures (64 longs/doc) are what flows onward.
     """
-    import random
-
-    # The UDF object is memoized per (applicationId, parameter tuple)
-    # (OPTIMIZATION r12, ADVICE r12): pandas_udf() registration costs
-    # ~40 ms of py4j per call and the closure (seeded a/b permutation
-    # arrays + shingle_k) is a pure function of the arguments — same UDF
-    # object, same execution. The applicationId key matters because a
-    # UserDefinedFunction lazily pins its JVM-side _judf to the session
-    # active at first use: reusing the object across spark.stop()/new
-    # session would hand out dead JVM references (the same staleness
-    # contract as _PARTITION_COUNT_CACHE and the reader relation cache).
-    cache_key = (
-        documents.sparkSession.sparkContext.applicationId,
-        num_hashes,
-        shingle_k,
-        seed,
+    # The UDF object is memoized per parameter tuple (OPTIMIZATION r12):
+    # pandas_udf() registration costs ~40 ms of py4j per call and the
+    # closure (seeded a/b permutation arrays + shingle_k) is a pure function
+    # of the arguments — same UDF object, same execution.
+    sig_udf = memo.get(
+        "udfs",
+        ("minhash_sig", num_hashes, shingle_k, seed),
+        lambda: _minhash_sig_udf(num_hashes, shingle_k, seed),
     )
-    cached_udf = _SIG_UDF_CACHE.get(cache_key)
-    if cached_udf is not None:
-        nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-        return fan_out(
-            nonempty.select(F.col(id_col).alias("id"), F.col(text_col))
-        ).select("id", cached_udf(text_col).alias("sig"))
-
-    rng = random.Random(seed)
-    a_np = np.array([rng.randrange(1, _P) for _ in range(num_hashes)], dtype=np.uint64)[:, None]
-    b_np = np.array([rng.randrange(0, _P) for _ in range(num_hashes)], dtype=np.uint64)[:, None]
-    p = np.uint64(_P)
-
-    @pandas_udf("array<long>")
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        # A fourth alternative was measured and REJECTED in r10: a whole-
-        # batch form (Arrow-kernel tokenization + one flat rolling poly +
-        # np.minimum.reduceat over per-doc segments — see
-        # scripts/exp_minhash_decompose.py, which keeps the bit-identical
-        # variant for re-measurement). At the 100x replica it ran 3.91 s vs
-        # this loop's 2.12 s on an identical agg sink: the per-doc (64 x
-        # n_shingles) blocks here stay L2-resident (~25 KB) and only 64
-        # longs/doc touch RAM, while the flat form streams
-        # (chunk x millions)-element intermediates to memory 64/chunk times
-        # per batch — vectorization traded a small Python-loop overhead for
-        # a memory-bandwidth-bound pipeline and lost. The signature pass is
-        # also NOT the at-scale cost: 0.75 s of dedup_minhash's 48 s at
-        # 100x (exp_minhash_decompose_sf1x100.json) — the key is pair-
-        # cardinality-bound (SCALING r10 addendum 2).
-        out = []
-        for th in _batch_token_hashes(texts):
-            if th is None:
-                out.append(None)
-                continue
-            h = _shingle_hashes_from_tokens(th, shingle_k) % p  # < 2^31: products fit u64
-            m = ((h[None, :] * a_np + b_np) % p).min(axis=1)
-            out.append(m.astype(np.int64))
-        return pd.Series(out)
-
     # Null/empty docs are dropped BEFORE the UDF with a cheap column
     # predicate (precisely the texts for which the UDF yields null: null or
     # whitespace-only → zero tokens). Filtering on sig_udf's OUTPUT instead
@@ -299,17 +250,45 @@ def minhash_signatures(
     # "has at least one token" in the portable ws_tokens contract — a
     # trim-based emptiness test diverges between Java and DuckDB on
     # unicode whitespace (see text.ws_tokens)
-    _SIG_UDF_CACHE[cache_key] = sig_udf
     nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
     return fan_out(nonempty.select(F.col(id_col).alias("id"), F.col(text_col))).select(
         "id", sig_udf(text_col).alias("sig")
     )
 
 
-#: memoized signature UDF objects per (applicationId, num_hashes,
-#: shingle_k, seed) — pure
-#: code-object reuse, no data cached (see minhash_signatures).
-_SIG_UDF_CACHE: dict = {}
+def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
+    import random
+
+    rng = random.Random(seed)
+    a_np = np.array([rng.randrange(1, _P) for _ in range(num_hashes)], dtype=np.uint64)[:, None]
+    b_np = np.array([rng.randrange(0, _P) for _ in range(num_hashes)], dtype=np.uint64)[:, None]
+    p = np.uint64(_P)
+
+    @pandas_udf("array<long>")
+    def sig_udf(texts: pd.Series) -> pd.Series:
+        # A fourth alternative was measured and REJECTED in r10: a whole-
+        # batch form (Arrow-kernel tokenization + one flat rolling poly +
+        # np.minimum.reduceat over per-doc segments — see SCALING.md
+        # "Round-10 addendum 2"). At the 100x replica it ran 3.91 s vs
+        # this loop's 2.12 s on an identical agg sink: the per-doc (64 x
+        # n_shingles) blocks here stay L2-resident (~25 KB) and only 64
+        # longs/doc touch RAM, while the flat form streams
+        # (chunk x millions)-element intermediates to memory 64/chunk times
+        # per batch — vectorization traded a small Python-loop overhead for
+        # a memory-bandwidth-bound pipeline and lost. The signature pass is
+        # also NOT the at-scale cost: 0.75 s of dedup_minhash's 48 s at
+        # 100x — the key is pair-cardinality-bound (same addendum).
+        out = []
+        for th in _batch_token_hashes(texts):
+            if th is None:
+                out.append(None)
+                continue
+            h = _shingle_hashes_from_tokens(th, shingle_k) % p  # < 2^31: products fit u64
+            m = ((h[None, :] * a_np + b_np) % p).min(axis=1)
+            out.append(m.astype(np.int64))
+        return pd.Series(out)
+
+    return sig_udf
 
 
 def _banded_ids(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -511,8 +490,6 @@ def minhash_lsh_pairs(
     # the unshared band projection twice). Large inputs keep the
     # distributed id-join shape — signatures at corpus scale outgrow any
     # broadcast.
-    import os as _os
-
     from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
     from airflow_etl_elt_spark.operators.relational import SINGLE_TASK_BYTES
 
@@ -520,8 +497,6 @@ def minhash_lsh_pairs(
         _plan_size_bytes(documents.select(id_col, text_col))
         < SINGLE_TASK_BYTES
     )
-    if _FORCE_VERIFY_BROADCAST is not None:  # A/B measurement hook only
-        small_input = _FORCE_VERIFY_BROADCAST
 
     # Bucket = (band_id, band_sig). Pair expansion inside each bucket.
     left = banded.select("band_id", "band_sig", F.col("id").alias("id_a"))

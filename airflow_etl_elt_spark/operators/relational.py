@@ -55,9 +55,7 @@ def ordered_small(df: DataFrame, *cols, desc: bool = False) -> DataFrame:
 #: NOTE the unit: this bounds Catalyst's OPTIMIZED-PLAN size estimate
 #: (file bytes x column fraction), which for compressed numeric parquet
 #: under-reports in-memory row size ~10x.
-SINGLE_TASK_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_SINGLE_TASK_BYTES", str(4 * 1024 * 1024))
-)
+SINGLE_TASK_BYTES = 4 * 1024 * 1024
 
 
 def fuse_small_input(df: DataFrame, bound_scale: float = 1.0) -> DataFrame:

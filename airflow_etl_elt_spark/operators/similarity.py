@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import memo
+
 #: cosine_near_dup_pairs block-size ceiling: bounds the per-task float64
 #: gram at 4096² x 8 B ≈ 134 MB (plus operands), and with it the peak arena
 #: a REUSED pyspark python worker retains for its lifetime — the 100x-sweep
@@ -73,9 +75,20 @@ def _norm(a):
     )
 
 
-#: memoized cosine-score UDF objects per (applicationId, query vector) —
-#: pure code-object reuse, no data cached (see cosine_topk's blas path).
-_COS_UDF_CACHE: dict = {}
+def _cosine_udf(query_vec: tuple[float, ...]):
+    qv = np.asarray(query_vec, dtype=np.float64)
+    qn = float(np.linalg.norm(qv)) or 1.0
+
+    @F.pandas_udf("double")
+    def cos_udf(vecs: pd.Series) -> pd.Series:
+        if not len(vecs):
+            return pd.Series([], dtype="float64")
+        V = np.stack(vecs.to_numpy()).astype(np.float64)
+        n = np.linalg.norm(V, axis=1)
+        n[n == 0] = 1.0
+        return pd.Series((V @ qv) / (n * qn))
+
+    return cos_udf
 
 
 def cosine_topk(
@@ -122,30 +135,11 @@ def cosine_topk(
     if impl == "auto":
         impl = "jvm" if est >= 16 * 1024 * 1024 else "blas"
     if impl == "blas":
-        # UDF object memoized per (applicationId, query vector)
-        # (OPTIMIZATION r13): pandas_udf() registration costs ~40 ms of
-        # py4j per call and the closure is a pure function of query_vec.
-        # applicationId key per ADVICE r12 (_judf pins to the session).
-        cache_key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            tuple(float(v) for v in query_vec),
-        )
-        cos_udf = _COS_UDF_CACHE.get(cache_key)
-        if cos_udf is None:
-            qv = np.asarray(query_vec, dtype=np.float64)
-            qn = float(np.linalg.norm(qv)) or 1.0
-
-            @F.pandas_udf("double")
-            def cos_udf(vecs: pd.Series) -> pd.Series:
-                if not len(vecs):
-                    return pd.Series([], dtype="float64")
-                V = np.stack(vecs.to_numpy()).astype(np.float64)
-                n = np.linalg.norm(V, axis=1)
-                n[n == 0] = 1.0
-                return pd.Series((V @ qv) / (n * qn))
-
-            _COS_UDF_CACHE[cache_key] = cos_udf
-
+        # UDF object memoized per query vector (OPTIMIZATION r13):
+        # pandas_udf() registration costs ~40 ms of py4j per call and the
+        # closure is a pure function of query_vec.
+        qt = tuple(float(v) for v in query_vec)
+        cos_udf = memo.get("udfs", ("cosine", qt), lambda: _cosine_udf(qt))
         cos = cos_udf(F.col(vec_col))
     else:
         q = F.array(*[F.lit(float(v)) for v in query_vec])

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import memo
+
 # Engine-portable whitespace class, used for every tokenizing split on the
 # Spark side AND verbatim in the DuckDB oracle strings (queries.py). Java's
 # \s includes vertical tab (\x0B) but RE2's does not, so a bare \s+ would
@@ -216,24 +218,6 @@ def _marker_hits_arrow():
     return pandas_udf(fn, f"struct<{out_type}>")
 
 
-#: memoized marker-hits UDF objects per applicationId (OPTIMIZATION r13):
-#: pandas_udf() registration costs ~40 ms of py4j per call and the closure
-#: is a pure function of the module-level LANG_MARKERS — same UDF object,
-#: same execution. Keyed by applicationId (not process-global) because a
-#: UserDefinedFunction pins its JVM-side _judf to the session active at
-#: first use (ADVICE r12 on _SIG_UDF_CACHE).
-_MARKER_HITS_UDF_CACHE: dict = {}
-
-
-def _marker_hits_udf(spark) -> "F.Column":
-    key = spark.sparkContext.applicationId
-    udf = _MARKER_HITS_UDF_CACHE.get(key)
-    if udf is None:
-        udf = _marker_hits_arrow()
-        _MARKER_HITS_UDF_CACHE[key] = udf
-    return udf
-
-
 def lang_id(documents: DataFrame) -> DataFrame:
     """Marker-word language-ID heuristic: per-language hit counts → argmax.
 
@@ -248,9 +232,10 @@ def lang_id(documents: DataFrame) -> DataFrame:
     alternations, identical counts to the r1-r5 codegen formulation
     (parity-tested).
     """
-    # UDF object memoized per application (OPTIMIZATION r13): registration
-    # was ~40 ms of py4j per fresh build — see _MARKER_HITS_UDF_CACHE.
-    hits = _marker_hits_udf(documents.sparkSession)
+    # UDF object memoized (OPTIMIZATION r13): pandas_udf() registration
+    # was ~40 ms of py4j per fresh build, and the closure is a pure function
+    # of the module-level LANG_MARKERS.
+    hits = memo.get("udfs", ("marker_hits",), _marker_hits_arrow)
     # The labeled `lang` column exists on the canonical documents table; for
     # unlabeled corpora (e.g. clean_corpus over arbitrary text) carry null.
     labeled = (

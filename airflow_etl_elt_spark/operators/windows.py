@@ -12,7 +12,6 @@ aggregates and ranks are reproducible against the DuckDB oracle.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -70,9 +69,7 @@ def top_k_per_group(
 # the r6 replica rewrite compressed orders 2x better and silently flipped
 # this gate OFF at 10x/30x, resurrecting the plain-window spill). Callers
 # that can see parquet footer statistics pass ``total_rows`` instead.
-RANK_COMPOSE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_RANK_COMPOSE_BYTES", str(48 * 1024 * 1024))
-)
+RANK_COMPOSE_BYTES = 48 * 1024 * 1024
 
 # Rows-per-group threshold for the row-based gate (the honest unit: the
 # hazard is ONE task sorting one group's rows, which scales with rows, not
@@ -82,9 +79,7 @@ RANK_COMPOSE_BYTES = int(
 # 3M rows/group composed 5.45 s vs plain 8.35 s (composed 1.5x ahead and
 # the gap grows with group size — the plain window is super-linear once a
 # group's sort spills).
-RANK_COMPOSE_ROWS_PER_GROUP = int(
-    os.environ.get("SPARK_GRAFT_RANK_COMPOSE_ROWS_PER_GROUP", str(1_000_000))
-)
+RANK_COMPOSE_ROWS_PER_GROUP = 1_000_000
 
 
 def ranking_suite(

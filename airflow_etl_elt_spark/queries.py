@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators import (
     aggregates,
     asof,
@@ -685,27 +686,23 @@ def q_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-_QUERY_VEC_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
 def _query_vec(spark: SparkSession, sf: str) -> list[float]:
     """Deterministic query point: the embedding of vec_id = 0 (driver-side
     single-row lookup — the only collect in this module, one 64-float row).
-    Memoized per (application, sf): the vector is a query PARAMETER, and a
-    real service resolves parameters once, not per request — without the memo
-    every knn/ann call pays a full extra lookup job before scoring."""
-    key = (spark.sparkContext.applicationId, sf)
-    vec = _QUERY_VEC_CACHE.get(key)
-    if vec is None:
+    Memoized per sf: the vector is a query PARAMETER, and a real service
+    resolves parameters once, not per request — without the memo every
+    knn/ann call pays a full extra lookup job before scoring."""
+
+    def lookup() -> list[float]:
         row = (
             read_table(spark, sf, "embeddings")
             .filter(F.col("vec_id") == 0)
             .select("embedding")
             .first()
         )
-        vec = [float(x) for x in row[0]]
-        _QUERY_VEC_CACHE[key] = vec
-    return vec
+        return [float(x) for x in row[0]]
+
+    return memo.get("lookups", ("query_vec", sf), lookup)
 
 
 def q_knn_cosine(spark: SparkSession, sf: str) -> DataFrame:
@@ -1267,12 +1264,6 @@ def q_array_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-#: session-lived memo of q5's region→nation key list (plan-construction
-#: metadata over immutable ≤30-row dimension fixtures; see the comment at
-#: the use site). Keyed by applicationId so a new session never reuses it.
-_Q5_REGION_KEYS_CACHE: dict = {}
-
-
 def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q5-shaped five-way join: revenue by nation for one region where
     customer and supplier are co-located. Scale shape: region/nation are
@@ -1298,7 +1289,7 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     # contract, same assumption the r9 isin pruning already makes).
     # asian_sup is built after the lookup; see below.
     # Selectivity on the CUSTOMER side too (r9, from the 100x decomposition
-    # scripts/exp_q5_decompose_sf1x100.json: the customer hash join was
+    # in SCALING.md "Round-9 addendum 2": the customer hash join was
     # +0.58 s of Spark's 1.34, while DuckDB's full query ran FASTER than its
     # own customer tier — its planner prunes customer/orders to the region
     # before the fact-fact join). Customers restricted to the region's
@@ -1315,17 +1306,13 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     # child's without CBO): above the gate, the r8 shuffle-join path stands.
     from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
 
-    # The ≤|nation|-row key lookup is memoized per (application, sf): the
-    # two collect() jobs are ~0.1 s of pure scheduling floor re-paid on
-    # EVERY fresh build of this query for 25+5 immutable dimension rows —
-    # the same session-lived fixture-immutability contract as read_table's
-    # relation cache and _PLAN_SIZE_CACHE (OPTIMIZATION r12). The query
-    # result itself is still computed from the parquet inputs every run;
-    # only this plan-construction constant (the IN-list and its fraction)
-    # is reused.
-    cache_key = (spark.sparkContext.applicationId, sf, "q5_region_keys")
-    cached = _Q5_REGION_KEYS_CACHE.get(cache_key)
-    if cached is None:
+    # The ≤|nation|-row key lookup is memoized per sf (OPTIMIZATION r12):
+    # the two collect() jobs are ~0.1 s of pure scheduling floor re-paid on
+    # EVERY fresh build of this query for 25+5 immutable dimension rows.
+    # The query result itself is still computed from the parquet inputs
+    # every run; only this plan-construction constant (the IN-list and its
+    # fraction) is reused.
+    def region_keys() -> tuple[list, int]:
         nk = n.select(
             "n_nationkey", "n_regionkey", "n_name"
         ).collect()  # ≤ |nation| rows
@@ -1341,16 +1328,12 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
                 "the memoized dim-map fold requires unique nation keys"
             )
         rk = {row["r_regionkey"] for row in r.select("r_regionkey").collect()}
-        cached = (
-            [
-                (row["n_nationkey"], row["n_name"])
-                for row in nk
-                if row["n_regionkey"] in rk
-            ],
-            len(nk),
-        )
-        _Q5_REGION_KEYS_CACHE[cache_key] = cached
-    asian_pairs, n_nations = cached
+        pairs = [
+            (row["n_nationkey"], row["n_name"]) for row in nk if row["n_regionkey"] in rk
+        ]
+        return pairs, len(nk)
+
+    asian_pairs, n_nations = memo.get("lookups", ("q5_region_keys", sf), region_keys)
     asian_keys = [k for k, _ in asian_pairs]
     frac = len(asian_keys) / max(n_nations, 1)
     # asian_sup: region-pruned suppliers with n_name attached from the
@@ -1963,7 +1946,7 @@ def q_tpch_q10(spark: SparkSession, sf: str) -> DataFrame:
     # at-rest layout is active (unlike q3/q5/revenue_by_priority): q10's
     # orders side is date-pruned ~7% BEFORE the join, so its broadcast
     # build is bounded by the date window, not the orders table — and the
-    # isolated 10x A/B (scripts/exp_layout_ab.py, SCALING r7) measured the
+    # isolated 10x A/B (SCALING.md "Round-7 addendum 2") measured the
     # broadcast shape faster (0.49 s vs 0.63 s forced-merge). At real scale
     # 7% of orders outgrows the 16 MB gate below and the shuffle join
     # stands, so the scale story needs no bucket hint here.
@@ -3044,12 +3027,10 @@ QUERIES: dict[str, QueryFn] = {
 # scheduling.) Every catalog query is a deterministic, read-only function of
 # (session, sf dir) over immutable fixture files — the same staleness
 # contract as the reader's relation cache — so the built DataFrame IS the
-# prepared statement and can be memoized per (applicationId, sf, key).
-# Embedded engines re-plan in microseconds; Spark's answer to repeated
-# identical queries is exactly this (persistent views / prepared Datasets).
-# Kill switch: SPARK_GRAFT_PLAN_CACHE=0.
-
-_DF_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# prepared statement and can be memoized per (sf, key) in the session memo
+# (memo.py). Embedded engines re-plan in microseconds; Spark's answer to
+# repeated identical queries is exactly this (persistent views / prepared
+# Datasets). Kill switch: SPARK_GRAFT_PLAN_CACHE=0, read per call.
 
 
 def _plan_cached(key: str, fn: QueryFn) -> QueryFn:
@@ -3060,20 +3041,9 @@ def _plan_cached(key: str, fn: QueryFn) -> QueryFn:
     def wrapped(spark: SparkSession, sf: str) -> DataFrame:
         if os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") == "0":
             return fn(spark, sf)
-        ck = (spark.sparkContext.applicationId, sf, key)
-        df = _DF_PLAN_CACHE.get(ck)
-        if df is None:
-            df = fn(spark, sf)
-            _DF_PLAN_CACHE[ck] = df
-        return df
+        return memo.get("plans", (sf, key), lambda: fn(spark, sf))
 
     return wrapped
-
-
-def plan_cache_clear() -> None:
-    """Drop every prepared DataFrame (e.g. after overwriting fixture files
-    mid-session — the only way the immutability contract can break)."""
-    _DF_PLAN_CACHE.clear()
 
 
 def prepare_all(

@@ -62,7 +62,7 @@ DEFAULT_CONF: dict[str, str] = {
     # hundred ms of Janino compilation — measured at the 100x replica as
     # tpch_q3 0.74 s dedicated vs 2.5-2.9 s interleaved, restored to
     # 0.63-0.88 s by this one setting with every GC/allocator mitigation
-    # having failed (scripts/exp_q3_codegen_cache.py; SCALING r10).
+    # having failed (SCALING.md "Round-10 addendum").
     # 5000 entries ~ a few hundred MB of class metadata at worst, nothing
     # next to the 24g driver heap; a real cluster's long-lived executors
     # want exactly the same headroom.

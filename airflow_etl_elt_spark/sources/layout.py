@@ -56,6 +56,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import memo
+
 #: bump to invalidate every materialized layout (schema of the marker, the
 #: bucket/sort specs below, or the write recipe changed)
 _LAYOUT_VERSION = "v1"
@@ -84,7 +86,10 @@ MULTI_FILE: dict[str, tuple[str, int]] = {
     "part": ("p_partkey", 8),
 }
 
-# (applicationId, abs sf_dir, table) -> entry dict; see resolve().
+# (applicationId, abs sf_dir, table) -> entry dict; see resolve(). Every
+# change to which entries are active drops the memoized prepared plans:
+# they were built against the previous physical relations (same results,
+# wrong layout).
 _REGISTRY: dict[tuple[str, str, str], dict] = {}
 
 # applicationId -> prior value ('' = unset) of the bucketed-scan ordering
@@ -326,21 +331,8 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         _REGISTRY[(app_id, sf_abs, name)] = {"kind": "files", "path": out_dir}
         locations[name] = out_dir
     if locations:
-        _invalidate_plan_cache()
+        memo.clear("plans")
     return locations
-
-
-def _invalidate_plan_cache() -> None:
-    """Activating/deactivating overrides changes which physical relations a
-    query key resolves to — any prepared DataFrames memoized under the same
-    (app, sf, key) are now the WRONG plan (same results, different layout).
-    Keep the prepared-plan cache consistent with the registry state."""
-    try:
-        from airflow_etl_elt_spark.queries import plan_cache_clear
-
-        plan_cache_clear()
-    except Exception:
-        pass  # queries not imported yet: nothing cached
 
 
 def resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
@@ -423,7 +415,7 @@ def clear(spark: SparkSession | None = None) -> None:
         _REGISTRY.clear()
         _SUSPENDED.clear()
         _SAVED_ORDERING_CONF.clear()
-        _invalidate_plan_cache()
+        memo.clear("plans")
         return
     app_id = spark.sparkContext.applicationId
     dropped = False
@@ -433,7 +425,7 @@ def clear(spark: SparkSession | None = None) -> None:
             dropped = True
     _restore_ordering_conf(spark)
     if dropped:
-        _invalidate_plan_cache()
+        memo.clear("plans")
 
 
 _SUSPENDED: dict[tuple[str, str, str], dict] = {}
@@ -455,7 +447,7 @@ def suspend(spark: SparkSession) -> None:
         _restore_ordering_conf(spark)
         if prior is not None:  # keep for resume()/clear()
             _SAVED_ORDERING_CONF[app_id] = prior
-        _invalidate_plan_cache()
+        memo.clear("plans")
 
 
 def resume(spark: SparkSession) -> None:
@@ -466,4 +458,4 @@ def resume(spark: SparkSession) -> None:
         moved = True
     if moved:
         spark.conf.set(_ORDERING_FLAG, "true")  # overrides active again
-        _invalidate_plan_cache()
+        memo.clear("plans")

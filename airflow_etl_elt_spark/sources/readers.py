@@ -22,10 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# (applicationId, path) -> resolved base DataFrame; see read_table.
-_RELATION_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-_COLUMN_STATS_CACHE: dict[tuple[str, str], tuple[float, float, int] | None] = {}
+from airflow_etl_elt_spark import memo
 
 
 def table_column_stats(
@@ -44,9 +41,10 @@ def table_column_stats(
     exact under arbitrary bounds by construction (wrong bounds clamp into
     edge cells and only slow convergence)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (path, column)
-    if key in _COLUMN_STATS_CACHE:
-        return _COLUMN_STATS_CACHE[key]
+    return memo.get("column_stats", (path, column), lambda: _footer_stats(path, column))
+
+
+def _footer_stats(path: str, column: str) -> tuple[float, float, int] | None:
     res: tuple[float, float, int] | None = None
     try:
         import glob as _glob
@@ -77,17 +75,7 @@ def table_column_stats(
             res = (mn, mx, rows)
     except Exception:
         res = None
-    _COLUMN_STATS_CACHE[key] = res
     return res
-
-
-def invalidate_relation(path: str) -> None:
-    """Drop any cached relation for ``path`` (all sessions). Sinks that
-    REWRITE a table in place (replace_table, upsert_by_key) must call this:
-    a cached DataFrame pins the old file listing, so post-rewrite reads
-    through the cache would hit deleted files or stale data."""
-    for key in [k for k in _RELATION_CACHE if k[1] == path]:
-        del _RELATION_CACHE[key]
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:
@@ -106,16 +94,10 @@ def normalize_columns(df: DataFrame) -> DataFrame:
 #: single-threaded text work ~0.04 s/MB vs ~0.3 s fixed fan-out overhead
 #: => ~8 MB of text ~ 4 MB compressed estimate. At production scale inputs
 #: arrive orders of magnitude above this and the gate never engages.
-FAN_OUT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(4 * 1024 * 1024))
-)
+FAN_OUT_MIN_BYTES = 4 * 1024 * 1024
 
 
-def fan_out(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    min_bytes: int | None = None,
-) -> DataFrame:
+def fan_out(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     """Round-robin repartition a narrow input so compute-heavy downstream work
     (regex passes, pandas UDFs, per-row vector math) uses every core.
 
@@ -137,7 +119,7 @@ def fan_out(
     rolling_fingerprint measured 0.16 -> 0.45 s at sf0.1 under the default
     gate before its override.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _partition_count(df) >= target:
         return df
     from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
@@ -148,29 +130,17 @@ def fan_out(
     return df.repartition(target)
 
 
-_PARTITION_COUNT_CACHE: dict[tuple[str, int], int] = {}
-
-
 def _partition_count(df: DataFrame) -> int:
-    """Planned partition count of ``df``, memoized per (application,
-    semanticHash of the analyzed plan). ``df.rdd.getNumPartitions()`` costs
-    ~60 ms of driver time per call (full physical planning + RDD
-    conversion) and fan_out callers re-pay it on every fresh build; the
-    count is a pure function of the immutable fixture layout + session
-    parallelism, so the memo has the same staleness contract as the
-    reader's relation cache and _PLAN_SIZE_CACHE (OPTIMIZATION r12)."""
+    """Planned partition count of ``df``, memoized per semanticHash of the
+    analyzed plan. ``df.rdd.getNumPartitions()`` costs ~60 ms of driver time
+    per call (full physical planning + RDD conversion) and fan_out callers
+    re-pay it on every fresh build; the count is a pure function of the
+    immutable fixture layout + session parallelism (OPTIMIZATION r12)."""
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df.semanticHash(),
-        )
+        key = df.semanticHash()
     except Exception:
         return df.rdd.getNumPartitions()
-    n = _PARTITION_COUNT_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _PARTITION_COUNT_CACHE[key] = n
-    return n
+    return memo.get("partition_counts", key, lambda: df.rdd.getNumPartitions())
 
 
 def read_csv_normalized(
@@ -264,35 +234,32 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     overridden = _layout.resolve(spark, sf_dir, name)
     if overridden is not None:
         return overridden
-    # Catalog-style relation cache: re-resolving the same path re-lists files
+    # Catalog-style relation memo: re-resolving the same path re-lists files
     # and re-reads parquet footers on the DRIVER every time (~50-150 ms per
     # table), which a real engine amortizes in its catalog (Spark's own
-    # spark.table does the same via CachedDataSourceTable). Keyed by
-    # applicationId so a restarted session never sees relations bound to a
-    # dead SparkContext. DataFrames are immutable, so sharing one base
-    # relation across queries is safe. Data itself is NOT cached.
-    key = (spark.sparkContext.applicationId, path)
-    cached = _RELATION_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        dtypes = dict(df.dtypes)
-        if dtypes.get("ts") == "bigint":
-            # Old fixtures: TIMESTAMP(NANOS) read as epoch-ns long; rebuild at
-            # µs precision with integer division (matches DuckDB's ns→µs cut).
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        # Parquet timestamp[us] without isAdjustedToUTC reads as TIMESTAMP_NTZ
-        # in Spark 4, which unix_micros()/window() reject. The session TZ is
-        # pinned UTC (above), so NTZ → TIMESTAMP is the identity wall-clock
-        # mapping and the DuckDB oracle (naive timestamps) still agrees.
-        for c, t in dtypes.items():
-            if t == "timestamp_ntz":
-                df = df.withColumn(c, F.col(c).cast("timestamp"))
-    else:
-        df = spark.read.parquet(path)
-    _RELATION_CACHE[key] = df
+    # spark.table does the same via CachedDataSourceTable). DataFrames are
+    # immutable, so sharing one base relation across queries is safe. Data
+    # itself is NOT cached.
+    return memo.get("relations", path, lambda: _resolve_relation(spark, path, name))
+
+
+def _resolve_relation(spark: SparkSession, path: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    dtypes = dict(df.dtypes)
+    if dtypes.get("ts") == "bigint":
+        # Old fixtures: TIMESTAMP(NANOS) read as epoch-ns long; rebuild at
+        # µs precision with integer division (matches DuckDB's ns→µs cut).
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # Parquet timestamp[us] without isAdjustedToUTC reads as TIMESTAMP_NTZ
+    # in Spark 4, which unix_micros()/window() reject. The session TZ is
+    # pinned UTC (read_table), so NTZ → TIMESTAMP is the identity wall-clock
+    # mapping and the DuckDB oracle (naive timestamps) still agrees.
+    for c, t in dtypes.items():
+        if t == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
 

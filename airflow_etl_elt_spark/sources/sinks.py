@@ -26,6 +26,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import memo
 
 def write_partitioned(
     df: DataFrame,
@@ -46,10 +47,8 @@ def write_partitioned(
 
 def replace_table(df: DataFrame, path: str) -> None:
     """Drop-and-recreate semantics (`if_exists="replace"`, etl_elt_wine.py:243)."""
-    from airflow_etl_elt_spark.sources.readers import invalidate_relation
-
     df.write.mode("overwrite").parquet(path)
-    invalidate_relation(path)
+    memo.invalidate_path(path)
 
 
 def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -118,9 +117,7 @@ def insert_ignore_by_name(
         n = new_rows.count()
         if n:
             new_rows.write.mode("append").parquet(path)
-            from airflow_etl_elt_spark.sources.readers import invalidate_relation
-
-            invalidate_relation(path)  # cached listings don't see new files
+            memo.invalidate_path(path)  # memoized listings don't see new files
     finally:
         new_rows.unpersist()
     return n
@@ -190,9 +187,7 @@ def upsert_by_key(
     merged.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.replace(tmp, path)
-    from airflow_etl_elt_spark.sources.readers import invalidate_relation
-
-    invalidate_relation(path)
+    memo.invalidate_path(path)
     return n_updated, n_batch - n_updated
 
 

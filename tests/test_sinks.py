@@ -152,21 +152,26 @@ def test_upsert_missing_column_rejected(spark, tmp_path):
 
 
 def test_rewriting_sinks_invalidate_relation_cache(spark, tmp_path):
-    """A cached read_table relation pins the old file listing; replace/upsert/
-    append sinks must invalidate it or post-write reads see stale data."""
-    from airflow_etl_elt_spark.sources.readers import read_table
+    """A cached read_table relation pins the old file listing, and cached
+    footer stats describe the old files; replace/upsert/append sinks must
+    invalidate both or post-write reads and size gates see stale data."""
+    from airflow_etl_elt_spark.sources.readers import read_table, table_column_stats
     from airflow_etl_elt_spark.sources.sinks import replace_table, upsert_by_key
 
+    sf = str(tmp_path)
     path = str(tmp_path / "t.parquet")
     _batch(spark, [(1, "a")]).write.parquet(path)
-    assert read_table(spark, str(tmp_path), "t").count() == 1  # now cached
+    assert read_table(spark, sf, "t").count() == 1  # now cached
+    assert table_column_stats(sf, "t", "id") == (1.0, 1.0, 1)  # now cached
 
     upsert_by_key(spark, _batch(spark, [(1, "x"), (2, "b")]), path)
-    assert read_table(spark, str(tmp_path), "t").count() == 2
+    assert read_table(spark, sf, "t").count() == 2
+    assert table_column_stats(sf, "t", "id") == (1.0, 2.0, 2)
 
     replace_table(_batch(spark, [(9, "z")]), path)
-    got = read_table(spark, str(tmp_path), "t").collect()
+    got = read_table(spark, sf, "t").collect()
     assert [(r["id"], r["v"]) for r in got] == [(9, "z")]
+    assert table_column_stats(sf, "t", "id") == (9.0, 9.0, 1)
 
     assert insert_ignore_by_name(spark, _batch(spark, [(9, "z"), (10, "w")]), path) == 1
     assert read_table(spark, str(tmp_path), "t").count() == 2
