@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators._cache import rotate_persist
+from airflow_etl_elt_spark.operators.relational import quote_ident
 
 # Inputs whose Catalyst size estimate is below this buffer the whole group in
 # one exact-median aggregation state (F.median) — a single scan + shuffle.
@@ -186,15 +187,6 @@ def _assert_agg_names_disjoint(where: str, group_cols, sums, *extra_maps):
     internal.update(f"__c_{n}" for n in all_names)
     seen = set(group_cols)
     for name in all_names:
-        # The SQL-text fast paths interpolate output names inside backtick
-        # quoting (ADVICE r12): a name containing a backtick would escape
-        # the quoting and produce an opaque downstream parse error — reject
-        # it here with the operator named instead.
-        if "`" in name:
-            raise ValueError(
-                f"{where}: output name {name!r} contains a backtick, which "
-                "the SQL-text build path cannot quote"
-            )
         if name in internal:
             raise ValueError(
                 f"{where}: output name {name!r} collides with an internal "
@@ -280,9 +272,10 @@ def two_tier_dec_agg(
     ):
         return _two_tier_dec_agg_sql(df, group_cols, sums, counts, count_star)
     grids = {n: _grid_long(c) for n, c in sums.items()}
+    gcols = [quote_ident(g) for g in group_cols]
     t1 = (
         df.withColumn("__pid", F.spark_partition_id())
-        .groupBy(*group_cols, "__pid")
+        .groupBy(*gcols, "__pid")
         .agg(
             *[F.sum(g).alias(f"__s_{n}") for n, g in grids.items()],
             *[F.max(F.abs(g)).alias(f"__m_{n}") for n, g in grids.items()],
@@ -293,29 +286,29 @@ def two_tier_dec_agg(
             ],
         )
     )
-    maxes = [F.coalesce(F.col(f"__m_{n}"), F.lit(0)) for n in grids]
+    maxes = [F.coalesce(F.col(quote_ident(f"__m_{n}")), F.lit(0)) for n in grids]
     biggest = maxes[0] if len(maxes) == 1 else F.greatest(*maxes)
     ok = (F.col("__cstar").cast("double") * biggest.cast("double")) < F.lit(
         _LONG_SUM_GUARD
     )
     checked = t1.select(
-        *group_cols,
+        *gcols,
         *[
-            _guard_or_raise(ok, F.col(f"__s_{n}"), "two_tier_dec_agg")
+            _guard_or_raise(ok, F.col(quote_ident(f"__s_{n}")), "two_tier_dec_agg")
             .cast("decimal(20,0)")
             .alias(f"__s_{n}")
             for n in grids
         ],
         F.col("__cstar"),
-        *[F.col(f"__c_{n}") for n in counts],
+        *[F.col(quote_ident(f"__c_{n}")) for n in counts],
     )
-    return checked.groupBy(*group_cols).agg(
+    return checked.groupBy(*gcols).agg(
         *[
-            (F.sum(f"__s_{n}").cast("double") / F.lit(1e6)).alias(n)
+            (F.sum(quote_ident(f"__s_{n}")).cast("double") / F.lit(1e6)).alias(n)
             for n in grids
         ],
         *([F.sum("__cstar").alias(count_star)] if count_star else []),
-        *[F.sum(f"__c_{n}").alias(n) for n in counts],
+        *[F.sum(quote_ident(f"__c_{n}")).alias(n) for n in counts],
     )
 
 
@@ -330,20 +323,24 @@ def _two_tier_dec_agg_sql(
     SQL expression text; a bare column name is the degenerate case). Parses
     to the same Catalyst trees as the Column form — same plan, same values,
     same guard semantics — at a fraction of the driver-side build cost."""
-    gcols = [f"`{g}`" for g in group_cols]
-    aggs = [F.expr(f"sum({_grid_long_sql(s)}) AS `__s_{n}`") for n, s in sums.items()]
+    gcols = [quote_ident(g) for g in group_cols]
+    # Quoted identifiers of the output names and their staging aliases.
+    out = {n: quote_ident(n) for n in (*sums, *counts)}
+    s_ = {n: quote_ident(f"__s_{n}") for n in sums}
+    m_ = {n: quote_ident(f"__m_{n}") for n in sums}
+    c_ = {n: quote_ident(f"__c_{n}") for n in counts}
+    aggs = [F.expr(f"sum({_grid_long_sql(s)}) AS {s_[n]}") for n, s in sums.items()]
     aggs += [
-        F.expr(f"max(abs({_grid_long_sql(s)})) AS `__m_{n}`")
-        for n, s in sums.items()
+        F.expr(f"max(abs({_grid_long_sql(s)})) AS {m_[n]}") for n, s in sums.items()
     ]
     aggs.append(F.expr("count(1) AS __cstar"))
-    aggs += [F.expr(f"count({c}) AS `__c_{n}`") for n, c in counts.items()]
+    aggs += [F.expr(f"count({c}) AS {c_[n]}") for n, c in counts.items()]
     t1 = (
         df.selectExpr("*", "spark_partition_id() AS __pid")
-        .groupBy(*group_cols, "__pid")
+        .groupBy(*gcols, "__pid")
         .agg(*aggs)
     )
-    maxes = ", ".join(f"coalesce(`__m_{n}`, 0)" for n in sums)
+    maxes = ", ".join(f"coalesce({m_[n]}, 0)" for n in sums)
     biggest = maxes if len(sums) == 1 else f"greatest({maxes})"
     ok = (
         f"(CAST(__cstar AS DOUBLE) * CAST({biggest} AS DOUBLE))"
@@ -362,20 +359,17 @@ def _two_tier_dec_agg_sql(
     checked = staged.selectExpr(
         *gcols,
         *[
-            f"CAST(CASE WHEN __ok THEN `__s_{n}` ELSE raise_error('{guard_msg}')"
-            f" END AS DECIMAL(20,0)) AS `__s_{n}`"
+            f"CAST(CASE WHEN __ok THEN {s_[n]} ELSE raise_error('{guard_msg}')"
+            f" END AS DECIMAL(20,0)) AS {s_[n]}"
             for n in sums
         ],
         "__cstar",
-        *[f"`__c_{n}`" for n in counts],
+        *c_.values(),
     )
-    return checked.groupBy(*group_cols).agg(
-        *[
-            F.expr(f"(CAST(sum(`__s_{n}`) AS DOUBLE) / 1e6) AS `{n}`")
-            for n in sums
-        ],
-        *([F.expr(f"sum(__cstar) AS `{count_star}`")] if count_star else []),
-        *[F.expr(f"sum(`__c_{n}`) AS `{n}`") for n in counts],
+    return checked.groupBy(*gcols).agg(
+        *[F.expr(f"(CAST(sum({s_[n]}) AS DOUBLE) / 1e6) AS {out[n]}") for n in sums],
+        *([F.expr(f"sum(__cstar) AS {quote_ident(count_star)}")] if count_star else []),
+        *[F.expr(f"sum({c_[n]}) AS {out[n]}") for n in counts],
     )
 
 
@@ -413,20 +407,20 @@ def guarded_long_sum_agg(
     # Fast build path (OPTIMIZATION r12) — see _two_tier_dec_agg_sql: SQL
     # text parses to the identical trees with ~10x fewer py4j round trips.
     # Column-valued extras ride along unchanged in either path.
+    gcols = [quote_ident(g) for g in group_cols]
     if all(isinstance(c, str) for c in sums.values()):
-        t = df.groupBy(*group_cols).agg(
+        s_ = {n: quote_ident(f"__s_{n}") for n in sums}
+        m_ = {n: quote_ident(f"__m_{n}") for n in sums}
+        t = df.groupBy(*gcols).agg(
+            *[F.expr(f"sum({_grid_long_sql(s)}) AS {s_[n]}") for n, s in sums.items()],
             *[
-                F.expr(f"sum({_grid_long_sql(s)}) AS `__s_{n}`")
-                for n, s in sums.items()
-            ],
-            *[
-                F.expr(f"max(abs({_grid_long_sql(s)})) AS `__m_{n}`")
+                F.expr(f"max(abs({_grid_long_sql(s)})) AS {m_[n]}")
                 for n, s in sums.items()
             ],
             F.expr("count(1) AS __cstar"),
             *[e.alias(n) for n, e in extras.items()],
         )
-        maxes_sql = ", ".join(f"coalesce(`__m_{n}`, 0)" for n in sums)
+        maxes_sql = ", ".join(f"coalesce({m_[n]}, 0)" for n in sums)
         biggest_sql = maxes_sql if len(sums) == 1 else f"greatest({maxes_sql})"
         ok_sql = (
             f"(CAST(__cstar AS DOUBLE) * CAST({biggest_sql} AS DOUBLE))"
@@ -437,37 +431,39 @@ def guarded_long_sum_agg(
             "use dec_sum (decimal per-addend) for this input scale"
         )
         return t.selectExpr(
-            *[f"`{g}`" for g in group_cols],
+            *gcols,
             *[
-                f"(CAST(CASE WHEN {ok_sql} THEN `__s_{n}` ELSE "
-                f"raise_error('{guard_msg}') END AS DOUBLE) / 1e6) AS `{n}`"
+                f"(CAST(CASE WHEN {ok_sql} THEN {s_[n]} ELSE "
+                f"raise_error('{guard_msg}') END AS DOUBLE) / 1e6) AS {quote_ident(n)}"
                 for n in sums
             ],
-            *[f"`{n}`" for n in extras],
+            *[quote_ident(n) for n in extras],
         )
     grids = {n: _grid_long(c) for n, c in sums.items()}
-    t = df.groupBy(*group_cols).agg(
+    t = df.groupBy(*gcols).agg(
         *[F.sum(g).alias(f"__s_{n}") for n, g in grids.items()],
         *[F.max(F.abs(g)).alias(f"__m_{n}") for n, g in grids.items()],
         F.count(F.lit(1)).alias("__cstar"),
         *[e.alias(n) for n, e in extras.items()],
     )
-    maxes = [F.coalesce(F.col(f"__m_{n}"), F.lit(0)) for n in grids]
+    maxes = [F.coalesce(F.col(quote_ident(f"__m_{n}")), F.lit(0)) for n in grids]
     biggest = maxes[0] if len(maxes) == 1 else F.greatest(*maxes)
     ok = (F.col("__cstar").cast("double") * biggest.cast("double")) < F.lit(
         _LONG_SUM_GUARD
     )
     return t.select(
-        *group_cols,
+        *gcols,
         *[
             (
-                _guard_or_raise(ok, F.col(f"__s_{n}"), "guarded_long_sum_agg")
+                _guard_or_raise(
+                    ok, F.col(quote_ident(f"__s_{n}")), "guarded_long_sum_agg"
+                )
                 .cast("double")
                 / F.lit(1e6)
             ).alias(n)
             for n in grids
         ],
-        *[F.col(n) for n in extras],
+        *[F.col(quote_ident(n)) for n in extras],
     )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators._cache import rotate_persist
+from airflow_etl_elt_spark.operators.relational import quote_ident
 from airflow_etl_elt_spark.operators.text import (
     ASCII_LOWER_TABLE,
     WS_RE,
@@ -155,6 +156,8 @@ def decontaminate(
     + distinct, and survivors via anti-join. No window, no all-pairs,
     O(corpus grams) end to end.
     """
+    qid = quote_ident(id_col)
+
     def gram_digests(df: DataFrame) -> DataFrame:
         # Explode the INDEX sequence, not the gram array: if the generator's
         # input is the materialized gram array, InferFiltersFromGenerate
@@ -170,15 +173,15 @@ def decontaminate(
         # physical plan identical, plans/r13 dumps). ws_tokens stays a
         # Column so the WS_RE regex literal is never re-escaped by hand.
         tokd = df.select(
-            F.col(id_col), ws_tokens(F.col(text_col)).alias("__toks")
+            F.col(qid), ws_tokens(F.col(quote_ident(text_col))).alias("__toks")
         ).filter(F.size("__toks") >= n)
         idx = tokd.selectExpr(
-            f"`{id_col}`",
+            qid,
             "__toks",
             f"explode(sequence(1, size(__toks) - {int(n) - 1})) AS __i",
         )
         return idx.selectExpr(
-            f"`{id_col}`",
+            qid,
             f"xxhash64(array_join(slice(__toks, __i, {int(n)}), ' ')) AS __digest",
         )
 
@@ -186,7 +189,7 @@ def decontaminate(
     contaminated = (
         gram_digests(corpus)
         .join(eval_grams, "__digest", "left_semi")
-        .select(id_col)
+        .select(qid)
         .distinct()
     )
     return corpus.join(contaminated, id_col, "left_anti")

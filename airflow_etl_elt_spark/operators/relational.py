@@ -23,6 +23,14 @@ from pyspark.sql import functions as F
 from airflow_etl_elt_spark.operators._cache import rotate_persist
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier, embedded backticks
+    doubled — the one way caller column names enter SQL text and the
+    DataFrame API's string column references (``selectExpr``, ``orderBy``,
+    ``groupBy``, ``F.col``). Join ``on=`` lists take raw names."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def project(df: DataFrame, *cols: str) -> DataFrame:
     """Narrow projection (etl_elt_wine.py:270). Column pruning reaches the scan."""
     return df.select(*cols)

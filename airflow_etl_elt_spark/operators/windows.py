@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark.operators.relational import quote_ident
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -47,6 +49,7 @@ def top_k_per_group(
     from airflow_etl_elt_spark.operators.relational import fuse_small_input
 
     fused = fuse_small_input(df)
+    g, o, t = (quote_ident(c) for c in (group_col, order_col, tiebreak_col))
     # SQL-text build path (OPTIMIZATION r13, same contract as
     # _two_tier_dec_agg_sql): the window + rank expression is one parsed
     # string instead of ~60 nested py4j Column calls — parses to the
@@ -54,12 +57,12 @@ def top_k_per_group(
     # F.desc == SQL DESC NULLS LAST).
     ranked = fused.selectExpr(
         "*",
-        f"CAST(row_number() OVER (PARTITION BY `{group_col}` ORDER BY "
-        f"`{order_col}` DESC, `{tiebreak_col}`) AS BIGINT) AS rn",
+        f"CAST(row_number() OVER (PARTITION BY {g} ORDER BY {o} DESC, {t})"
+        " AS BIGINT) AS rn",
     ).filter(f"rn <= {int(k)}")
     if fused is df:
-        return ranked.orderBy(group_col, "rn")
-    return ranked.sortWithinPartitions(group_col, "rn")
+        return ranked.orderBy(g, "rn")
+    return ranked.sortWithinPartitions(g, "rn")
 
 
 # Above this optimized-plan size estimate the full-ranking suite considers
@@ -146,7 +149,8 @@ def ranking_suite(
     from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
     from airflow_etl_elt_spark.operators.relational import fuse_small_input
 
-    src = df.select(group_col, order_col, tiebreak_col)
+    g, o, t = (quote_ident(c) for c in (group_col, order_col, tiebreak_col))
+    src = df.select(g, o, t)
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     # Gate, best signal first. With ``total_rows`` (parquet footer stats —
@@ -161,7 +165,7 @@ def ranking_suite(
         composed = _plan_size_bytes(src) >= RANK_COMPOSE_BYTES
     if composed:
         n_groups = src.agg(
-            F.approx_count_distinct(group_col).alias("g")
+            F.approx_count_distinct(g).alias("g")
         ).first()["g"]
         composed = n_groups < 4 * par
         if composed and total_rows is not None:
@@ -170,13 +174,10 @@ def ranking_suite(
         # SQL-text build path (OPTIMIZATION r13): one parsed string per
         # output instead of nested Column ops — identical physical plan
         # (F.desc == DESC NULLS LAST; plans/r13 before/after dumps).
-        w = (
-            f"PARTITION BY `{group_col}` ORDER BY `{order_col}` DESC, "
-            f"`{tiebreak_col}`"
-        )
+        w = f"PARTITION BY {g} ORDER BY {o} DESC, {t}"
         return fuse_small_input(src).selectExpr(
-            f"`{tiebreak_col}`",
-            f"`{group_col}`",
+            t,
+            g,
             f"CAST(dense_rank() OVER ({w}) AS BIGINT) AS drank",
             f"percent_rank() OVER ({w}) AS prank",
             f"CAST(ntile({int(ntile_n)}) OVER ({w}) AS BIGINT) AS quartile",
@@ -185,7 +186,7 @@ def ranking_suite(
 
     n_buckets = max(par, 2)
     qs = [i / n_buckets for i in range(1, n_buckets)]
-    v = F.col(order_col).cast("double")
+    v = F.col(o).cast("double")
     # Boundary precision only affects bucket BALANCE, never rank
     # correctness (bucket order refines value order at any boundaries), so
     # the sketch runs at a COARSE 1/(2·buckets) relative error: worst case
@@ -195,7 +196,7 @@ def ranking_suite(
     err = 1.0 / max(2 * n_buckets, 16)
     bnds = sorted(
         set(
-            src.filter(F.col(order_col).isNotNull())
+            src.filter(F.col(o).isNotNull())
             .select(v.alias("__v"))
             .stat.approxQuantile("__v", qs, err)
         )
@@ -209,24 +210,22 @@ def ranking_suite(
     bucket = F.when(v.isNull(), F.lit(len(bnds) + 1)).otherwise(bucket)
     bucketed = src.withColumn("__bkt", bucket)
     w_off = (
-        Window.partitionBy(group_col)
+        Window.partitionBy(g)
         .orderBy("__bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w_tot = Window.partitionBy(group_col)
+    w_tot = Window.partitionBy(g)
     offsets = (
-        bucketed.groupBy(group_col, "__bkt")
+        bucketed.groupBy(g, "__bkt")
         .agg(F.count(F.lit(1)).alias("__cnt"))
         .select(
-            group_col,
+            g,
             "__bkt",
             F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
             F.sum("__cnt").over(w_tot).alias("__n"),
         )
     )
-    w_local = Window.partitionBy(group_col, "__bkt").orderBy(
-        F.desc(order_col), F.col(tiebreak_col)
-    )
+    w_local = Window.partitionBy(g, "__bkt").orderBy(F.desc(o), F.col(t))
     ranked = (
         bucketed.join(F.broadcast(offsets), [group_col, "__bkt"])
         .withColumn(
@@ -240,8 +239,8 @@ def ranking_suite(
         F.expr("(__rn - 1) div (__q + 1) + 1"),
     ).otherwise(F.expr("__r + (__rn - __r * (__q + 1) - 1) div __q + 1"))
     return ranked.select(
-        tiebreak_col,
-        group_col,
+        t,
+        g,
         F.col("__rn").alias("drank"),
         F.when(F.col("__n") == 1, F.lit(0.0))
         .otherwise((F.col("__rn") - 1) / (F.col("__n") - 1))

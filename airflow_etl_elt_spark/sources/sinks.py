@@ -1,4 +1,4 @@
-"""Sinks: partitioned parquet writes, replace-table, idempotent keyed append.
+"""Sinks: partitioned parquet writes, replace-table, keyed append and upsert.
 
 Reference parity:
 - ``INSERT OR IGNORE INTO wine_data BY NAME SELECT *`` — skip rows whose PK
@@ -9,6 +9,10 @@ Reference parity:
   (reference ``dags/etl_elt_wine.py:242-243``) → ``mode("overwrite")``.
 - Dataset outlets (``dags/etl_elt_wine.py:195,223``) → commit-marker files,
   consumed by plans.pipeline's dataset-trigger gate.
+
+One keyed-merge core (``_one_per_key``, ``_by_name``, ``_merged``) serves
+``insert_ignore_by_name``, ``upsert_by_key`` and ``sources.txn.TxnTable.merge``;
+``upsert_by_key`` swaps its rewrite into a plain parquet directory crash-safely.
 
 Scale notes: the anti-join in ``insert_ignore_by_name`` shuffles both sides on
 the key. At 100 TB the "existing" side should be key-bucketed at rest so the
@@ -21,9 +25,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_etl_elt_spark import memo
@@ -74,6 +80,44 @@ def write_csv(
     df.write.mode(mode).options(sep=sep, header=str(header).lower()).csv(path)
 
 
+def _one_per_key(batch: DataFrame, key: str, order_col: str | None = None) -> DataFrame:
+    """The batch with one row per ``key``: max ``order_col`` wins (a recency
+    column); without one, ``dropDuplicates`` keeps an arbitrary-but-
+    deterministic row (reference PK semantics only require at-most-once)."""
+    if order_col is None:
+        return batch.dropDuplicates([key])
+    return batch.groupBy(key).agg(
+        *[F.max_by(c, order_col).alias(c) for c in batch.columns if c != key]
+    ).select(*batch.columns)
+
+
+def _by_name(batch: DataFrame, columns: list[str]) -> DataFrame:
+    """BY NAME alignment: the batch projected to the target's column order;
+    a target column the batch lacks raises."""
+    missing = set(columns) - set(batch.columns)
+    if missing:
+        raise ValueError(f"batch missing target columns: {sorted(missing)}")
+    return batch.select(*columns)
+
+
+def _merged(
+    existing: DataFrame, batch: DataFrame, key: str, obs: Observation | None = None
+) -> DataFrame:
+    """``MERGE INTO`` as one rewrite: the stored rows whose key the (one row
+    per key) batch does not carry, plus the batch, whose row count the
+    rewrite records in ``obs`` when one is given."""
+    rows = batch if obs is None else batch.observe(obs, F.count(F.lit(1)).alias("n"))
+    return existing.join(batch.select(key), key, "left_anti").unionByName(rows)
+
+
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df``; the row count is observed by the
+    write itself instead of re-running the lineage in a second job."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return obs.get["n"]
+
+
 def insert_ignore_by_name(
     spark: SparkSession,
     batch: DataFrame,
@@ -88,25 +132,16 @@ def insert_ignore_by_name(
       1. rows whose ``key`` already exists in the target are skipped,
       2. columns are matched by NAME, not position (``unionByName`` contract:
          we project the batch to the target's column order by name),
-      3. duplicate keys *within the batch* keep one arbitrary-but-deterministic
-         row (min over a total order is not needed for parity; reference PK
-         semantics only require at-most-once per key).
+      3. duplicate keys *within the batch* keep one row (``_one_per_key``).
 
     Returns the number of rows actually appended.
     """
     if not os.path.exists(path):
-        deduped = batch.dropDuplicates([key])
-        deduped.write.mode("overwrite").parquet(path)
-        return deduped.count()
+        return _write_counted(_one_per_key(batch, key), path)
 
     existing = spark.read.parquet(path)
-    # Name-matched projection (BY NAME): reorder batch cols to target order.
-    missing = set(existing.columns) - set(batch.columns)
-    if missing:
-        raise ValueError(f"batch missing target columns: {sorted(missing)}")
-    aligned = batch.select(*existing.columns)
     # Only the key column of the existing table is scanned (column pruning).
-    new_rows = aligned.dropDuplicates([key]).join(
+    new_rows = _one_per_key(_by_name(batch, existing.columns), key).join(
         existing.select(key), on=key, how="left_anti"
     )
     # Parquet append is not atomic w.r.t. concurrent readers; the reference's
@@ -121,6 +156,17 @@ def insert_ignore_by_name(
     finally:
         new_rows.unpersist()
     return n
+
+
+def _recover_upsert(path: str) -> None:
+    """Undo a crashed ``upsert_by_key`` swap: put a set-aside table back
+    when ``path`` is missing, and delete every other leftover directory."""
+    parent, name = os.path.split(os.path.abspath(path))
+    for n in sorted(os.listdir(parent)) if os.path.isdir(parent) else []:
+        if n.startswith(f"{name}.__upsert_old_") and not os.path.exists(path):
+            os.replace(os.path.join(parent, n), path)
+        elif n.startswith(f"{name}.__upsert_"):
+            shutil.rmtree(os.path.join(parent, n))
 
 
 def upsert_by_key(
@@ -141,9 +187,11 @@ def upsert_by_key(
       ``order_col`` wins (a recency column, e.g. an update timestamp);
       without one, ``dropDuplicates`` keeps one arbitrary-but-deterministic
       row.
-    - The rewrite goes to a temp dir then swaps in (a reader never observes
-      a half-written table; the swap itself mirrors insert_ignore's
-      single-writer contract).
+    - Crash-safe swap: the rewrite goes to a temp dir, the old table is
+      renamed aside, the temp dir renamed into place, and only then is the
+      old table deleted. A crash at any step leaves the old or the new
+      table; the next call restores a set-aside table whose swap did not
+      finish and removes leftover ``<path>.__upsert_*`` directories.
 
     Scale: an unpartitioned upsert rewrites the whole table — correct but
     O(table). At 100 TB the target must be PARTITIONED so only partitions
@@ -152,43 +200,30 @@ def upsert_by_key(
     table lives in a format with transactional merge (Delta/Iceberg) where
     this function's join shape maps 1:1 onto MERGE INTO.
 
-    Concurrency: this function mirrors the reference's single-writer
-    contract. For CONCURRENT writers use ``sources.txn.TxnTable.merge`` —
-    the same join shape behind a version log with atomic commits and
-    optimistic retry (snapshot isolation for readers, lost races surface
-    as ConcurrentWriteError, never as interleaving).
+    Concurrency: single writer, as in the reference, and NOT reader-atomic:
+    between the two renames a concurrent reader can find ``path`` missing.
+    Concurrent readers or writers belong on ``sources.txn.TxnTable`` — the
+    same merge core behind a version log with atomic commits and retry.
     """
-    import shutil
-    import uuid
-
-    if order_col is not None:
-        one_per_key = batch.groupBy(key).agg(
-            *[F.max_by(c, order_col).alias(c) for c in batch.columns if c != key]
-        ).select(*batch.columns)
-    else:
-        one_per_key = batch.dropDuplicates([key])
-
+    _recover_upsert(path)
+    one_per_key = _one_per_key(batch, key, order_col)
     if not os.path.exists(path):
-        one_per_key.write.mode("overwrite").parquet(path)
-        return 0, one_per_key.count()
+        return 0, _write_counted(one_per_key, path)
 
     existing = spark.read.parquet(path)
-    missing = set(existing.columns) - set(batch.columns)
-    if missing:
-        raise ValueError(f"batch missing target columns: {sorted(missing)}")
-    aligned = one_per_key.select(*existing.columns)
-
-    n_batch = aligned.count()
+    aligned = _by_name(one_per_key, existing.columns)
     n_updated = aligned.join(existing.select(key), on=key, how="left_semi").count()
-    kept = existing.join(aligned.select(key), on=key, how="left_anti")
-    merged = kept.unionByName(aligned)
+    obs = Observation()
+    merged = _merged(existing, aligned, key, obs)
 
-    tmp = f"{path}.__upsert_{uuid.uuid4().hex[:8]}"
+    tag = uuid.uuid4().hex[:8]
+    tmp, old = f"{path}.__upsert_tmp_{tag}", f"{path}.__upsert_old_{tag}"
     merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
+    os.replace(path, old)
     os.replace(tmp, path)
+    shutil.rmtree(old)
     memo.invalidate_path(path)
-    return n_updated, n_batch - n_updated
+    return n_updated, obs.get["n"] - n_updated
 
 
 def write_bucketed(

@@ -14,10 +14,12 @@ from first principles:
   writes NEW directories, never touches existing ones.
 - Commit = ``os.open(manifest, O_CREAT | O_EXCL)``: the filesystem's
   atomic create-exclusive is the whole concurrency control. Two writers
-  racing for version N: exactly one create succeeds; the loser raises
+  racing for version N: exactly one create succeeds; the loser gets
   :class:`ConcurrentWriteError` and retries against the fresh snapshot —
   classic optimistic concurrency, same primitive ``ml/tracking.py`` uses
-  for registry versions.
+  for registry versions. Every write (create/append/replace/merge/compact)
+  runs the one loop ``_write_version``: read base → write → commit
+  ``base + 1`` → retry; only merge and compact recompute their data.
 
 Guarantees (and their limits, stated honestly):
 - **Snapshot isolation for readers**: a reader resolves the latest
@@ -26,7 +28,8 @@ Guarantees (and their limits, stated honestly):
   A DataFrame held across commits keeps reading its own snapshot (files
   are never deleted except by ``vacuum``).
 - **Atomic, serializable commits**: versions are a single total order; a
-  lost race surfaces as an exception, never as silent interleaving.
+  lost race is retried on the fresh snapshot (an exception once the
+  retries run out, or at once for ``create``), never silent interleaving.
 - **No cross-table transactions, no protocol for distributed filesystems
   without atomic create-exclusive** (object stores need a DynamoDB-style
   lock service — exactly the documented Delta-on-S3 caveat).
@@ -45,6 +48,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from airflow_etl_elt_spark.sources.sinks import _merged, _one_per_key
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -97,6 +102,40 @@ class TxnTable:
         df.write.mode("error").parquet(os.path.join(self.data_dir, rel))
         return rel
 
+    def _write_version(
+        self, op: str, data, keep_base: bool = False, max_retries: int = 3
+    ) -> int:
+        """The commit loop of every write: read the base version, write one
+        new data directory, commit ``base + 1`` listing it (after the base's
+        directories when ``keep_base``), and on a lost race re-read the base
+        and commit again. ``data`` is the frame to write, or, when its rows
+        depend on the snapshot, a function ``(base, manifest) -> frame``
+        that is re-run against each fresh base (returning None commits
+        nothing and returns the base). A frame is written once and a retry
+        re-commits its directory; a recomputed attempt that loses leaves an
+        orphan directory for ``vacuum``. ``create`` always commits version 0."""
+        rel = None
+        for _ in range(max_retries):
+            base = -1 if op == "create" else self.latest_version()
+            m = self._read_manifest(base) if base >= 0 else {}
+            if rel is None or callable(data):
+                df = data(base, m) if callable(data) else data
+                if df is None:
+                    return base
+                rel = self._write_data(df)
+                rel_stats = self._dir_stats(df.sparkSession, rel)
+            dirs = (m["dirs"] if keep_base else []) + [rel]
+            schema = m.get("schema") or df.schema.simpleString()
+            stats = {**(m.get("stats", {}) if keep_base else {}), rel: rel_stats}
+            try:
+                self._commit(
+                    base + 1, {"op": op, "dirs": dirs, "schema": schema, "stats": stats}
+                )
+                return base + 1
+            except ConcurrentWriteError as exc:
+                last_exc = exc
+        raise last_exc
+
     # ---- table operations -------------------------------------------------
 
     def snapshot(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -109,54 +148,17 @@ class TxnTable:
 
     def create(self, df: DataFrame) -> int:
         """Commit version 0. Fails if the table already exists."""
-        rel = self._write_data(df)
-        self._commit(
-            0,
-            {
-                "op": "create",
-                "dirs": [rel],
-                "schema": df.schema.simpleString(),
-                "stats": {rel: self._dir_stats(df.sparkSession, rel)},
-            },
-        )
-        return 0
+        return self._write_version("create", df, max_retries=1)
 
     def append(self, df: DataFrame) -> int:
         """Add rows: new data directory + manifest extending the previous
-        version's directory list. O(batch), never rewrites."""
-        base = self.latest_version()
-        m = self._read_manifest(base)
-        rel = self._write_data(df)
-        v = base + 1
-        stats = dict(m.get("stats", {}))
-        stats[rel] = self._dir_stats(df.sparkSession, rel)
-        self._commit(
-            v,
-            {
-                "op": "append",
-                "dirs": m["dirs"] + [rel],
-                "schema": m["schema"],
-                "stats": stats,
-            },
-        )
-        return v
+        version's directory list. O(batch), never rewrites; a lost race
+        re-commits the same directory on the fresh snapshot."""
+        return self._write_version("append", df, keep_base=True)
 
     def replace(self, df: DataFrame) -> int:
         """Atomically replace the table contents."""
-        base = self.latest_version()
-        m = self._read_manifest(base)
-        rel = self._write_data(df)
-        v = base + 1
-        self._commit(
-            v,
-            {
-                "op": "replace",
-                "dirs": [rel],
-                "schema": m["schema"],
-                "stats": {rel: self._dir_stats(df.sparkSession, rel)},
-            },
-        )
-        return v
+        return self._write_version("replace", df)
 
     def merge(
         self,
@@ -168,45 +170,18 @@ class TxnTable:
     ) -> int:
         """``MERGE INTO`` with optimistic concurrency: WHEN MATCHED the
         batch row replaces the stored row, WHEN NOT MATCHED it inserts
-        (duplicate keys within the batch resolve by max ``order_col``). The
-        merged result is computed against the snapshot read at the START of
-        the attempt; if another writer commits first, the attempt discards
-        its directory reference and recomputes against the new snapshot —
-        no torn state is ever visible because only the manifest create is a
-        commit."""
-        if order_col is not None:
-            batch = batch.groupBy(key).agg(
-                *[
-                    F.max_by(c, order_col).alias(c)
-                    for c in batch.columns
-                    if c != key
-                ]
-            ).select(*batch.columns)
-        else:
-            batch = batch.dropDuplicates([key])
-        last_exc: Exception | None = None
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self._read_manifest(base)
-            current = self.snapshot(spark, base)
-            merged = current.join(batch.select(key), key, "left_anti").unionByName(
-                batch
-            )
-            rel = self._write_data(merged)
-            try:
-                self._commit(
-                    base + 1,
-                    {
-                        "op": "merge",
-                        "dirs": [rel],
-                        "schema": m["schema"],
-                        "stats": {rel: self._dir_stats(spark, rel)},
-                    },
-                )
-                return base + 1
-            except ConcurrentWriteError as exc:
-                last_exc = exc  # orphan dir stays unreferenced; vacuum reclaims
-        raise last_exc  # type: ignore[misc]
+        (duplicate keys within the batch resolve by max ``order_col``) —
+        the keyed-merge core ``upsert_by_key`` uses. The merged result is
+        computed against the snapshot read at the START of the attempt; if
+        another writer commits first, the attempt discards its directory
+        reference and recomputes against the new snapshot — no torn state
+        is ever visible because only the manifest create is a commit."""
+        batch = _one_per_key(batch, key, order_col)
+        return self._write_version(
+            "merge",
+            lambda base, m: _merged(self.snapshot(spark, base), batch, key),
+            max_retries=max_retries,
+        )
 
     def vacuum(
         self, keep_versions: int = 1, retention_seconds: float = 3600.0
@@ -269,43 +244,23 @@ class TxnTable:
         file-listing storm. Optimistic-concurrency like ``merge``: a racing
         writer costs a retry against the fresh snapshot, never a torn table.
         """
-        last_exc: Exception | None = None
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self._read_manifest(base)
+        def rewrite(base: int, m: dict) -> DataFrame | None:
             # No-op only when there is genuinely nothing to gain: one data
             # directory whose parquet file count is already at/below the
             # target (a single directory can still hold hundreds of small
             # files from a wide writer) and no re-sort requested.
             if len(m["dirs"]) <= 1 and sort_cols is None:
-                only = os.path.join(self.data_dir, m["dirs"][0])
-                n_files = sum(
-                    1 for f in os.listdir(only) if f.endswith(".parquet")
-                )
-                if n_files <= target_partitions:
-                    return base
+                only = os.listdir(os.path.join(self.data_dir, m["dirs"][0]))
+                if sum(f.endswith(".parquet") for f in only) <= target_partitions:
+                    return None
             current = self.snapshot(spark, base)
             if sort_cols:
-                current = current.repartitionByRange(
+                return current.repartitionByRange(
                     target_partitions, *sort_cols
                 ).sortWithinPartitions(*sort_cols)
-            else:
-                current = current.coalesce(target_partitions)
-            rel = self._write_data(current)
-            try:
-                self._commit(
-                    base + 1,
-                    {
-                        "op": "compact",
-                        "dirs": [rel],
-                        "schema": m["schema"],
-                        "stats": {rel: self._dir_stats(spark, rel)},
-                    },
-                )
-                return base + 1
-            except ConcurrentWriteError as exc:
-                last_exc = exc  # orphan dir stays unreferenced; vacuum reclaims
-        raise last_exc  # type: ignore[misc]
+            return current.coalesce(target_partitions)
+
+        return self._write_version("compact", rewrite, max_retries=max_retries)
 
     def change_feed(
         self,

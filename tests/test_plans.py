@@ -388,11 +388,11 @@ def test_agg_output_name_collisions_raise(spark):
         two_tier_dec_agg(df, ["k"], sums={"s": "v"}, counts={"s": "v"})
     with _pytest.raises(ValueError, match="duplicate output name"):
         two_tier_dec_agg(df, ["k"], sums={"s": "v"}, count_star="s")
-    # r13 (ADVICE r12): a backtick in an output name would escape the SQL-
-    # text path's quoting; an input __pid column collides with the tier-1
-    # staging alias (selectExpr('*', ...) duplicates rather than replaces)
-    with _pytest.raises(ValueError, match="backtick"):
-        guarded_long_sum_agg(df, ["k"], {"s`x": "v"})
+    # a backtick in an output name is quoted (doubled), not rejected
+    # (tests/test_identifiers.py); an input __pid column collides with the
+    # tier-1 staging alias (selectExpr('*', ...) duplicates rather than
+    # replaces)
+    assert guarded_long_sum_agg(df, ["k"], {"s`x": "v"}).columns == ["k", "s`x"]
     with _pytest.raises(ValueError, match="__pid"):
         two_tier_dec_agg(
             df.selectExpr("k", "v", "1 AS __pid"), ["k"], sums={"s": "v"}

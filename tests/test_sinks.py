@@ -4,6 +4,12 @@ must not matter; duplicate keys within a batch collapse."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
+
+from airflow_etl_elt_spark.sources import sinks
 from airflow_etl_elt_spark.sources.sinks import insert_ignore_by_name
 
 
@@ -175,3 +181,71 @@ def test_rewriting_sinks_invalidate_relation_cache(spark, tmp_path):
 
     assert insert_ignore_by_name(spark, _batch(spark, [(9, "z"), (10, "w")]), path) == 1
     assert read_table(spark, str(tmp_path), "t").count() == 2
+
+
+def test_upsert_into_existing_table_job_count(spark, tmp_path):
+    """Bookkeeping pin: besides the schema read and the rewrite, an upsert
+    into an existing table runs one count (matched keys); the batch row
+    count comes from an Observation on the rewrite, not a second count."""
+    from airflow_etl_elt_spark.sources.sinks import upsert_by_key
+
+    path = str(tmp_path / "u")
+    upsert_by_key(spark, _batch(spark, [(1, "a"), (2, "b")]), path)
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert-job-count", "upsert into an existing table")
+    try:
+        assert upsert_by_key(spark, _batch(spark, [(2, "x"), (3, "c")]), path) == (1, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("upsert-job-count")
+    # 1 schema read, 4 for the matched-key count, 5 for the rewrite (each
+    # AQE query stage runs as its own job); a separate batch count made 13
+    assert len(jobs) == 10, sorted(jobs)
+
+
+@pytest.mark.parametrize("step", ["rename_aside", "rename_in", "delete_old"])
+def test_upsert_crash_at_each_swap_step_keeps_a_table(spark, tmp_path, monkeypatch, step):
+    """Fault injection: the swap is rename old aside → rename rewrite in →
+    delete old. A crash at any step must leave the old or the new rows for
+    the next reader or upsert, never a missing table, and the next upsert
+    must clear the leftover ``__upsert_*`` directories."""
+    path = str(tmp_path / "u")
+    sinks.upsert_by_key(spark, _batch(spark, [(1, "a"), (2, "b")]), path)
+    old_rows, new_rows = {1: "a", 2: "b"}, {1: "a", 2: "x", 3: "c"}
+
+    real = {"replace": os.replace, "rmtree": shutil.rmtree}
+    crash_at = {
+        "rename_aside": ("replace", 0),
+        "rename_in": ("replace", 1),
+        "delete_old": ("rmtree", 0),
+    }[step]
+    calls = []
+
+    def faulty(name):
+        def call(*args, **kwargs):
+            nth = calls.count(name)
+            calls.append(name)
+            if (name, nth) == crash_at:
+                raise OSError(f"injected crash at {step}")
+            return real[name](*args, **kwargs)
+
+        return call
+
+    monkeypatch.setattr(sinks.os, "replace", faulty("replace"))
+    monkeypatch.setattr(sinks.shutil, "rmtree", faulty("rmtree"))
+    with pytest.raises(OSError, match="injected crash"):
+        sinks.upsert_by_key(spark, _batch(spark, [(2, "x"), (3, "c")]), path)
+    monkeypatch.undo()
+
+    def rows():
+        return {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+
+    # between the renames the table is set aside: only the next upsert
+    # (which restores it) may read it; otherwise a plain read works
+    assert os.path.exists(path) == (step != "rename_in")
+    if os.path.exists(path):
+        assert rows() == (new_rows if step == "delete_old" else old_rows)
+    assert sinks.upsert_by_key(spark, _batch(spark, [(4, "d")]), path) == (0, 1)
+    assert rows() in ({**old_rows, 4: "d"}, {**new_rows, 4: "d"})
+    assert [n for n in os.listdir(tmp_path) if "__upsert_" in n] == []

@@ -279,6 +279,37 @@ def test_compact_loses_race_and_retries(spark, table, monkeypatch):
     assert len(table._read_manifest(v)["dirs"]) == 1
 
 
+@pytest.mark.parametrize("op", ["append", "replace"])
+def test_append_and_replace_lose_race_and_retry(spark, table, monkeypatch, op):
+    """A writer committing between append's (or replace's) data write and
+    its commit costs one retry on the fresh snapshot, reusing the directory
+    already written: append keeps the racing writer's rows, replace lands
+    after them, and no orphan directory is left behind."""
+    schema = "id bigint, name string, v double"
+    orig_write = table._write_data
+    raced = {"done": False}
+
+    def racy_write(df):
+        rel = orig_write(df)
+        if not raced["done"]:
+            raced["done"] = True
+            base = table.latest_version()
+            m = table._read_manifest(base)
+            rel_b = orig_write(spark.createDataFrame([(999, "race", 9.0)], schema))
+            table._commit(
+                base + 1,
+                {"op": "append", "dirs": m["dirs"] + [rel_b], "schema": m["schema"]},
+            )
+        return rel
+
+    monkeypatch.setattr(table, "_write_data", racy_write)
+    v = getattr(table, op)(spark.createDataFrame([(7, "x", 7.0)], schema))
+    assert v == 2
+    got = {r["id"] for r in table.snapshot(spark, v).collect()}
+    assert got == ({1, 2, 999, 7} if op == "append" else {7})
+    assert len(os.listdir(table.data_dir)) == 3  # create, racer, this write
+
+
 def test_snapshot_where_skips_directories(spark, table):
     """Directory-level data skipping: three appends with disjoint id
     ranges; a range read must scan ONLY the overlapping directory (plan
