@@ -40,18 +40,28 @@ def rotate_persist(
 ) -> DataFrame:
     """Persist ``df`` (optionally materializing it with a count) after
     unpersisting all but the newest ``keep - 1`` frames previously
-    registered under ``tag``."""
+    registered under ``tag``.
+
+    Spark keeps ONE cache entry per plan, shared by every frame whose plan
+    ``sameSemantics`` it. So eviction comes first, and skips a frame that
+    shares its plan with ``df`` or with a frame that stays live: unpersisting
+    it would uncache them too. ``df`` is persisted only if its plan is not
+    cached already, which would be a no-op that Spark warns about ("Asked
+    to cache already cached data")."""
     live = _LIVE.setdefault(tag, [])
-    df = df.persist()
-    if materialize:
-        no_aqe_count(df)
-    live.append(df)
-    while len(live) > keep:
-        prev = live.pop(0)
+    stay = live[max(0, len(live) - keep + 1):]
+    for prev in live[: len(live) - len(stay)]:
         try:
-            prev.unpersist()
+            if not any(prev.sameSemantics(f) for f in (*stay, df)):
+                prev.unpersist()
         except Exception:
             pass  # session may be gone; nothing to free
+    live[:] = [*stay, df]
+    level = df.storageLevel
+    if not (level.useMemory or level.useDisk):
+        df.persist()
+    if materialize:
+        no_aqe_count(df)
     return df
 
 

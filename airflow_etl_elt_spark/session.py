@@ -14,6 +14,13 @@ unchanged on local[N]:
   (cluster: set spark.sql.shuffle.partitions ~2-3x total cores; AQE
   coalesces down after the fact, so erring high is safe).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Python workers fork from ``_pydaemon`` rather than plain ``pyspark.daemon``.
+  On CPython < 3.12 it stops each task's ``importlib.invalidate_caches()``
+  from re-reading the directory of every unchanged zip on the worker path
+  (``pyspark.zip`` most of all); on 3.12+ it changes nothing.
+  Only sessions built by ``get_session`` get it: a plain SparkSession, such
+  as the one the ``__spark_entry__`` driver contract hands in, keeps the
+  stock daemon.
 """
 
 from __future__ import annotations
@@ -46,6 +53,8 @@ DEFAULT_CONF: dict[str, str] = {
     # shuffle joins to broadcast at runtime using ACCURATE post-shuffle sizes.
     "spark.sql.autoBroadcastJoinThreshold": str(16 * 1024 * 1024),
     "spark.ui.enabled": "false",
+    # Stock pyspark.daemon behind a zipimport fix (module docstring).
+    "spark.python.daemon.module": "airflow_etl_elt_spark._pydaemon",
     # Stage-progress bars write \r-animated lines to the console; anything
     # capturing stdout/stderr tails (the bench driver keeps only the last
     # ~2000 chars) gets its window flooded by them. Nothing here is

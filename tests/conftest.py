@@ -7,6 +7,10 @@ import pytest
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# A bounded test heap: the 24g production default outgrows a 16 GB host.
+# Set at import, before any test module imports session.DEFAULT_CONF.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "5g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -17,6 +17,7 @@ from airflow_etl_elt_spark.operators.asof import asof_join
 from airflow_etl_elt_spark.operators.dedup import dedup_keep_first
 from airflow_etl_elt_spark.operators.relational import sample_fraction
 from airflow_etl_elt_spark.sources.sinks import insert_ignore_by_name
+from tests.conftest import SF_SMOKE
 
 SETTINGS = dict(
     max_examples=8,
@@ -452,6 +453,42 @@ def test_rotate_persist_keep_bounds_live_cache(spark):
         assert len(_LIVE[tag]) == want
         for df in _LIVE.pop(tag):
             df.unpersist()
+
+
+def test_rotate_persist_repeated_plan_stays_cached(spark):
+    """Frames with the same plan share ONE cache entry. Rotating out an
+    older frame must not unpersist the entry the returned frame (and, under
+    keep=2, the frame before it) still reads: keep=1's second identical
+    call and keep=2's last two of three come back cached."""
+    from airflow_etl_elt_spark.operators._cache import _LIVE, rotate_persist
+
+    def cached(df):
+        level = df.storageLevel
+        return level.useMemory or level.useDisk
+
+    for keep, calls in ((1, 2), (2, 3)):
+        tag = f"__t_same{keep}"
+        frames = [
+            rotate_persist(tag, spark.range(7).selectExpr("id * 3 AS x"), keep=keep)
+            for _ in range(calls)
+        ]
+        assert all(cached(df) for df in frames[-keep:])
+        assert sorted(r["x"] for r in frames[-1].collect()) == [3 * i for i in range(7)]
+        for df in _LIVE.pop(tag):
+            df.unpersist()
+
+
+def test_dedup_minhash_second_fresh_build_reads_cached_signatures(spark, monkeypatch):
+    """A second fresh build of dedup_minhash has the same signature plan as
+    the first; it must read the signatures from the cache (one UDF pass)
+    rather than re-running the signature UDF for every consumer."""
+    from airflow_etl_elt_spark.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    first = sorted(map(tuple, QUERIES["dedup_minhash"](spark, SF_SMOKE).collect()))
+    again = QUERIES["dedup_minhash"](spark, SF_SMOKE)
+    assert sorted(map(tuple, again.collect())) == first
+    assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
 
 
 def test_exact_median_histogram_regimes(spark, monkeypatch):
