@@ -19,22 +19,14 @@ cardinality group keys; at 100 TB with high-cardinality keys switch to
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from airflow_etl_elt_spark import memo
+from airflow_etl_elt_spark import regime
 from airflow_etl_elt_spark.operators._cache import rotate_persist
 from airflow_etl_elt_spark.operators.relational import quote_ident
-
-# Inputs whose Catalyst size estimate is below this buffer the whole group in
-# one exact-median aggregation state (F.median) — a single scan + shuffle.
-# Above it, the bracketed-selection algorithm keeps state O(n/accuracy).
-# 256 MiB of scan ≈ well under a reducer's working memory even if one group
-# holds every row.
-_MEDIAN_SMALL_BYTES = 256 * 1024 * 1024
 
 # Histogram-bracketed selection knobs (exact median, large regime).
 # _HIST_BUCKETS equal-width cells per refinement level: hist shuffle volume
@@ -467,30 +459,6 @@ def guarded_long_sum_agg(
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the optimized plan (bytes). This is the
-    same statistic the optimizer itself uses to pick broadcast joins —
-    file-size x column-fraction for parquet scans, so it is cheap (no job)
-    and conservative. Returns a huge sentinel when unavailable so callers
-    fall back to the scale-safe path.
-
-    Memoized per semanticHash of the ANALYZED plan: re-running optimization
-    for the estimate costs ~34 ms of driver time, which cost-gated operators
-    would otherwise re-pay on EVERY invocation; semanticHash is ~1.2 ms. The
-    UNanalyzed plan string would be the wrong key — Spark 4 prints a fresh
-    parquet read as "UnresolvedDataSource … paths: 1 provided" with no path,
-    so different tables collide.
-    """
-    try:
-        return memo.get(
-            "plan_sizes",
-            df.semanticHash(),
-            lambda: int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()),
-        )
-    except Exception:
-        return 1 << 62
-
-
 def grouped_exact_median(
     df: DataFrame,
     group_col: str,
@@ -557,7 +525,7 @@ def grouped_exact_median(
     # broadcast decisions): small inputs take the one-shuffle F.median path —
     # buffering a few hundred MB of one group in a single aggregation state
     # is safe and saves the extra bounds/refinement scans.
-    if _plan_size_bytes(vals) < _MEDIAN_SMALL_BYTES:
+    if regime.plan_bytes(vals) < regime.BUFFER_BYTES:
         return vals.groupBy(group_col).agg(F.median("__v").alias("median_val"))
     tag = f"median:{group_col}:{value_col}"
     if _usable_bounds(value_bounds):
@@ -951,7 +919,7 @@ def grouped_stats(
     Cost-based, two regimes on the Catalyst size estimate:
 
     - **Tiny inputs** (≲200k rows) — ONE single-task Arrow pass: project
-      the two columns, ``coalesce(1)``, ``mapInPandas`` computing every
+      the two columns, ``coalesce(1)``, ``mapInArrow`` computing every
       group's six stats in one numpy pass (pandas groupby + quickselect
       median). Best one-shot latency for interactive-scale data.
     - **Everything else** — stay fully JVM and state-bounded: the streaming
@@ -969,18 +937,20 @@ def grouped_stats(
     """
     import pandas as pd
 
-    from airflow_etl_elt_spark.operators.relational import SINGLE_TASK_BYTES
-
-    # One-task numpy regime for FRESH builds below ~1-2M numeric rows (4MB
-    # of plan-size estimate): the best one-shot latency (0.45-1.0 s at 600k
-    # rows vs 1.9 s for the two-job bracketed path of that round). In
-    # PREPARED mode (plan cache on — the default) the bracketed path below
-    # wins at every size: its bounds agg is persisted at first execution,
-    # so steady-state re-execution is a single selection scan (measured
-    # 0.057 s at 600k rows vs 0.45 s here — the Arrow crossing re-pays
-    # every run).
-    fresh = os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") == "0"
-    if fresh and _plan_size_bytes(df.select(group_col, value_col)) < SINGLE_TASK_BYTES:
+    # One-task numpy regime for FRESH builds below ~1-2M numeric rows
+    # (regime.SMALL_BYTES of plan-size estimate): the best one-shot latency.
+    # In PREPARED mode the bracketed path below wins at every size: its
+    # bounds agg is persisted at first execution, so steady-state
+    # re-execution is a single selection scan (measured 0.057 s at 600k rows
+    # vs 0.45 s here — the Arrow crossing re-pays every run). Re-won against
+    # the simplest replacement, coalesce(1) + a JVM groupBy.agg(avg,
+    # median, stddev_samp, min, max, count): local[4] on 4 vCPU, plan cache
+    # off, 120k-row lineitem, 3 warm-ups + 20 timed calls, process-tree CPU:
+    #   numpy     0.60-0.63 CPU-s/op   0.27-0.30 s wall/op
+    #   F.median  0.92-0.95 CPU-s/op   0.51-0.53 s wall/op
+    if regime.fresh() and (
+        regime.plan_bytes(df.select(group_col, value_col)) < regime.SMALL_BYTES
+    ):
         gtype = df.schema[group_col].dataType.simpleString()
 
         def _np_stats_all(batches):
@@ -1238,8 +1208,6 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> Dat
     small inputs fuse to a single stage in fresh-build mode (the filter and
     column pruning sit BELOW the narrow coalesce, so pushdown is unaffected).
     """
-    from airflow_etl_elt_spark.operators.relational import fuse_small_input
-
     disc_price = "(l_extendedprice * (1 - l_discount))"
     cols = [
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
@@ -1252,7 +1220,7 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> Dat
     # tier-1 states (VERDICT r9 next-step 1). Sums as SQL text hit the
     # string-composed fast build path (same trees, ~3x cheaper build).
     base = two_tier_dec_agg(
-        fuse_small_input(
+        regime.fuse(
             lineitem.filter(
                 F.col("l_shipdate") <= F.lit(ship_cutoff).cast("timestamp")
             ).select(*cols)

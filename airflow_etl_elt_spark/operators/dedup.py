@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airflow_etl_elt_spark import memo
+from airflow_etl_elt_spark import memo, regime
 from airflow_etl_elt_spark.operators._cache import rotate_persist
 from airflow_etl_elt_spark.operators.relational import quote_ident
 from airflow_etl_elt_spark.operators.text import (
@@ -37,7 +37,6 @@ from airflow_etl_elt_spark.operators.text import (
 )
 from pyspark.sql.functions import pandas_udf
 
-from airflow_etl_elt_spark.sources.readers import fan_out
 
 # Mersenne prime 2^31-1: universal-hash modulus (h_i(x) = (a_i*x + b_i) mod p).
 # Chosen < 2^31 so (h mod p) * a stays under 2^62 — Spark 4 runs ANSI mode by
@@ -112,15 +111,13 @@ def exact_dedup(documents: DataFrame, text_col: str = "text", id_col: str = "doc
     tolerate even that use the md5 pass as a candidate filter and re-verify
     the rare multi-member groups against the raw text.
 
-    Mode-keyed plan shape (see ``relational.fuse_small_input``): prepared
+    Mode-keyed plan shape (see ``regime.fuse``): prepared
     mode stays distributed at every size (execution-only at sf0.1: 0.055 s
     distributed vs 0.078 s single-task); FRESH builds of small inputs fuse
     to one stage (measured 0.11 s vs 0.15 s at sf0.1 — one job instead of
     two plus an exchange).
     """
-    from airflow_etl_elt_spark.operators.relational import fuse_small_input
-
-    documents = fuse_small_input(documents.select(id_col, text_col))
+    documents = regime.fuse(documents.select(id_col, text_col))
     return (
         documents.groupBy(F.md5(F.col(text_col)).alias("__h"))
         .agg(
@@ -254,7 +251,7 @@ def minhash_signatures(
     # trim-based emptiness test diverges between Java and DuckDB on
     # unicode whitespace (see text.ws_tokens)
     nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    return fan_out(nonempty.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    return regime.fan_out(nonempty.select(F.col(id_col).alias("id"), F.col(text_col))).select(
         "id", sig_udf(text_col).alias("sig")
     )
 
@@ -385,9 +382,6 @@ def minhash_incremental_pairs(
 
     Same sketch parameters must be passed as at index-build time (the
     signature function is deterministic in them)."""
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-    from airflow_etl_elt_spark.operators.relational import SINGLE_TASK_BYTES
-
     rows_per_band = num_hashes // bands
     idx = spark.read.parquet(index_path)
     new_sigs = rotate_persist(
@@ -397,7 +391,7 @@ def minhash_incremental_pairs(
     small_increment = (
         broadcast_increment
         if broadcast_increment is not None
-        else _plan_size_bytes(new_docs.select(id_col, text_col)) < SINGLE_TASK_BYTES
+        else regime.plan_bytes(new_docs.select(id_col, text_col)) < regime.SMALL_BYTES
     )
 
     new_banded = _banded_ids(new_sigs, bands, rows_per_band).select(
@@ -493,12 +487,8 @@ def minhash_lsh_pairs(
     # the unshared band projection twice). Large inputs keep the
     # distributed id-join shape — signatures at corpus scale outgrow any
     # broadcast.
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-    from airflow_etl_elt_spark.operators.relational import SINGLE_TASK_BYTES
-
     small_input = (
-        _plan_size_bytes(documents.select(id_col, text_col))
-        < SINGLE_TASK_BYTES
+        regime.plan_bytes(documents.select(id_col, text_col)) < regime.SMALL_BYTES
     )
 
     # Bucket = (band_id, band_sig). Pair expansion inside each bucket.
@@ -583,7 +573,7 @@ def simhash(
             out[i] = sketch - (1 << 64) if sketch >= (1 << 63) else sketch
         return pd.Series(out)
 
-    return fan_out(documents.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    return regime.fan_out(documents.select(F.col(id_col).alias("id"), F.col(text_col))).select(
         "id", simhash_udf(text_col).alias("simhash")
     )
 

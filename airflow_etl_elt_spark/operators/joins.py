@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import regime
+
 
 def nations_with_regions(nation: DataFrame, region: DataFrame) -> DataFrame:
     """Broadcast equi-join of the two smallest dims; zero shuffle."""
@@ -42,19 +44,13 @@ def revenue_by_segment(orders: DataFrame, customer: DataFrame) -> DataFrame:
     exchange on c_mktsegment; the output is bounded by |segments| (5), so
     the final order uses ``ordered_small`` (no range exchange).
     """
-    from airflow_etl_elt_spark.operators.aggregates import (
-        _plan_size_bytes,
-        two_tier_dec_agg,
-    )
-    from airflow_etl_elt_spark.operators.relational import (
-        fuse_small_input,
-        ordered_small,
-    )
+    from airflow_etl_elt_spark.operators.aggregates import two_tier_dec_agg
+    from airflow_etl_elt_spark.operators.relational import ordered_small
 
-    if _plan_size_bytes(customer) < 64 * 1024 * 1024:
+    if regime.plan_bytes(customer) < 64 * 1024 * 1024:
         cc = F.broadcast(customer)
         # broadcast probe + fused-small stream side = one fresh-build stage
-        orders = fuse_small_input(orders.select("o_custkey", "o_totalprice"))
+        orders = regime.fuse(orders.select("o_custkey", "o_totalprice"))
     else:
         cc = customer
     # order-independent exact grid sum, long partials / decimal merge
@@ -93,12 +89,7 @@ def revenue_by_priority(
     exhaust reducer memory, so sort-merge is the safe default at scale;
     AQE handles skewed orderkeys by splitting oversized partitions.
     """
-    from airflow_etl_elt_spark.operators.aggregates import (
-        _MEDIAN_SMALL_BYTES,
-        _plan_size_bytes,
-        two_tier_dec_agg,
-    )
-    from airflow_etl_elt_spark.operators.relational import fuse_small_input
+    from airflow_etl_elt_spark.operators.aggregates import two_tier_dec_agg
 
     # two_tier_dec_agg: exact grid sum, long partials / decimal merge —
     # bit-identical to dec_sum, and 5 priorities is the low-cardinality
@@ -114,18 +105,18 @@ def revenue_by_priority(
         ).orderBy("o_orderpriority")
 
     build = orders
-    if _plan_size_bytes(orders) < _MEDIAN_SMALL_BYTES:
+    if regime.plan_bytes(orders) < regime.BUFFER_BYTES:
         build = orders.hint("shuffle_hash")
     # Fresh-build mode: fusing BOTH small sides makes them SinglePartition-
     # compatible, so the join and the rollup plan no exchange at all (one
     # stage). Fusing only one side would just move the exchange; the size
     # gate keys off lineitem (always the larger side here).
     li_pruned = lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
-    li_fused = fuse_small_input(li_pruned)
+    li_fused = regime.fuse(li_pruned)
     if li_fused is not li_pruned:
         lineitem = li_fused
         # keep the hash build: SMJ would in-partition-sort both fused sides
-        build = fuse_small_input(
+        build = regime.fuse(
             orders.select("o_orderkey", "o_orderpriority")
         ).hint("shuffle_hash")
     return two_tier_dec_agg(
@@ -219,8 +210,6 @@ def top_revenue_orders(
     TakeOrderedAndProject — each partition keeps its local top-k, the driver
     merges k rows, no global sort materializes. Tie-broken by o_orderkey.
     """
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-
     segment_orders = (
         customer.filter(F.col("c_mktsegment") == segment)
         .join(orders, F.col("c_custkey") == F.col("o_custkey"))
@@ -230,8 +219,6 @@ def top_revenue_orders(
         orders.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
         .removesuffix("b")
     )
-    from airflow_etl_elt_spark.operators.relational import fuse_small_input
-
     lineitem = lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
     if colocated:
         # Both facts bucketed+sorted on the orderkey (the at-rest layout):
@@ -247,12 +234,12 @@ def top_revenue_orders(
             .select("o_orderkey", "o_orderdate")
             .hint("merge")
         )
-    elif 0 < _plan_size_bytes(orders.select("o_orderkey", "o_orderdate")) < threshold:
+    elif 0 < regime.plan_bytes(orders.select("o_orderkey", "o_orderdate")) < threshold:
         segment_orders = F.broadcast(segment_orders)
         # With the probe side broadcast, a fused-small lineitem turns the
         # whole query into one stage in fresh-build mode (gate no-ops in
         # prepared mode and above the size bound — the distributed shape).
-        lineitem = fuse_small_input(lineitem)
+        lineitem = regime.fuse(lineitem)
     from airflow_etl_elt_spark.operators.aggregates import guarded_long_sum_agg
 
     # guarded_long_sum_agg: bit-identical to dec_sum's exact grid sum, but

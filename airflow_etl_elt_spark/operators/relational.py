@@ -58,60 +58,6 @@ def ordered_small(df: DataFrame, *cols, desc: bool = False) -> DataFrame:
     return df.coalesce(1).sortWithinPartitions(*keys)
 
 
-#: Small-input bound for cost-gated single-task regimes (fuse_small_input,
-#: grouped_stats' numpy regime, similarity.cosine_topk's Arrow path).
-#: NOTE the unit: this bounds Catalyst's OPTIMIZED-PLAN size estimate
-#: (file bytes x column fraction), which for compressed numeric parquet
-#: under-reports in-memory row size ~10x.
-SINGLE_TASK_BYTES = 4 * 1024 * 1024
-
-
-def fuse_small_input(df: DataFrame, bound_scale: float = 1.0) -> DataFrame:
-    """Single-task regime for FRESH builds of small inputs, keyed off the
-    catalog plan cache switch.
-
-    The round-3/4 lesson, both halves: which plan shape wins depends on
-    which costs an invocation actually pays.
-
-    - **Prepared mode** (plan cache ON — the default, and a query service's
-      steady state): each call re-executes a cached DataFrame, paying
-      execution only. There the distributed plan wins at EVERY fixture size
-      (window top-k: 0.04 s distributed vs 0.25 s fused, execution-only),
-      so this gate returns the input UNCHANGED and the plan keeps its
-      parallelism — the shape that also stands at 100 TB.
-    - **Fresh-build mode** (``SPARK_GRAFT_PLAN_CACHE=0`` — one-shot scripts,
-      and the bench headline, which matches DuckDB's re-plan-and-re-execute
-      discipline): every call pays Catalyst planning plus one JOB PER QUERY
-      STAGE of scheduling. Fusing a small input to one partition is a
-      narrow ``coalesce`` — SinglePartition satisfies every
-      ClusteredDistribution, so windows/aggregations/joins over it plan NO
-      exchange and the whole query collapses to one stage (BENCH_r03:
-      window_topk 2.14x vs 10.55x after round 4 removed these gates —
-      removed on execution-only measurements, i.e. tuned for the mode the
-      headline doesn't measure; VERDICT r4 next-step 2 reverses that).
-
-    Size gate: Catalyst's optimized-plan estimate < SINGLE_TASK_BYTES x
-    ``bound_scale`` (~1-2M numeric rows at the 4 MB default given
-    parquet's ~10x under-report). Above it the plan is returned unchanged
-    in both modes. Callers pass the input ALREADY projected so the gate
-    measures what will actually flow; callers whose projection compresses
-    far better than it decodes (all-numeric columns — the estimate is
-    compressed bytes but single-task decode work is ROWS) pass
-    ``bound_scale < 1`` to cross over earlier (hourly_agg at the 10x
-    replica: fused 0.51 s vs distributed 0.42 s at an 11 MB estimate that
-    a text-heavy input of equal work would have crossed long before).
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") != "0":
-        return df
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-
-    if _plan_size_bytes(df) < SINGLE_TASK_BYTES * bound_scale:
-        return df.coalesce(1)
-    return df
-
-
 def derive_flag(df: DataFrame, out_col: str, src_col: str, threshold) -> DataFrame:
     """``out = src >= threshold`` derived boolean (etl_elt_wine.py:188)."""
     return df.withColumn(out_col, F.col(src_col) >= F.lit(threshold))

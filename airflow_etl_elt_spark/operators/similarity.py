@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airflow_etl_elt_spark import memo
+from airflow_etl_elt_spark import memo, regime
 
 #: cosine_near_dup_pairs block-size ceiling: bounds the per-task float64
 #: gram at 4096² x 8 B ≈ 134 MB (plus operands), and with it the peak arena
@@ -126,11 +126,8 @@ def cosine_topk(
     query is one job. Above the bound the scan stays partitioned and
     TakeOrderedAndProject merges per-partition top-k's — the 100 TB path.
     """
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-    from airflow_etl_elt_spark.operators.relational import SINGLE_TASK_BYTES
-
-    est = _plan_size_bytes(embeddings.select(id_col, vec_col))
-    if est < SINGLE_TASK_BYTES:
+    est = regime.plan_bytes(embeddings.select(id_col, vec_col))
+    if est < regime.SMALL_BYTES:
         embeddings = embeddings.coalesce(1)
     if impl == "auto":
         impl = "jvm" if est >= 16 * 1024 * 1024 else "blas"
@@ -185,9 +182,6 @@ def cosine_topk_batch(
     """
     from pyspark.sql import Window
 
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-    from airflow_etl_elt_spark.operators.relational import SINGLE_TASK_BYTES
-
     qid_t = dict(queries.dtypes)[query_id_col]
     id_t = dict(embeddings.dtypes)[id_col]
     qrows = queries.select(query_id_col, vec_col).collect()
@@ -205,7 +199,7 @@ def cosine_topk_batch(
     Qn = Q / qn[:, None]
 
     src = embeddings.select(id_col, vec_col)
-    if _plan_size_bytes(src) < SINGLE_TASK_BYTES:
+    if regime.plan_bytes(src) < regime.SMALL_BYTES:
         src = src.coalesce(1)
 
     out_schema = f"{query_id_col} {qid_t}, {id_col} {id_t}, cosine double"
@@ -743,11 +737,9 @@ def auto_bits(
     ~10^6 buckets, the IVF-style regime you want for partition-pruned
     at-rest layouts.
     """
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-
     if candidate_budget is None:
         candidate_budget = max(400, 40 * k)
-    sz = _plan_size_bytes(embeddings.select(vec_col))
+    sz = regime.plan_bytes(embeddings.select(vec_col))
     if sz >= (1 << 62):  # estimate unavailable: safe mid-range default
         return 8
     # parquet float arrays of random values don't compress: ~4 bytes/elem

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import regime
 from airflow_etl_elt_spark.operators.aggregates import dec_sum
 
 
@@ -53,18 +54,13 @@ def hourly_agg(events: DataFrame) -> DataFrame:
     type), bounded by time span not data volume → ``ordered_small`` for
     the final order instead of a range exchange.
     """
-    from airflow_etl_elt_spark.operators.relational import (
-        fuse_small_input,
-        ordered_small,
-    )
+    from airflow_etl_elt_spark.operators.relational import ordered_small
 
-    # bound_scale 0.5: this projection is nearly all numeric, so the
+    # scale 0.5: this projection is nearly all numeric, so the
     # compressed estimate under-reports decode rows — measured crossover
     # sits between sf0.1 (1.1 MB est, fused wins) and the 10x replica
     # (11 MB est, distributed wins)
-    events = fuse_small_input(
-        events.select("ts", "event_type", "value"), bound_scale=0.5
-    )
+    events = regime.fuse(events.select("ts", "event_type", "value"), scale=0.5)
     from airflow_etl_elt_spark.operators.aggregates import guarded_long_sum_agg
 
     # order-independent exact grid sum on primitive longs (bit-identical to
@@ -127,7 +123,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     Classic two-window composition (lag → boundary flag → running sum) —
     entirely JVM-side, one shuffle on user_id reused by both windows (same
     partitioning, Catalyst plans a single exchange). Deliberately NOT
-    fused via ``fuse_small_input``: the output is data-sized (~1 session
+    fused via ``regime.fuse``: the output is data-sized (~1 session
     per 10 events) and an interleaved A/B at sf0.1 showed the distributed
     plan faster fresh as well (0.33 s vs 0.37 s — the 95k-row result's
     decode+fetch dominates, which fusing cannot help). The streaming twin

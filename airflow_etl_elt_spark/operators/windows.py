@@ -12,10 +12,10 @@ aggregates and ranks are reproducible against the DuckDB oracle.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark import regime
 from airflow_etl_elt_spark.operators.relational import quote_ident
 
 
@@ -32,7 +32,7 @@ def top_k_per_group(
     skew (one giant group), pre-aggregate or use a per-partition partial top-k
     (e.g. groupBy + max_by/collect-sort for tiny k).
 
-    Two plan shapes (see ``fuse_small_input`` for the mode split):
+    Two plan shapes (see ``regime.fuse`` for the mode split):
 
     - **Distributed** (prepared mode, or any input above the size gate —
       the 100 TB shape): the window runs parallel per group; the final
@@ -46,9 +46,7 @@ def top_k_per_group(
       partition, the window plans no exchange, and the sort is an in-place
       ``sortWithinPartitions`` — one stage end to end.
     """
-    from airflow_etl_elt_spark.operators.relational import fuse_small_input
-
-    fused = fuse_small_input(df)
+    fused = regime.fuse(df)
     g, o, t = (quote_ident(c) for c in (group_col, order_col, tiebreak_col))
     # SQL-text build path (OPTIMIZATION r13, same contract as
     # _two_tier_dec_agg_sql): the window + rank expression is one parsed
@@ -139,16 +137,13 @@ def ranking_suite(
 
     Mode/size gates, measured not guessed: below ``RANK_COMPOSE_BYTES``
     the two extra passes cost more than they parallelize (the plain window
-    serves, fused in fresh-build mode via ``fuse_small_input``); above it,
+    serves, fused in fresh-build mode via ``regime.fuse``); above it,
     an ``approx_count_distinct`` probe checks the key's cardinality — a
     HIGH-cardinality key already gives the plain window its parallelism,
     so compose engages only where the window genuinely degenerates. NULL
     order values sort last (Spark DESC NULLS LAST), bucketed past every
     boundary.
     """
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-    from airflow_etl_elt_spark.operators.relational import fuse_small_input
-
     g, o, t = (quote_ident(c) for c in (group_col, order_col, tiebreak_col))
     src = df.select(g, o, t)
     spark = df.sparkSession
@@ -162,7 +157,7 @@ def ranking_suite(
     if total_rows is not None:
         composed = total_rows >= RANK_COMPOSE_ROWS_PER_GROUP
     else:
-        composed = _plan_size_bytes(src) >= RANK_COMPOSE_BYTES
+        composed = regime.plan_bytes(src) >= RANK_COMPOSE_BYTES
     if composed:
         n_groups = src.agg(
             F.approx_count_distinct(g).alias("g")
@@ -175,7 +170,7 @@ def ranking_suite(
         # output instead of nested Column ops — identical physical plan
         # (F.desc == DESC NULLS LAST; plans/r13 before/after dumps).
         w = f"PARTITION BY {g} ORDER BY {o} DESC, {t}"
-        return fuse_small_input(src).selectExpr(
+        return regime.fuse(src).selectExpr(
             t,
             g,
             f"CAST(dense_rank() OVER ({w}) AS BIGINT) AS drank",

@@ -22,7 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from airflow_etl_elt_spark import memo
+from airflow_etl_elt_spark import memo, regime
 from airflow_etl_elt_spark.operators import (
     aggregates,
     asof,
@@ -46,7 +46,6 @@ from airflow_etl_elt_spark.sources.readers import (
     PARTSUPP_ORACLE_CTE,
     derived_lineitem_ext,
     derived_partsupp,
-    fan_out,
     read_table,
     table_column_stats,
 )
@@ -495,11 +494,11 @@ def q_token_count(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
-    return text.quality_score(fan_out(read_table(spark, sf, "documents")))
+    return text.quality_score(regime.fan_out(read_table(spark, sf, "documents")))
 
 
 def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
-    return text.lang_id(fan_out(read_table(spark, sf, "documents")))
+    return text.lang_id(regime.fan_out(read_table(spark, sf, "documents")))
 
 
 def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
@@ -507,7 +506,7 @@ def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_token_count_bpe(spark: SparkSession, sf: str) -> DataFrame:
-    return text.token_count_bpe(fan_out(read_table(spark, sf, "documents")))
+    return text.token_count_bpe(regime.fan_out(read_table(spark, sf, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -751,14 +750,14 @@ def q_knn_batch(spark: SparkSession, sf: str) -> DataFrame:
 def q_word_entropy(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document unigram word entropy + word count (lexical-diversity
     quality signal); exactly oracle-checkable."""
-    return text.word_entropy(fan_out(read_table(spark, sf, "documents")))
+    return text.word_entropy(regime.fan_out(read_table(spark, sf, "documents")))
 
 
 def q_bigram_lm_score(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc cross-entropy under a corpus-trained add-k bigram LM — the
     CCNet/KenLM-style quality filter, fully relational (train = two grouped
     counts, score = one join), so it's exactly oracle-checkable."""
-    return text.bigram_lm_score(fan_out(read_table(spark, sf, "documents")))
+    return text.bigram_lm_score(regime.fan_out(read_table(spark, sf, "documents")))
 
 
 def q_quality_filtered_sample(spark: SparkSession, sf: str) -> DataFrame:
@@ -771,7 +770,7 @@ def q_quality_filtered_sample(spark: SparkSession, sf: str) -> DataFrame:
     and the whole pipeline remains exactly oracle-checkable — the
     composition property that makes the catalog an engine rather than a
     list of demos."""
-    scored = text.bigram_lm_score(fan_out(read_table(spark, sf, "documents")))
+    scored = text.bigram_lm_score(regime.fan_out(read_table(spark, sf, "documents")))
     kept = scored.filter(F.col("cross_entropy") <= F.lit(3.4))
     return relational.deterministic_sample(kept, "doc_id", 50)
 
@@ -1116,7 +1115,7 @@ def q_corr_by_flag(spark: SparkSession, sf: str) -> DataFrame:
 def q_top_tokens(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus heavy hitters: token explode → count → top 20 (count desc,
     token asc). Explode + two-phase agg; the sort is on the tiny agg."""
-    docs = fan_out(read_table(spark, sf, "documents"))
+    docs = regime.fan_out(read_table(spark, sf, "documents"))
     tokens = docs.select(
         F.explode(text.ws_tokens(text.ascii_lower(F.col("text")))).alias("token")
     ).filter(F.col("token") != "")
@@ -1129,7 +1128,7 @@ def q_top_tokens(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
-    return text.tfidf_top_terms(fan_out(read_table(spark, sf, "documents")), k=1)
+    return text.tfidf_top_terms(regime.fan_out(read_table(spark, sf, "documents")), k=1)
 
 
 def q_left_join_zero_counts(spark: SparkSession, sf: str) -> DataFrame:
@@ -1301,11 +1300,9 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     # order, so the zero-exchange bucketed merge join survives with its
     # orders stream ~5x smaller, the merge output falls ~5x, and the final
     # customer shuffle join collapses into a post-merge co-location filter.
-    # Cost-gated like every fact broadcast (16 MB of plan estimate, scaled
+    # Cost-gated like every fact broadcast (regime.BROADCAST_BYTES, scaled
     # by the selected-nation fraction — a Filter node's sizeInBytes is its
     # child's without CBO): above the gate, the r8 shuffle-join path stands.
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-
     # The ≤|nation|-row key lookup is memoized per sf (OPTIMIZATION r12):
     # the two collect() jobs are ~0.1 s of pure scheduling floor re-paid on
     # EVERY fresh build of this query for 25+5 immutable dimension rows.
@@ -1363,10 +1360,10 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     # this gate while the actual region-pruned broadcast is several times
     # larger — a PERF risk only (the fallback shuffle path is correct); if
     # skewed fixtures are ever added, clamp with the unscaled estimate too.
-    c2_est = _plan_size_bytes(c.select("c_custkey", "c_nationkey")) * frac
+    c2_est = regime.plan_bytes(c.select("c_custkey", "c_nationkey")) * frac
     oo = o.select("o_orderkey", "o_custkey")
     li = li.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-    gate = 16 * 1024 * 1024
+    gate = regime.BROADCAST_BYTES
     if c2_est < gate:
         oo = oo.join(
             F.broadcast(c2), F.col("o_custkey") == F.col("c_custkey")
@@ -1377,11 +1374,11 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
             # The merge hint stops the planner broadcasting the
             # small-estimate orders side (bypassing the bucket metadata).
             oo = oo.hint("merge")
-        elif _plan_size_bytes(o.select("o_orderkey", "o_custkey")) * frac < gate:
+        elif regime.plan_bytes(o.select("o_orderkey", "o_custkey")) * frac < gate:
             oo = F.broadcast(oo)
             # all probe sides broadcast → a fused-small lineitem stream side
             # makes the whole five-way join one fresh-build stage
-            li = relational.fuse_small_input(li)
+            li = regime.fuse(li)
         # The co-location predicate is spelled (a - b) == 0, NOT a == b: a
         # plain equality would be extracted as a SECOND equi-join key,
         # turning the merge keys into (nationkey, orderkey) — which the
@@ -1409,13 +1406,13 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     # the honest shuffle-join shape; gates and rationale unchanged from r8:
     # measured at the 30x replica an over-eager orders broadcast cost
     # 3.55 s vs 1.6 s with the shuffle join).
-    cc = F.broadcast(c) if _plan_size_bytes(c) < gate else c
+    cc = F.broadcast(c) if regime.plan_bytes(c) < gate else c
     if _orderkey_colocated(spark, sf):
         oo = oo.hint("merge")
     else:
-        if _plan_size_bytes(oo) < gate:
+        if regime.plan_bytes(oo) < gate:
             oo = F.broadcast(oo)
-        li = relational.fuse_small_input(li)
+        li = regime.fuse(li)
     return two_tier_dec_agg(
         li.join(F.broadcast(asian_sup), li.l_suppkey == F.col("s_suppkey"))
         .join(oo, li.l_orderkey == F.col("o_orderkey"))
@@ -1536,7 +1533,7 @@ def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     array column crashes its ``sort_values``; VERDICT r2 #3)."""
     from airflow_etl_elt_spark.plans.corpus import pack_sequences
 
-    counted = text.token_count(fan_out(read_table(spark, sf, "documents")))
+    counted = text.token_count(regime.fan_out(read_table(spark, sf, "documents")))
     packed = pack_sequences(counted, max_tokens=512)
     return packed.select(
         "pack_id",
@@ -1697,7 +1694,7 @@ def q_rolling_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     # constant) — gating the fan-out off regressed this key 0.16 -> 0.45 s
     # at sf0.1 (r13 mid-bench), so the call site opts out of the gate.
     return text.rolling_fingerprint(
-        fan_out(read_table(spark, sf, "documents"), min_bytes=0)
+        regime.fan_out(read_table(spark, sf, "documents"), min_bytes=0)
     )
 
 
@@ -1804,7 +1801,7 @@ def q_media_features(spark: SparkSession, sf: str) -> DataFrame:
     # min_bytes=0: downstream decodes JPEGs in Python (the heaviest
     # per-row work in the catalog) — always worth every core.
     media = multimodal.documents_as_media(
-        fan_out(read_table(spark, sf, "documents"), min_bytes=0)
+        regime.fan_out(read_table(spark, sf, "documents"), min_bytes=0)
     )
     return multimodal.extract_media_features(media, with_dims_check=True)
 
@@ -1928,8 +1925,6 @@ def q_tpch_q10(spark: SparkSession, sf: str) -> DataFrame:
     date-pruned BEFORE the fact-fact join, nation broadcasts, and the top-20
     is TakeOrderedAndProject (never a global sort materialization).
     Deterministic tie-break on c_custkey."""
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-
     c = read_table(spark, sf, "customer")
     o = read_table(spark, sf, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
@@ -1948,17 +1943,13 @@ def q_tpch_q10(spark: SparkSession, sf: str) -> DataFrame:
     # build is bounded by the date window, not the orders table — and the
     # isolated 10x A/B (SCALING.md "Round-7 addendum 2") measured the
     # broadcast shape faster (0.49 s vs 0.63 s forced-merge). At real scale
-    # 7% of orders outgrows the 16 MB gate below and the shuffle join
+    # 7% of orders outgrows the broadcast gate below and the shuffle join
     # stands, so the scale story needs no bucket hint here.
-    if (
-        # 16 MB: the measured q5 crossover (see q_tpch_q5_local_revenue) —
-        # the estimate under-reports hash-relation build cost ~3x in rows
-        _plan_size_bytes(oo) < 16 * 1024 * 1024
-    ):
+    if regime.plan_bytes(oo) < regime.BROADCAST_BYTES:
         oo_small = True
         oo = F.broadcast(oo)
         # broadcast probe + fused-small stream side = one fresh-build stage
-        li = relational.fuse_small_input(li)
+        li = regime.fuse(li)
     else:
         oo_small = False
     # Aggregate BEFORE the wide customer join (r9, the agg-through-join
@@ -2531,7 +2522,7 @@ def q_segment_dedup(spark: SparkSession, sf: str) -> DataFrame:
     stats, first occurrence by (doc_id, seg_idx) wins. Digest-only shuffles;
     exactly oracle-checkable."""
     docs = read_table(spark, sf, "documents")
-    return dedup.segment_dedup(fan_out(docs), window=10)
+    return dedup.segment_dedup(regime.fan_out(docs), window=10)
 
 
 def q_boilerplate_segments(spark: SparkSession, sf: str) -> DataFrame:
@@ -2540,7 +2531,7 @@ def q_boilerplate_segments(spark: SparkSession, sf: str) -> DataFrame:
     the operator also supports per-source scoping). Per-doc boilerplate
     fraction; exactly oracle-checkable."""
     docs = read_table(spark, sf, "documents")
-    return dedup.boilerplate_segments(fan_out(docs), window=10, min_docs=2)
+    return dedup.boilerplate_segments(regime.fan_out(docs), window=10, min_docs=2)
 
 
 def q_pii_redact(spark: SparkSession, sf: str) -> DataFrame:
@@ -3030,16 +3021,15 @@ QUERIES: dict[str, QueryFn] = {
 # prepared statement and can be memoized per (sf, key) in the session memo
 # (memo.py). Embedded engines re-plan in microseconds; Spark's answer to
 # repeated identical queries is exactly this (persistent views / prepared
-# Datasets). Kill switch: SPARK_GRAFT_PLAN_CACHE=0, read per call.
+# Datasets). Kill switch: SPARK_GRAFT_PLAN_CACHE=0 (``regime.fresh``).
 
 
 def _plan_cached(key: str, fn: QueryFn) -> QueryFn:
     import functools
-    import os
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-        if os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") == "0":
+        if regime.fresh():
             return fn(spark, sf)
         return memo.get("plans", (sf, key), lambda: fn(spark, sf))
 

@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from airflow_etl_elt_spark import regime
+
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -45,13 +47,14 @@ DEFAULT_CONF: dict[str, str] = {
     # Parquet vectorized reader is on by default; keep pushdown explicit so a
     # config drift shows up in review rather than in a 100x slower scan.
     "spark.sql.parquet.filterPushdown": "true",
-    # Static broadcast threshold: 16 MB. The static estimate is file-size x
-    # column-fraction and routinely UNDERestimates hash-relation memory; at
-    # 64 MB Spark happily picked a column-pruned 6M-row FACT table as the
-    # build side (measured: 13x slower than the shuffle join). Known-small
-    # dims are broadcast explicitly with F.broadcast; AQE may still upgrade
-    # shuffle joins to broadcast at runtime using ACCURATE post-shuffle sizes.
-    "spark.sql.autoBroadcastJoinThreshold": str(16 * 1024 * 1024),
+    # Static broadcast threshold: regime.BROADCAST_BYTES (16 MB). The static
+    # estimate is file-size x column-fraction and routinely UNDERestimates
+    # hash-relation memory; at 64 MB Spark happily picked a column-pruned
+    # 6M-row FACT table as the build side (measured: 13x slower than the
+    # shuffle join). Known-small dims are broadcast explicitly with
+    # F.broadcast; AQE may still upgrade shuffle joins to broadcast at
+    # runtime using ACCURATE post-shuffle sizes.
+    "spark.sql.autoBroadcastJoinThreshold": str(regime.BROADCAST_BYTES),
     "spark.ui.enabled": "false",
     # Stock pyspark.daemon behind a zipimport fix (module docstring).
     "spark.python.daemon.module": "airflow_etl_elt_spark._pydaemon",

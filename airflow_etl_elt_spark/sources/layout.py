@@ -28,8 +28,8 @@ overrides that ``readers.read_table`` consults:
 Both engines read the SAME bytes: ``duckdb_path`` hands the bench's DuckDB
 baseline a glob over the identical rewritten files.
 
-Size policy (``rewrite_min_bytes``, default 16 MB = the session broadcast
-threshold): tables under the floor keep their fixture layout — they
+Size policy (``MIN_BYTES`` = ``regime.BROADCAST_BYTES``, the session
+broadcast threshold): tables under the floor keep their fixture layout — they
 broadcast into any join (co-location buys nothing) and scan as 1-2 splits
 (sharding a 10 MB table 32 ways is anti-production file fragmentation).
 Bucketing is decided per co-location GROUP (``BUCKET_GROUPS``): if any
@@ -56,13 +56,28 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from airflow_etl_elt_spark import memo
+from airflow_etl_elt_spark import memo, regime
 
 #: bump to invalidate every materialized layout (schema of the marker, the
 #: bucket/sort specs below, or the write recipe changed)
 _LAYOUT_VERSION = "v1"
 
-#: table -> (bucket_cols, sort_cols). Bucket counts come from layout_buckets().
+#: Bucket count for the fact tables. 32 matches local[32]; a cluster
+#: deployment sizes this to target ~128-512 MB per bucket file.
+BUCKETS = 32
+
+#: Source-bytes floor below which a table keeps its fixture layout: the
+#: session broadcast threshold. A table under it broadcasts into any join,
+#: so co-locating it buys nothing, and its scan is already 1-2 splits —
+#: sharding it 32 ways only fragments (production parquet guidance targets
+#: >= 64-512 MB files; nobody buckets a 10 MB table). Measured both ways at
+#: the 10x replica (SCALING r7): the bucketed orderkey facts (96 MB
+#: lineitem) cut q3/q5/revenue_by_priority ~50%, while rewriting the
+#: sub-16 MB documents/embeddings moved knn and the corpus keys within
+#: noise or slightly backward.
+MIN_BYTES = regime.BROADCAST_BYTES
+
+#: table -> (bucket_cols, sort_cols), bucketed into ``BUCKETS`` buckets.
 BUCKETED: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "orders": (("o_orderkey",), ("o_orderkey",)),
     "lineitem": (("l_orderkey",), ("l_orderkey",)),
@@ -119,26 +134,6 @@ def _source_identity(sf_dir: str) -> str:
             st = os.stat(p)
             parts.append(f"{name}:{st.st_size}:{int(st.st_mtime)}")
     return hashlib.sha256("|".join(parts).encode()).hexdigest()[:12]
-
-
-def layout_buckets() -> int:
-    """Bucket count for the fact tables. 32 matches local[32]; a cluster
-    deployment sizes this to target ~128-512 MB per bucket file."""
-    return int(os.environ.get("SPARK_GRAFT_BUCKETS", "32"))
-
-
-def rewrite_min_bytes() -> int:
-    """Source-bytes floor below which a table keeps its fixture layout.
-
-    Default = the session broadcast threshold (16 MB): a table at or under
-    it broadcasts into any join, so co-locating it buys nothing, and its
-    scan is already 1-2 splits — sharding it 32 ways only fragments
-    (production parquet guidance targets >= 64-512 MB files; nobody buckets
-    a 10 MB table). Measured both ways at the 10x replica (SCALING r7): the
-    bucketed orderkey facts (96 MB lineitem) cut q3/q5/revenue_by_priority
-    ~50%, while rewriting the sub-16 MB documents/embeddings moved knn and
-    the corpus keys within noise or slightly backward."""
-    return int(os.environ.get("SPARK_GRAFT_LAYOUT_MIN_BYTES", str(16 * 1024 * 1024)))
 
 
 def _source_bytes(sf_dir: str, name: str) -> int:
@@ -216,7 +211,7 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
 
     sf_abs = os.path.abspath(sf_dir)
     ident = _source_identity(sf_abs)
-    n_buckets = layout_buckets()
+    n_buckets = BUCKETS
     # Sorted-bucket scans only advertise their sort order behind this flag
     # (off by default since SPARK-28595 because it needs the one-file-per-
     # bucket check); our writer repartitions to exactly one file per bucket,
@@ -237,10 +232,9 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         return already  # clear() is a dict rebuild, not a catalog round trip
     locations: dict[str, str] = {}
 
-    min_bytes = rewrite_min_bytes()
     bucket_tables: list[str] = []
     for group in BUCKET_GROUPS:
-        if any(_source_bytes(sf_abs, n) >= min_bytes for n in group):
+        if any(_source_bytes(sf_abs, n) >= MIN_BYTES for n in group):
             bucket_tables.extend(n for n in group if _source_bytes(sf_abs, n) > 0)
 
     for name in bucket_tables:
@@ -307,7 +301,7 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         src_path = os.path.join(sf_abs, f"{name}.parquet")
         if not os.path.exists(src_path):
             continue  # fixture variants without the table (replicas, tests)
-        if _source_bytes(sf_abs, name) < min_bytes:
+        if _source_bytes(sf_abs, name) < MIN_BYTES:
             continue  # under the rewrite floor: the fixture IS the layout
         out_dir = os.path.join(files_root, name)
         if not (

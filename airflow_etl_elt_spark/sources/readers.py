@@ -83,66 +83,6 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.replace(" ", "_") for c in df.columns])
 
 
-#: fan_out's cost gate: below this Catalyst plan-size estimate the fan-out
-#: exchange plus the per-task Python-crossing overhead exceed what the
-#: parallelism buys, so the input is left on its natural layout. Measured
-#: r13 at sf0.1 (ISOLATED noop A/B, 3 samples each): scan+fan_out 0.21 s;
-#: a TRIVIAL pandas_udf over the fanned-out input 0.53-0.68 s vs the full
-#: lang_id WITHOUT fan_out 0.28-0.41 s — the Arrow crossing costs ~10 ms
-#: x 32 tasks while the actual RE2 work is noise at this size (full
-#: lang_id == trivial-UDF cost over the same fan-out). Crossover estimate:
-#: single-threaded text work ~0.04 s/MB vs ~0.3 s fixed fan-out overhead
-#: => ~8 MB of text ~ 4 MB compressed estimate. At production scale inputs
-#: arrive orders of magnitude above this and the gate never engages.
-FAN_OUT_MIN_BYTES = 4 * 1024 * 1024
-
-
-def fan_out(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
-    """Round-robin repartition a narrow input so compute-heavy downstream work
-    (regex passes, pandas UDFs, per-row vector math) uses every core.
-
-    Parquet splits at row-group granularity: a single-row-group file scans as
-    ONE partition no matter how many cores exist, serializing everything after
-    it. At 100 TB inputs arrive as thousands of files and this is a no-op
-    (returns ``df`` unchanged when partitions >= target); on small/skewed
-    layouts it costs one tiny shuffle to unlock N-way parallelism — the same
-    guard a production pipeline wants against a few-giant-files layout.
-
-    Cost-gated (OPTIMIZATION r13, guide §1.2/§4): inputs whose Catalyst
-    size estimate is under ``FAN_OUT_MIN_BYTES`` stay on their natural
-    layout — see the gate constant for the measured crossover. Per-row
-    operators are order-insensitive, so the gate changes plan shape only,
-    never results. The default gate constant assumes LIGHT per-byte work
-    (~0.04 s/MB single-threaded — regex/token passes); call sites whose
-    downstream is far heavier per byte (interpreted HOF folds, Python
-    image decoding) pass their own ``min_bytes`` (0 = always fan out) —
-    rolling_fingerprint measured 0.16 -> 0.45 s at sf0.1 under the default
-    gate before its override.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if _partition_count(df) >= target:
-        return df
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
-
-    gate = FAN_OUT_MIN_BYTES if min_bytes is None else min_bytes
-    if _plan_size_bytes(df) < gate:
-        return df
-    return df.repartition(target)
-
-
-def _partition_count(df: DataFrame) -> int:
-    """Planned partition count of ``df``, memoized per semanticHash of the
-    analyzed plan. ``df.rdd.getNumPartitions()`` costs ~60 ms of driver time
-    per call (full physical planning + RDD conversion) and fan_out callers
-    re-pay it on every fresh build; the count is a pure function of the
-    immutable fixture layout + session parallelism (OPTIMIZATION r12)."""
-    try:
-        key = df.semanticHash()
-    except Exception:
-        return df.rdd.getNumPartitions()
-    return memo.get("partition_counts", key, lambda: df.rdd.getNumPartitions())
-
-
 def read_csv_normalized(
     spark: SparkSession,
     path: str,

@@ -7,6 +7,8 @@ Usage:
     python scripts/capture_plans.py <tag> <suffix> [key ...]
     # e.g. python scripts/capture_plans.py r12 before
     #      python scripts/capture_plans.py r12 after tpch_q1 grouped_stats
+    #      SPARK_GRAFT_PLAN_CACHE=1 python scripts/capture_plans.py r12 prepared
+Plans are fresh-build shapes unless SPARK_GRAFT_PLAN_CACHE is set.
 """
 
 from __future__ import annotations
@@ -37,7 +39,9 @@ def main() -> None:
 
     if os.environ.get("SPARK_GRAFT_AT_REST_LAYOUT", "1") != "0":
         _layout.prepare_at_rest_layout(spark, sf_dir)
-    os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"
+    # fresh-build plans unless the caller chose a mode
+    # (SPARK_GRAFT_PLAN_CACHE=1 dumps the prepared-mode shapes)
+    os.environ.setdefault("SPARK_GRAFT_PLAN_CACHE", "0")
 
     for key in keys:
         try:

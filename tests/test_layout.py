@@ -16,26 +16,16 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture()
-def rewritten_layout(spark):
+def rewritten_layout(spark, monkeypatch):
     """Force the rewrite floor to zero so the tiny test fixtures exercise the
     full bucketed + multi-file paths; always deregister afterwards so other
     tests keep reading pristine fixtures."""
-    old_min = os.environ.get("SPARK_GRAFT_LAYOUT_MIN_BYTES")
-    old_buckets = os.environ.get("SPARK_GRAFT_BUCKETS")
-    os.environ["SPARK_GRAFT_LAYOUT_MIN_BYTES"] = "0"
-    os.environ["SPARK_GRAFT_BUCKETS"] = "4"
+    monkeypatch.setattr(layout, "MIN_BYTES", 0)
+    monkeypatch.setattr(layout, "BUCKETS", 4)
     try:
         yield layout.prepare_at_rest_layout(spark, SF)
     finally:
         layout.clear(spark)
-        for k, v in (
-            ("SPARK_GRAFT_LAYOUT_MIN_BYTES", old_min),
-            ("SPARK_GRAFT_BUCKETS", old_buckets),
-        ):
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
 
 
 def test_size_policy_skips_small_fixtures(spark):

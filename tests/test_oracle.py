@@ -74,8 +74,7 @@ def _type_class(type_name: str) -> str:
     return t
 
 
-@pytest.mark.parametrize("key", ORACLE_KEYS)
-def test_query_matches_oracle(spark, duck, key):
+def _check_against_oracle(spark, duck, key):
     sdf = QUERIES[key](spark, SF_SMOKE)
     spark_rows = sdf.collect()
     spark_cols = sdf.columns
@@ -105,6 +104,27 @@ def test_query_matches_oracle(spark, duck, key):
     d = _rows_canonical(duck_cols, duck_rows)
     mism = [i for i, (a, b) in enumerate(zip(s, d)) if a != b]
     assert not mism, f"{key}: first mismatched rows {[(s[i], d[i]) for i in mism[:3]]}"
+
+
+@pytest.mark.parametrize("key", ORACLE_KEYS)
+def test_query_matches_oracle(spark, duck, key):
+    _check_against_oracle(spark, duck, key)
+
+
+@pytest.mark.parametrize("key", ORACLE_KEYS)
+@pytest.mark.parametrize("mode", ["fresh", "at_scale"])
+def test_query_matches_oracle_in_regime(spark, duck, monkeypatch, mode, key):
+    """The plans the size gates choose, against the same oracle: ``fresh``
+    builds every key without the plan cache (the fused one-shot shapes);
+    ``at_scale`` also inflates every plan-size estimate past every gate, so
+    each key takes its distributed, 100 TB branch at fixture size."""
+    from airflow_etl_elt_spark import regime
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    if mode == "at_scale":
+        real = regime.plan_bytes
+        monkeypatch.setattr(regime, "plan_bytes", lambda df: max(real(df), 1 << 40))
+    _check_against_oracle(spark, duck, key)
 
 
 @pytest.mark.parametrize("key", sorted(ROWS_ONLY_KEYS))
@@ -242,23 +262,3 @@ def test_tpch_q10_fk_guard_all_dangling_and_duplicate(spark, tmp_path):
     with pytest.raises(Exception) as ei:
         QUERIES["tpch_q10"](spark, dup).collect()
     assert "not unique" in str(ei.value)
-
-
-def test_tpch_q10_large_regime_slim_prune_matches(spark, monkeypatch):
-    """q10's customer semi-prune is regime-gated (OPTIMIZATION r12): under
-    the orders broadcast gate the prune uses the date-windowed order
-    custkeys (a superset of the top-20 — zero extra fact-agg cost); above
-    it the exact ≤20-key slim prune keeps the broadcast bounded at any
-    scale. Both prunes must produce the identical result — force the large
-    regime by shrinking the gate via a huge plan-size estimate."""
-    from airflow_etl_elt_spark.operators import aggregates as agg
-    from airflow_etl_elt_spark.queries import QUERIES
-
-    small = QUERIES["tpch_q10"](spark, SF_SMOKE).collect()
-
-    real = agg._plan_size_bytes
-    monkeypatch.setattr(
-        agg, "_plan_size_bytes", lambda df: max(real(df), 1 << 40)
-    )
-    large = QUERIES["tpch_q10"](spark, SF_SMOKE).collect()
-    assert sorted(map(tuple, small)) == sorted(map(tuple, large))

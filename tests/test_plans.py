@@ -123,7 +123,7 @@ ARROW_OK = {
     # built-ins can't do efficiently (F.median = interpreted per-group
     # buffers, measured ~1.5x slower than the NumPy quickselect group-apply
     # at 600k rows and ~10x at 6M) — the small-input regime uses
-    # applyInPandas; the at-scale regime is pure JVM (bracketed selection).
+    # mapInArrow; the at-scale regime is pure JVM (bracketed selection).
     "grouped_stats",
     "kde_per_group",
     "dedup_minhash",
@@ -222,20 +222,20 @@ def test_ngram_split_not_reevaluated_per_element(spark):
 
 
 def test_fuse_gate_modes(spark, monkeypatch):
-    """fuse_small_input's two gates: plan-cache mode and size. Prepared
+    """regime.fuse's two gates: plan-cache mode and size. Prepared
     mode must return the input UNCHANGED (the distributed 100 TB shape);
     fresh mode fuses only below the size bound."""
-    from airflow_etl_elt_spark.operators import relational
+    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.sources.readers import read_table
 
     df = read_table(spark, SF_SMOKE, "orders").select("o_orderkey")
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "1")
-    assert relational.fuse_small_input(df) is df
+    assert regime.fuse(df) is df
     monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
-    monkeypatch.setattr(relational, "SINGLE_TASK_BYTES", 0)
-    assert relational.fuse_small_input(df) is df
-    monkeypatch.setattr(relational, "SINGLE_TASK_BYTES", 1 << 62)
-    assert "Coalesce 1" in _plan(relational.fuse_small_input(df))
+    monkeypatch.setattr(regime, "SMALL_BYTES", 0)
+    assert regime.fuse(df) is df
+    monkeypatch.setattr(regime, "SMALL_BYTES", 1 << 62)
+    assert "Coalesce 1" in _plan(regime.fuse(df))
 
 
 def test_window_topk_fresh_fuses_to_single_stage(spark):
@@ -252,9 +252,9 @@ def test_window_topk_distributed_keeps_window_parallel(spark, monkeypatch):
     sort must be a RANGE EXCHANGE — a barrier between the window and the
     sort — never a narrow coalesce(1) that would fuse the full-input
     window into a single task."""
-    from airflow_etl_elt_spark.operators import relational
+    from airflow_etl_elt_spark import regime
 
-    monkeypatch.setattr(relational, "SINGLE_TASK_BYTES", 0)  # force distributed
+    monkeypatch.setattr(regime, "SMALL_BYTES", 0)  # force distributed
     plan = _plan(QUERIES["window_topk"](spark, SF_SMOKE))
     assert "Exchange hashpartitioning(o_orderpriority" in plan
     assert "Exchange rangepartitioning" in plan

@@ -167,34 +167,24 @@ def test_surrogate_key_distributed_contiguous(spark):
     assert empty.count() == 0 and dict(empty.dtypes)["id"] == "bigint"
 
 
-def test_grouped_stats_regimes_agree_on_decimal(spark):
+def test_grouped_stats_regimes_agree_on_decimal(spark, monkeypatch):
     """r4 advisory (d): the one-task and bracketed grouped_stats regimes
     must produce the same schema and values for DECIMAL inputs (the
     bracketed path casts avg to double; the numpy path is double by
     construction; min/max stay comparable)."""
-    import os
-
-    from airflow_etl_elt_spark.operators import relational
+    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators.aggregates import grouped_stats
 
     df = spark.createDataFrame(
         [(g, f"{v}.25") for g in ("a", "b") for v in range(1, 8)],
         "g string, v string",
     ).selectExpr("g", "CAST(v AS DECIMAL(10,2)) AS v")
-    old_env = os.environ.get("SPARK_GRAFT_PLAN_CACHE")
-    old_bytes = relational.SINGLE_TASK_BYTES
-    try:
-        os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"  # fresh mode: numpy path
-        relational.SINGLE_TASK_BYTES = 1 << 62
-        bracketed = grouped_stats(df, "g", "v")
-        relational.SINGLE_TASK_BYTES = old_bytes
-        numpy_path = grouped_stats(df, "g", "v")
-    finally:
-        relational.SINGLE_TASK_BYTES = old_bytes
-        if old_env is None:
-            os.environ.pop("SPARK_GRAFT_PLAN_CACHE", None)
-        else:
-            os.environ["SPARK_GRAFT_PLAN_CACHE"] = old_env
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")  # fresh mode: numpy path
+    old_bytes = regime.SMALL_BYTES
+    monkeypatch.setattr(regime, "SMALL_BYTES", 1 << 62)
+    bracketed = grouped_stats(df, "g", "v")
+    monkeypatch.setattr(regime, "SMALL_BYTES", old_bytes)
+    numpy_path = grouped_stats(df, "g", "v")
     rows_b = sorted((tuple(r) for r in bracketed.collect()))
     rows_n = sorted((tuple(r) for r in numpy_path.collect()))
     assert len(rows_b) == len(rows_n) == 2
@@ -204,7 +194,7 @@ def test_grouped_stats_regimes_agree_on_decimal(spark):
             assert abs(float(vb) - float(vn)) < 1e-9
 
 
-def test_grouped_stats_numpy_path_high_cardinality_and_null_keys(spark):
+def test_grouped_stats_numpy_path_high_cardinality_and_null_keys(spark, monkeypatch):
     """r13 (ADVICE r12): the Arrow small-regime pass now groups via ONE
     stable argsort instead of a boolean mask per dictionary code (the mask
     loop was O(groups x rows)). Pin the semantics the rewrite must keep:
@@ -212,9 +202,8 @@ def test_grouped_stats_numpy_path_high_cardinality_and_null_keys(spark):
     folding into one None group, null values counted by cnt but excluded
     from stats — agreeing with the distributed bracketed path."""
     import math
-    import os
 
-    from airflow_etl_elt_spark.operators import relational
+    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators.aggregates import grouped_stats
 
     # 2k rows x ~1k distinct double keys (the pathological shape for the
@@ -222,23 +211,14 @@ def test_grouped_stats_numpy_path_high_cardinality_and_null_keys(spark):
     rows = [(float(i % 997), float(i)) for i in range(2000)]
     rows += [(None, 5.0), (float("nan"), 7.0), (1.0, None)]
     df = spark.createDataFrame(rows, "g double, v double")
-    old_env = os.environ.get("SPARK_GRAFT_PLAN_CACHE")
-    old_bytes = relational.SINGLE_TASK_BYTES
-    try:
-        os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"  # fresh mode
-        # createDataFrame inputs carry no Catalyst size stats (the plan
-        # estimate is the Long.MaxValue sentinel), so force each regime
-        # explicitly: gate above the sentinel -> numpy path, 0 -> bracketed
-        relational.SINGLE_TASK_BYTES = 1 << 64
-        numpy_rows = grouped_stats(df, "g", "v").collect()
-        relational.SINGLE_TASK_BYTES = 0  # force the distributed path
-        bracketed_rows = grouped_stats(df, "g", "v").collect()
-    finally:
-        relational.SINGLE_TASK_BYTES = old_bytes
-        if old_env is None:
-            os.environ.pop("SPARK_GRAFT_PLAN_CACHE", None)
-        else:
-            os.environ["SPARK_GRAFT_PLAN_CACHE"] = old_env
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")  # fresh mode
+    # createDataFrame inputs carry no Catalyst size stats (the plan
+    # estimate is the Long.MaxValue sentinel), so force each regime
+    # explicitly: gate above the sentinel -> numpy path, 0 -> bracketed
+    monkeypatch.setattr(regime, "SMALL_BYTES", 1 << 64)
+    numpy_rows = grouped_stats(df, "g", "v").collect()
+    monkeypatch.setattr(regime, "SMALL_BYTES", 0)  # force the distributed path
+    bracketed_rows = grouped_stats(df, "g", "v").collect()
 
     def canon(rs):
         out = {}
@@ -274,29 +254,19 @@ def test_grouped_stats_numpy_path_high_cardinality_and_null_keys(spark):
     assert abs(nrows[1.0][0] - (1.0 + 998.0 + 1995.0) / 3) < 1e-9
 
 
-def test_grouped_stats_regime_schemas_identical(spark):
-    import os
-
-    from airflow_etl_elt_spark.operators import relational
+def test_grouped_stats_regime_schemas_identical(spark, monkeypatch):
+    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators.aggregates import grouped_stats
 
     df = spark.createDataFrame(
         [("a", "1.25"), ("a", "2.50"), ("b", "3.75")], "g string, v string"
     ).selectExpr("g", "CAST(v AS DECIMAL(10,2)) AS v")
-    old_env = os.environ.get("SPARK_GRAFT_PLAN_CACHE")
-    old_bytes = relational.SINGLE_TASK_BYTES
-    try:
-        os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"
-        relational.SINGLE_TASK_BYTES = 1 << 62
-        dt_b = grouped_stats(df, "g", "v").dtypes
-        relational.SINGLE_TASK_BYTES = old_bytes
-        dt_n = grouped_stats(df, "g", "v").dtypes
-    finally:
-        relational.SINGLE_TASK_BYTES = old_bytes
-        if old_env is None:
-            os.environ.pop("SPARK_GRAFT_PLAN_CACHE", None)
-        else:
-            os.environ["SPARK_GRAFT_PLAN_CACHE"] = old_env
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    old_bytes = regime.SMALL_BYTES
+    monkeypatch.setattr(regime, "SMALL_BYTES", 1 << 62)
+    dt_b = grouped_stats(df, "g", "v").dtypes
+    monkeypatch.setattr(regime, "SMALL_BYTES", old_bytes)
+    dt_n = grouped_stats(df, "g", "v").dtypes
     assert dt_b == dt_n
 
 
@@ -497,10 +467,11 @@ def test_exact_median_histogram_regimes(spark, monkeypatch):
     bootstrap, no-stats fallback, deliberately WRONG bounds (must stay
     exact — bounds are planning hints, membership/ranks never depend on
     them), and forced multi-level refinement."""
+    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators import aggregates
     from airflow_etl_elt_spark.sources.readers import read_table, table_column_stats
 
-    monkeypatch.setattr(aggregates, "_MEDIAN_SMALL_BYTES", 1)  # force large
+    monkeypatch.setattr(regime, "BUFFER_BYTES", 1)  # force large
     li = read_table(spark, "/root/testdata/sf0.001", "lineitem")
     g, v = "l_returnflag", "l_extendedprice"
     truth = {
@@ -539,9 +510,10 @@ def test_exact_median_histogram_edge_shapes(spark, monkeypatch):
     value-compressed selection."""
     import math
 
+    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators import aggregates
 
-    monkeypatch.setattr(aggregates, "_MEDIAN_SMALL_BYTES", 1)
+    monkeypatch.setattr(regime, "BUFFER_BYTES", 1)
     monkeypatch.setattr(aggregates, "_SELECT_MAX_ROWS", 2)
     rows = (
         [("even", float(x)) for x in (1, 2, 3, 4)]
