@@ -113,17 +113,11 @@ def dec_avg(col) -> F.Column:
     return dec_sum(c) / F.count(c)
 
 
-def _grid_long(col) -> F.Column:
-    """The 1e-6-grid addend as a primitive LONG (``floor`` on a double is
-    LongType) — same grid as dec_sum, no per-row decimal."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * F.lit(1e6) + F.lit(0.5))
-
-
 def _grid_long_sql(expr_sql: str) -> str:
-    """SQL-text twin of ``_grid_long`` — parses to the identical Catalyst
-    tree (``FLOOR(((x * 1000000.0) + 0.5))``; ``1e6``/``0.5D`` are DOUBLE
-    literals, same as ``F.lit``)."""
+    """The 1e-6-grid addend of SQL expression ``expr_sql`` as a primitive
+    LONG (``FLOOR`` of a DOUBLE is LongType) — same grid as dec_sum, no
+    per-row decimal (``1e6``/``0.5D`` are DOUBLE literals, same as
+    ``F.lit``)."""
     return f"FLOOR((({expr_sql}) * 1e6) + 0.5D)"
 
 
@@ -145,22 +139,16 @@ def dec_sum_sql(expr_sql: str) -> str:
 _LONG_SUM_GUARD = float(2**62)
 
 
-def _guard_or_raise(ok: F.Column, value: F.Column, where: str) -> F.Column:
-    """``value`` when the overflow guard holds, else fail the query loudly.
-
-    Belt-and-suspenders: under this repo's sessions (Spark 4 ANSI default
-    ON) an actual long-sum overflow already raises ARITHMETIC_OVERFLOW
-    inside the aggregate, so a silent wrap is impossible; this explicit
-    guard keeps the exactness contract even if a caller's session disables
-    ANSI, and names the operator in the error."""
-    return F.when(
-        ok, value
-    ).otherwise(
-        F.expr(
-            f"raise_error('{where}: long grid-sum overflow guard tripped — "
-            "use dec_sum (decimal per-addend) for this input scale')"
-        )
-    )
+def _require_sql(where: str, *maps) -> None:
+    """The grid-sum builders take SQL expression text only: a Column value
+    raises here, with the builder named."""
+    for m in maps:
+        for name, v in m.items():
+            if not isinstance(v, str):
+                raise TypeError(
+                    f"{where}: {name!r} must be SQL expression text, "
+                    f"got {type(v).__name__}"
+                )
 
 
 def _assert_agg_names_disjoint(where: str, group_cols, sums, *extra_maps):
@@ -195,8 +183,8 @@ def _assert_agg_names_disjoint(where: str, group_cols, sums, *extra_maps):
 def two_tier_dec_agg(
     df: DataFrame,
     group_cols: list[str],
-    sums: dict[str, "F.Column | str"],
-    counts: dict[str, "F.Column | str"] | None = None,
+    sums: dict[str, str],
+    counts: dict[str, str] | None = None,
     count_star: str | None = None,
 ) -> DataFrame:
     """Exact order-independent grid sums at primitive-long partial speed.
@@ -230,12 +218,15 @@ def two_tier_dec_agg(
     keys the extra exchange re-pays the full state volume — use
     ``guarded_long_sum_agg`` there instead.
 
+    ``sums``/``counts`` values are SQL expression text (a bare quoted
+    column name is the degenerate case); a Column raises ``TypeError``.
     ``counts`` adds non-null counts (tier-1 count(col), tier-2 sum) named
     by key; ``count_star`` adds count(*) under that name. Output columns:
     group_cols, sums (double, /1e6), count_star, counts. Compose averages
     caller-side as sum_col / count_col — identical to dec_avg.
     """
     counts = counts or {}
+    _require_sql("two_tier_dec_agg", sums, counts)
     _assert_agg_names_disjoint(
         "two_tier_dec_agg",
         group_cols,
@@ -243,78 +234,19 @@ def two_tier_dec_agg(
         counts,
         [count_star] if count_star else [],
     )
-    # Fast build path (OPTIMIZATION r12): when every sums/counts value is a
-    # SQL string, compose the whole aggregate as JVM-parsed expression text
-    # — one py4j round trip per output instead of one per Column operation.
-    # The nested-Column form of this very function cost ~1,700 py4j calls
-    # (~0.3 s of driver time) per tpch_q1 build; the string form parses to
-    # the IDENTICAL Catalyst trees (proved byte-equal on q1's output), so
-    # results and oracles are untouched. Column inputs keep the legacy path.
+    # SQL-text build (OPTIMIZATION r12): the whole aggregate is JVM-parsed
+    # expression text — one py4j round trip per output instead of one per
+    # Column operation (the nested-Column form cost ~1,700 py4j calls,
+    # ~0.3 s of driver time, per tpch_q1 build for the identical trees).
     # An INPUT column named __pid would collide with the tier-1 partition-id
-    # staging alias on either path (`selectExpr('*', ...)` DUPLICATES rather
-    # than replaces it — ADVICE r12): raise with the operator named instead
-    # of an opaque ambiguity error downstream.
+    # staging alias (`selectExpr('*', ...)` DUPLICATES rather than replaces
+    # it — ADVICE r12): raise with the operator named instead of an opaque
+    # ambiguity error downstream.
     if "__pid" in df.columns:
         raise ValueError(
             "two_tier_dec_agg: input already has a __pid column, which "
             "collides with the tier-1 partition-id staging alias"
         )
-    if all(isinstance(c, str) for c in sums.values()) and all(
-        isinstance(c, str) for c in counts.values()
-    ):
-        return _two_tier_dec_agg_sql(df, group_cols, sums, counts, count_star)
-    grids = {n: _grid_long(c) for n, c in sums.items()}
-    gcols = [quote_ident(g) for g in group_cols]
-    t1 = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy(*gcols, "__pid")
-        .agg(
-            *[F.sum(g).alias(f"__s_{n}") for n, g in grids.items()],
-            *[F.max(F.abs(g)).alias(f"__m_{n}") for n, g in grids.items()],
-            F.count(F.lit(1)).alias("__cstar"),
-            *[
-                F.count(F.col(c) if isinstance(c, str) else c).alias(f"__c_{n}")
-                for n, c in counts.items()
-            ],
-        )
-    )
-    maxes = [F.coalesce(F.col(quote_ident(f"__m_{n}")), F.lit(0)) for n in grids]
-    biggest = maxes[0] if len(maxes) == 1 else F.greatest(*maxes)
-    ok = (F.col("__cstar").cast("double") * biggest.cast("double")) < F.lit(
-        _LONG_SUM_GUARD
-    )
-    checked = t1.select(
-        *gcols,
-        *[
-            _guard_or_raise(ok, F.col(quote_ident(f"__s_{n}")), "two_tier_dec_agg")
-            .cast("decimal(20,0)")
-            .alias(f"__s_{n}")
-            for n in grids
-        ],
-        F.col("__cstar"),
-        *[F.col(quote_ident(f"__c_{n}")) for n in counts],
-    )
-    return checked.groupBy(*gcols).agg(
-        *[
-            (F.sum(quote_ident(f"__s_{n}")).cast("double") / F.lit(1e6)).alias(n)
-            for n in grids
-        ],
-        *([F.sum("__cstar").alias(count_star)] if count_star else []),
-        *[F.sum(quote_ident(f"__c_{n}")).alias(n) for n in counts],
-    )
-
-
-def _two_tier_dec_agg_sql(
-    df: DataFrame,
-    group_cols: list[str],
-    sums: dict[str, str],
-    counts: dict[str, str],
-    count_star: str | None,
-) -> DataFrame:
-    """String-composed twin of ``two_tier_dec_agg`` (sums/counts values are
-    SQL expression text; a bare column name is the degenerate case). Parses
-    to the same Catalyst trees as the Column form — same plan, same values,
-    same guard semantics — at a fraction of the driver-side build cost."""
     gcols = [quote_ident(g) for g in group_cols]
     # Quoted identifiers of the output names and their staging aliases.
     out = {n: quote_ident(n) for n in (*sums, *counts)}
@@ -368,7 +300,7 @@ def _two_tier_dec_agg_sql(
 def guarded_long_sum_agg(
     df: DataFrame,
     group_cols: list[str],
-    sums: dict[str, "F.Column | str"],
+    sums: dict[str, str],
     extras: dict[str, "F.Column"] | None = None,
 ) -> DataFrame:
     """Single-tier exact grid sum in primitive LONG, overflow-guarded.
@@ -388,74 +320,49 @@ def guarded_long_sum_agg(
     any SF); a group big enough to trip it should use dec_sum or the
     two-tier form.
 
+    ``sums`` values are SQL expression text (a Column raises ``TypeError``).
     ``extras`` adds further aggregate expressions (e.g. a count) that ride
     the SAME hash-aggregate state — no extra pass, no extra exchange — and
     appear in the output under their key names.
     """
     extras = extras or {}
+    _require_sql("guarded_long_sum_agg", sums)
     _assert_agg_names_disjoint(
         "guarded_long_sum_agg", group_cols, sums, extras
     )
-    # Fast build path (OPTIMIZATION r12) — see _two_tier_dec_agg_sql: SQL
-    # text parses to the identical trees with ~10x fewer py4j round trips.
-    # Column-valued extras ride along unchanged in either path.
+    # SQL-text build (OPTIMIZATION r12, see two_tier_dec_agg): ~10x fewer
+    # py4j round trips than the nested-Column form of the same trees.
+    # Column-valued extras ride along unchanged.
     gcols = [quote_ident(g) for g in group_cols]
-    if all(isinstance(c, str) for c in sums.values()):
-        s_ = {n: quote_ident(f"__s_{n}") for n in sums}
-        m_ = {n: quote_ident(f"__m_{n}") for n in sums}
-        t = df.groupBy(*gcols).agg(
-            *[F.expr(f"sum({_grid_long_sql(s)}) AS {s_[n]}") for n, s in sums.items()],
-            *[
-                F.expr(f"max(abs({_grid_long_sql(s)})) AS {m_[n]}")
-                for n, s in sums.items()
-            ],
-            F.expr("count(1) AS __cstar"),
-            *[e.alias(n) for n, e in extras.items()],
-        )
-        maxes_sql = ", ".join(f"coalesce({m_[n]}, 0)" for n in sums)
-        biggest_sql = maxes_sql if len(sums) == 1 else f"greatest({maxes_sql})"
-        ok_sql = (
-            f"(CAST(__cstar AS DOUBLE) * CAST({biggest_sql} AS DOUBLE))"
-            f" < {_LONG_SUM_GUARD!r}D"
-        )
-        guard_msg = (
-            "guarded_long_sum_agg: long grid-sum overflow guard tripped — "
-            "use dec_sum (decimal per-addend) for this input scale"
-        )
-        return t.selectExpr(
-            *gcols,
-            *[
-                f"(CAST(CASE WHEN {ok_sql} THEN {s_[n]} ELSE "
-                f"raise_error('{guard_msg}') END AS DOUBLE) / 1e6) AS {quote_ident(n)}"
-                for n in sums
-            ],
-            *[quote_ident(n) for n in extras],
-        )
-    grids = {n: _grid_long(c) for n, c in sums.items()}
+    s_ = {n: quote_ident(f"__s_{n}") for n in sums}
+    m_ = {n: quote_ident(f"__m_{n}") for n in sums}
     t = df.groupBy(*gcols).agg(
-        *[F.sum(g).alias(f"__s_{n}") for n, g in grids.items()],
-        *[F.max(F.abs(g)).alias(f"__m_{n}") for n, g in grids.items()],
-        F.count(F.lit(1)).alias("__cstar"),
+        *[F.expr(f"sum({_grid_long_sql(s)}) AS {s_[n]}") for n, s in sums.items()],
+        *[
+            F.expr(f"max(abs({_grid_long_sql(s)})) AS {m_[n]}")
+            for n, s in sums.items()
+        ],
+        F.expr("count(1) AS __cstar"),
         *[e.alias(n) for n, e in extras.items()],
     )
-    maxes = [F.coalesce(F.col(quote_ident(f"__m_{n}")), F.lit(0)) for n in grids]
-    biggest = maxes[0] if len(maxes) == 1 else F.greatest(*maxes)
-    ok = (F.col("__cstar").cast("double") * biggest.cast("double")) < F.lit(
-        _LONG_SUM_GUARD
+    maxes_sql = ", ".join(f"coalesce({m_[n]}, 0)" for n in sums)
+    biggest_sql = maxes_sql if len(sums) == 1 else f"greatest({maxes_sql})"
+    ok_sql = (
+        f"(CAST(__cstar AS DOUBLE) * CAST({biggest_sql} AS DOUBLE))"
+        f" < {_LONG_SUM_GUARD!r}D"
     )
-    return t.select(
+    guard_msg = (
+        "guarded_long_sum_agg: long grid-sum overflow guard tripped — "
+        "use dec_sum (decimal per-addend) for this input scale"
+    )
+    return t.selectExpr(
         *gcols,
         *[
-            (
-                _guard_or_raise(
-                    ok, F.col(quote_ident(f"__s_{n}")), "guarded_long_sum_agg"
-                )
-                .cast("double")
-                / F.lit(1e6)
-            ).alias(n)
-            for n in grids
+            f"(CAST(CASE WHEN {ok_sql} THEN {s_[n]} ELSE "
+            f"raise_error('{guard_msg}') END AS DOUBLE) / 1e6) AS {quote_ident(n)}"
+            for n in sums
         ],
-        *[F.col(quote_ident(n)) for n in extras],
+        *[quote_ident(n) for n in extras],
     )
 
 
@@ -521,12 +428,8 @@ def grouped_exact_median(
     vals = df.filter(F.col(value_col).isNotNull()).select(
         group_col, F.col(value_col).cast("double").alias("__v")
     )
-    # Cost-based strategy selection (same statistic Catalyst uses for
-    # broadcast decisions): small inputs take the one-shuffle F.median path —
-    # buffering a few hundred MB of one group in a single aggregation state
-    # is safe and saves the extra bounds/refinement scans.
-    if regime.plan_bytes(vals) < regime.BUFFER_BYTES:
-        return vals.groupBy(group_col).agg(F.median("__v").alias("median_val"))
+    # No small-input F.median shortcut: at sf0.1 lineitem it cost 3.08 vs
+    # 1.36 CPU-s per fresh call, slower on every one of 20 pairs.
     tag = f"median:{group_col}:{value_col}"
     if _usable_bounds(value_bounds):
         return _exact_median_from_bounds(
@@ -948,6 +851,8 @@ def grouped_stats(
     # off, 120k-row lineitem, 3 warm-ups + 20 timed calls, process-tree CPU:
     #   numpy     0.60-0.63 CPU-s/op   0.27-0.30 s wall/op
     #   F.median  0.92-0.95 CPU-s/op   0.51-0.53 s wall/op
+    # Re-won against its own at-scale branch, fresh, perfbench scale 0.02,
+    # 20 pairs: 0.35 vs 1.71 CPU-s and 0.21 vs 0.75 s wall (lower in 20).
     if regime.fresh() and (
         regime.plan_bytes(df.select(group_col, value_col)) < regime.SMALL_BYTES
     ):
@@ -1219,6 +1124,9 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> Dat
     # on this 7-aggregate key) now run only on the ≤ groups × partitions
     # tier-1 states (VERDICT r9 next-step 1). Sums as SQL text hit the
     # string-composed fast build path (same trees, ~3x cheaper build).
+    # The fuse re-won fresh at perfbench scale 0.02, 40 pairs: 0.224 vs
+    # 0.277 s wall (lower in 39); it does not fire at sf0.1 (lineitem is
+    # past SMALL_BYTES there).
     base = two_tier_dec_agg(
         regime.fuse(
             lineitem.filter(

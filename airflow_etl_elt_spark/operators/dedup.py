@@ -114,8 +114,8 @@ def exact_dedup(documents: DataFrame, text_col: str = "text", id_col: str = "doc
     Mode-keyed plan shape (see ``regime.fuse``): prepared
     mode stays distributed at every size (execution-only at sf0.1: 0.055 s
     distributed vs 0.078 s single-task); FRESH builds of small inputs fuse
-    to one stage (measured 0.11 s vs 0.15 s at sf0.1 — one job instead of
-    two plus an exchange).
+    to one stage (one job instead of two plus an exchange). Re-won fresh,
+    sf0.1, 20 pairs: 0.161 vs 0.208 s wall (lower in 20).
     """
     documents = regime.fuse(documents.select(id_col, text_col))
     return (
@@ -251,7 +251,13 @@ def minhash_signatures(
     # trim-based emptiness test diverges between Java and DuckDB on
     # unicode whitespace (see text.ws_tokens)
     nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    return regime.fan_out(nonempty.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    # A small corpus stays on one Python worker. Its forced-branch A/B
+    # (perfbench scale 0.02, fresh, 20 pairs of 3-call means: 0.707 vs
+    # 0.913 CPU-s, lower in 18, gap under the IQR) missed the keep bar, but
+    # fanning out raised perfbench sql_adhoc peak_rss_mb from 1367 to
+    # 1822 MB (seed 800), past that metric's bound.
+    src = nonempty.select(F.col(id_col).alias("id"), F.col(text_col))
+    return regime.fan_out(src, min_bytes=regime.SMALL_BYTES).select(
         "id", sig_udf(text_col).alias("sig")
     )
 
@@ -351,17 +357,17 @@ def minhash_incremental_pairs(
     shingle_k: int = 5,
     threshold: float = 0.5,
     seed: int = 42,
-    broadcast_increment: "bool | None" = None,
+    broadcast_increment: bool = False,
 ) -> DataFrame:
     """Near-dup pairs between an INCREMENT and a persisted corpus index
     (``minhash_index_write``): (id_new, id_corpus, est_jaccard),
     est_jaccard ≥ ``threshold``.
 
-    ``broadcast_increment``: None (default) gates on the Catalyst size
-    estimate of the increment projection; pass True/False to decide
-    explicitly — a streaming foreachBatch caller passes True because its
+    ``broadcast_increment``: pass True when the increment is bounded by
+    construction — a streaming foreachBatch caller does, because its
     micro-batch frames carry no usable statistics yet are bounded by the
-    trigger size by construction.
+    trigger size. The default leaves every join to the planner: a
+    size-gated broadcast tied it at sf0.1 in both plan-cache modes.
 
     This is the scale path one-shot ``minhash_lsh_pairs`` cannot be: a
     daily increment against an already-deduped 100 TB corpus must not
@@ -369,16 +375,16 @@ def minhash_incremental_pairs(
 
     - the increment pays the signature UDF over ITS text only;
     - band keys are derived identically on both sides (``_banded_ids``)
-      and equi-joined — when the increment is small (the normal case) its
+      and equi-joined — with ``broadcast_increment`` the increment's
       banded frame is BROADCAST, so candidate generation is one map-side
       pass over the index with zero index shuffle;
     - the verify join re-reads only the surviving candidates' signatures:
-      the increment's signature frame broadcasts (bounded by the
-      increment), while the pairs ⋈ corpus-sigs join stays
-      planner-decided — pair cardinality scales with corpus band matches,
-      not increment bytes, so pairs are never broadcast (AQE upgrades the
-      join at runtime when they turn out small). Above the gate every
-      join keeps the distributed shape — correct at any size.
+      with ``broadcast_increment`` the increment's signature frame
+      broadcasts (bounded by the increment), while the pairs ⋈ corpus-sigs
+      join stays planner-decided — pair cardinality scales with corpus
+      band matches, not increment bytes, so pairs are never broadcast (AQE
+      upgrades the join at runtime when they turn out small). Without it
+      every join keeps the distributed shape — correct at any size.
 
     Same sketch parameters must be passed as at index-build time (the
     signature function is deterministic in them)."""
@@ -388,16 +394,10 @@ def minhash_incremental_pairs(
         "minhash_inc_sigs",
         minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_k, seed),
     )
-    small_increment = (
-        broadcast_increment
-        if broadcast_increment is not None
-        else regime.plan_bytes(new_docs.select(id_col, text_col)) < regime.SMALL_BYTES
-    )
-
     new_banded = _banded_ids(new_sigs, bands, rows_per_band).select(
         "band_id", "band_sig", F.col("id").alias("id_new")
     )
-    if small_increment:
+    if broadcast_increment:
         new_banded = F.broadcast(new_banded)
     idx_banded = _banded_ids(idx, bands, rows_per_band).select(
         "band_id", "band_sig", F.col("id").alias("id_corpus")
@@ -418,7 +418,7 @@ def minhash_incremental_pairs(
     # The pairs ⋈ corpus-sigs join stays planner-decided; AQE upgrades it
     # from accurate runtime sizes when pairs turn out small.
     sig_n = new_sigs.select(F.col("id").alias("id_new"), F.col("sig").alias("sig_a"))
-    if small_increment:
+    if broadcast_increment:
         sig_n = F.broadcast(sig_n)
     pj = pairs.join(sig_n, "id_new")
     sig_c = idx.select(F.col("id").alias("id_corpus"), F.col("sig").alias("sig_b"))
@@ -478,19 +478,6 @@ def minhash_lsh_pairs(
     # ONLY the doc id — at scale the band join shuffles ids, never the
     # 64-long signatures (16x less traffic than joining sigs through).
     banded = _banded_ids(sigs, bands, rows_per_band)
-    # Small-input broadcast regime for the verify joins (gated on the
-    # DOCUMENTS projection — the post-UDF band frame has no usable Catalyst
-    # estimate): broadcasting the persisted signature frame kills both id
-    # exchanges after the pair expansion (measured 3.1→2.1 s fresh at
-    # sf0.1; a coalesce(1) band-fusion variant was measured and REJECTED —
-    # 11 s: the single task serializes the band self-join AND recomputes
-    # the unshared band projection twice). Large inputs keep the
-    # distributed id-join shape — signatures at corpus scale outgrow any
-    # broadcast.
-    small_input = (
-        regime.plan_bytes(documents.select(id_col, text_col)) < regime.SMALL_BYTES
-    )
-
     # Bucket = (band_id, band_sig). Pair expansion inside each bucket.
     left = banded.select("band_id", "band_sig", F.col("id").alias("id_a"))
     right = banded.select("band_id", "band_sig", F.col("id").alias("id_b"))
@@ -512,26 +499,11 @@ def minhash_lsh_pairs(
         "size(filter(zip_with(sig_a, sig_b, (x, y) -> CAST(x = y AS INT)), "
         "v -> v = 1))"
     )
-    if small_input:
-        # ONE broadcast, attached twice (OPTIMIZATION r12): aliasing the
-        # sig frame per side made the two BroadcastExchanges canonically
-        # DIFFERENT, so both built + collected independently (two jobs).
-        # Joining the identical broadcast child twice and renaming above
-        # the join lets AQE reuse a single built relation; results proved
-        # equal in the committed A/B.
-        s = F.broadcast(sigs)
-        pj = (
-            pairs.join(s, pairs.id_a == s.id)
-            .withColumnRenamed("sig", "sig_a")
-            .drop("id")
-            .join(s, F.col("id_b") == s.id)
-            .withColumnRenamed("sig", "sig_b")
-            .drop("id")
-        )
-    else:
-        sig_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-        sig_b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-        pj = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
+    # Verify joins stay planner-decided (AQE broadcasts a small side from
+    # runtime sizes); an explicit small-input broadcast tied this shape.
+    sig_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sig_b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    pj = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
     return (
         pj.selectExpr(
             "id_a",

@@ -37,28 +37,24 @@ def revenue_by_segment(orders: DataFrame, customer: DataFrame) -> DataFrame:
     """orders ⋈ customer → revenue + order count per market segment.
 
     customer is the smaller side at every scale factor (1 customer : ~10
-    orders in TPC-H shape). Cost-gated explicit broadcast (same 64 MB bound
-    as tpch_q5's customer move): below it the broadcast kills the custkey
-    shuffle of BOTH sides; above it — customer is a fact at 100 TB — the
-    planner's shuffle join stands. Aggregation is partial before the final
-    exchange on c_mktsegment; the output is bounded by |segments| (5), so
-    the final order uses ``ordered_small`` (no range exchange).
+    orders in TPC-H shape); the planner broadcasts it below the session's
+    ``autoBroadcastJoinThreshold`` and shuffle-joins it above (customer is
+    a fact at 100 TB). Aggregation is partial before the final exchange on
+    c_mktsegment; the output is bounded by |segments| (5), so the final
+    order uses ``ordered_small`` (no range exchange).
     """
     from airflow_etl_elt_spark.operators.aggregates import two_tier_dec_agg
     from airflow_etl_elt_spark.operators.relational import ordered_small
 
-    if regime.plan_bytes(customer) < 64 * 1024 * 1024:
-        cc = F.broadcast(customer)
-        # broadcast probe + fused-small stream side = one fresh-build stage
-        orders = regime.fuse(orders.select("o_custkey", "o_totalprice"))
-    else:
-        cc = customer
+    # broadcast customer + fused-small stream side = one fresh-build stage.
+    # Re-won fresh, sf0.1, 20 pairs: 0.252 vs 0.334 s wall (lower in 19).
+    orders = regime.fuse(orders.select("o_custkey", "o_totalprice"))
     # order-independent exact grid sum, long partials / decimal merge
     # (bit-identical to dec_sum; aggregates.two_tier_dec_agg — 5 segments
     # is exactly the low-cardinality shape the two-tier form exists for)
     return ordered_small(
         two_tier_dec_agg(
-            orders.join(cc, orders.o_custkey == customer.c_custkey),
+            orders.join(customer, orders.o_custkey == customer.c_custkey),
             ["c_mktsegment"],
             sums={"total_price": "o_totalprice"},
             count_star="order_cnt",
@@ -80,14 +76,9 @@ def revenue_by_priority(
     broadcast or shuffle-hash the small-estimate orders side, re-paying a
     hash-relation build every fresh run and bypassing the bucket layout.
 
-    Otherwise, cost-based build-side strategy (same Catalyst statistic the
-    optimizer uses for broadcasts): when the pruned orders side is provably
-    small, hint SHUFFLE_HASH — the hash build beats both sort-merge (no
-    sort) and broadcast (no driver serialization of 100k+ rows; measured
-    0.49 s vs 0.71 s default at sf0.1). Above the threshold leave the
-    planner alone: per-partition hash builds of an unbounded fact side can
-    exhaust reducer memory, so sort-merge is the safe default at scale;
-    AQE handles skewed orderkeys by splitting oversized partitions.
+    Otherwise the planner picks the join (sort-merge at scale; AQE splits
+    skewed orderkeys), except in a fresh build of a small input, where both
+    sides fuse to one task and hash-join (below).
     """
     from airflow_etl_elt_spark.operators.aggregates import two_tier_dec_agg
 
@@ -105,12 +96,12 @@ def revenue_by_priority(
         ).orderBy("o_orderpriority")
 
     build = orders
-    if regime.plan_bytes(orders) < regime.BUFFER_BYTES:
-        build = orders.hint("shuffle_hash")
     # Fresh-build mode: fusing BOTH small sides makes them SinglePartition-
     # compatible, so the join and the rollup plan no exchange at all (one
     # stage). Fusing only one side would just move the exchange; the size
-    # gate keys off lineitem (always the larger side here).
+    # gate keys off lineitem (always the larger side here). Re-won fresh,
+    # sf0.1, 20 pairs: 0.86 vs 1.55 CPU-s (lower in 20) unfused, and 0.765
+    # vs 1.37 CPU-s (lower in 20) with lineitem alone fused.
     li_pruned = lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
     li_fused = regime.fuse(li_pruned)
     if li_fused is not li_pruned:
@@ -204,7 +195,8 @@ def top_revenue_orders(
     first at real scale. So the broadcast decision is made HERE, cost-based,
     from an honest bound Catalyst doesn't track: segment_orders is at most
     the orders scan, so broadcast it iff that scan's size estimate fits the
-    session broadcast threshold. At 100 TB orders exceeds it and the join
+    broadcast bound (``regime.BROADCAST_BYTES``, the session's
+    ``autoBroadcastJoinThreshold``). At 100 TB orders exceeds it and the join
     degrades to the correct shuffle join (which AQE may still upgrade from
     ACCURATE runtime sizes). orderBy+limit compiles to
     TakeOrderedAndProject — each partition keeps its local top-k, the driver
@@ -215,17 +207,13 @@ def top_revenue_orders(
         .join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .select("o_orderkey", "o_orderdate")
     )
-    threshold = int(
-        orders.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        .removesuffix("b")
-    )
     lineitem = lineitem.select("l_orderkey", "l_extendedprice", "l_discount")
     if colocated:
         # Both facts bucketed+sorted on the orderkey (the at-rest layout):
         # customer broadcasts INTO the bucketed orders scan (preserving its
         # partitioning/ordering), and the merge hint forces the SMJ that the
         # bucket metadata makes exchange-free AND sort-free — no fact-sized
-        # hash relation is ever built, fresh or prepared. The broadcast/fuse
+        # hash relation is ever built, fresh or prepared. The broadcast
         # branch below is strictly worse here: it re-pays a segment-orders
         # hash build every fresh run.
         segment_orders = (
@@ -234,12 +222,13 @@ def top_revenue_orders(
             .select("o_orderkey", "o_orderdate")
             .hint("merge")
         )
-    elif 0 < regime.plan_bytes(orders.select("o_orderkey", "o_orderdate")) < threshold:
+    elif 0 < regime.plan_bytes(
+        orders.select("o_orderkey", "o_orderdate")
+    ) < regime.BROADCAST_BYTES:
+        # Re-won fresh, scale 0.02, 20 pairs of 3-call means: 0.333 vs
+        # 0.359 s wall (lower in 20); sf0.1: 0.536 vs 0.908 s (lower in 20).
+        # A prepared plan ties (lower in 10 of 20).
         segment_orders = F.broadcast(segment_orders)
-        # With the probe side broadcast, a fused-small lineitem turns the
-        # whole query into one stage in fresh-build mode (gate no-ops in
-        # prepared mode and above the size bound — the distributed shape).
-        lineitem = regime.fuse(lineitem)
     from airflow_etl_elt_spark.operators.aggregates import guarded_long_sum_agg
 
     # guarded_long_sum_agg: bit-identical to dec_sum's exact grid sum, but

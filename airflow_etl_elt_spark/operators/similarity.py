@@ -97,41 +97,30 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to ``query_vec``.
 
     One scan, no shuffle until the final top-k merge; ties broken by id for
     determinism. Cosine of a zero vector is defined as 0 here.
 
-    Two scoring paths, both distributed and collect-free; ``impl="auto"``
-    (default) picks by the Catalyst size estimate:
+    Two scoring paths, both collect-free, keyed on ``regime.fuse``:
 
-    - ``impl="blas"``: an Arrow-batched pandas_udf computes the whole
-      batch's scores as one NumPy matvec. Faster at interactive corpus
-      sizes (measured ties or wins up to ~20k x 64-dim vectors), and the
-      advantage grows with DIMENSION (the HOF fold is interpreted per
-      element, NumPy is BLAS).
-    - ``impl="jvm"``: built-in higher-order functions only — no Python
-      workers in the plan at all. Wins once the Arrow export of the vector
-      column dominates (measured r8 at the 100x replica, 200k vectors:
-      0.37 vs 0.45 s — ~100 MB of column traffic the JVM path never pays),
-      and wherever pure-JVM plans are a deployment requirement. ``auto``
-      switches at a 16 MB plan estimate (between the measured 10x tie at
-      4.3 MB and the 100x jvm win at ~43 MB).
-
-    Cost-gated single-partition regime (same rationale as ``exact_dedup``):
-    a dimension-sized corpus scores and top-k's in ONE task — the
-    TakeOrderedAndProject then has a single partition to merge, so the whole
-    query is one job. Above the bound the scan stays partitioned and
-    TakeOrderedAndProject merges per-partition top-k's — the 100 TB path.
+    - **blas** (a FRESH build of a corpus under ``regime.SMALL_BYTES``): the
+      corpus fuses to one task and an Arrow-batched pandas_udf scores each
+      batch as one NumPy matvec, so the whole query is one job. Re-won
+      fresh against jvm, perfbench scale 0.02, 20 pairs: 0.154 vs 0.220 s
+      wall (lower in 19), 0.24 vs 0.36 CPU-s.
+    - **jvm** (prepared mode, or any corpus above the bound — the 100 TB
+      path): built-in higher-order functions only, no Python workers in the
+      plan, and the scan stays partitioned; TakeOrderedAndProject merges
+      per-partition top-k's. Re-executing a prepared plan it beat fused
+      blas (0.063 vs 0.102 s wall, blas lower in 4 of 20, same scale), and
+      at the 100x replica it skips ~100 MB of Arrow column traffic (r8:
+      0.37 vs 0.45 s).
     """
-    est = regime.plan_bytes(embeddings.select(id_col, vec_col))
-    if est < regime.SMALL_BYTES:
-        embeddings = embeddings.coalesce(1)
-    if impl == "auto":
-        impl = "jvm" if est >= 16 * 1024 * 1024 else "blas"
-    if impl == "blas":
+    src = embeddings.select(id_col, vec_col)
+    fused = regime.fuse(src)
+    if fused is not src:
         # UDF object memoized per query vector (OPTIMIZATION r13):
         # pandas_udf() registration costs ~40 ms of py4j per call and the
         # closure is a pure function of query_vec.
@@ -146,7 +135,7 @@ def cosine_topk(
             _dot(F.col(vec_col), q) / denom
         )
     return (
-        embeddings.select(F.col(id_col), cos.alias("cosine"))
+        fused.select(F.col(id_col), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
     )
@@ -199,8 +188,6 @@ def cosine_topk_batch(
     Qn = Q / qn[:, None]
 
     src = embeddings.select(id_col, vec_col)
-    if regime.plan_bytes(src) < regime.SMALL_BYTES:
-        src = src.coalesce(1)
 
     out_schema = f"{query_id_col} {qid_t}, {id_col} {id_t}, cosine double"
     kk = k

@@ -53,12 +53,6 @@ def ws_strip(col):
     )
 
 
-#: DuckDB twins of ws_tokens/ws_strip, for splicing into oracle SQL.
-WS_TOKENS_SQL = (
-    "list_filter(string_split_regex({x}, '[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')"
-)
-
-
 def word_separated(col):
     """Engine-portable replacement for ``\\b``-bounded word matching: Java
     and RE2 DISAGREE on word boundaries adjacent to non-ASCII letters
@@ -103,10 +97,6 @@ def ascii_lower(col):
 ASCII_LOWER_SQL = (
     "translate({x}, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',"
     " 'abcdefghijklmnopqrstuvwxyz')"
-)
-WS_STRIP_SQL = (
-    "regexp_replace(regexp_replace({x}, '^[ \\t\\n\\x0B\\f\\r]+', ''),"
-    " '[ \\t\\n\\x0B\\f\\r]+$', '')"
 )
 
 # Tiny per-language marker-word sets for the n-gram/stopword heuristic.

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airflow_etl_elt_spark import regime
 from airflow_etl_elt_spark.operators.aggregates import dec_sum
 
 
@@ -56,11 +55,6 @@ def hourly_agg(events: DataFrame) -> DataFrame:
     """
     from airflow_etl_elt_spark.operators.relational import ordered_small
 
-    # scale 0.5: this projection is nearly all numeric, so the
-    # compressed estimate under-reports decode rows — measured crossover
-    # sits between sf0.1 (1.1 MB est, fused wins) and the 10x replica
-    # (11 MB est, distributed wins)
-    events = regime.fuse(events.select("ts", "event_type", "value"), scale=0.5)
     from airflow_etl_elt_spark.operators.aggregates import guarded_long_sum_agg
 
     # order-independent exact grid sum on primitive longs (bit-identical to

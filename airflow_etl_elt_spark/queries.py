@@ -65,6 +65,14 @@ def _orderkey_colocated(spark: SparkSession, sf: str) -> bool:
     )
 
 
+def _documents_fanned_out(spark: SparkSession, sf: str) -> DataFrame:
+    """The documents table spread over every core (``regime.fan_out``) for
+    the heavier per-document work: a small-corpus size gate here tied or
+    lost at sf0.1 in both plan-cache modes (forced-branch A/B, 20 pairs per
+    key), so these keys fan out at every size."""
+    return regime.fan_out(read_table(spark, sf, "documents"))
+
+
 # --------------------------------------------------------------------------
 # Reference-surface queries (SURVEY.md §2.1-2.5)
 # --------------------------------------------------------------------------
@@ -494,11 +502,19 @@ def q_token_count(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
-    return text.quality_score(regime.fan_out(read_table(spark, sf, "documents")))
+    # light per-byte regex work: a small corpus stays on its natural layout.
+    # Re-won fresh, sf0.1, 20 pairs: 0.435 vs 0.955 CPU-s (lower in 20) —
+    # fanned out it is faster in wall time (0.33 vs 0.40 s).
+    docs = read_table(spark, sf, "documents")
+    return text.quality_score(regime.fan_out(docs, min_bytes=regime.SMALL_BYTES))
 
 
 def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
-    return text.lang_id(regime.fan_out(read_table(spark, sf, "documents")))
+    # light per-byte regex work, gated like q_text_quality. Re-won at
+    # perfbench scale 0.02, 20 pairs: fresh 0.17 vs 0.34 CPU-s (lower in
+    # 19), prepared 0.15 vs 0.36 CPU-s (lower in 20).
+    docs = read_table(spark, sf, "documents")
+    return text.lang_id(regime.fan_out(docs, min_bytes=regime.SMALL_BYTES))
 
 
 def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
@@ -506,7 +522,7 @@ def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_token_count_bpe(spark: SparkSession, sf: str) -> DataFrame:
-    return text.token_count_bpe(regime.fan_out(read_table(spark, sf, "documents")))
+    return text.token_count_bpe(_documents_fanned_out(spark, sf))
 
 
 # --------------------------------------------------------------------------
@@ -750,14 +766,14 @@ def q_knn_batch(spark: SparkSession, sf: str) -> DataFrame:
 def q_word_entropy(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document unigram word entropy + word count (lexical-diversity
     quality signal); exactly oracle-checkable."""
-    return text.word_entropy(regime.fan_out(read_table(spark, sf, "documents")))
+    return text.word_entropy(_documents_fanned_out(spark, sf))
 
 
 def q_bigram_lm_score(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc cross-entropy under a corpus-trained add-k bigram LM — the
     CCNet/KenLM-style quality filter, fully relational (train = two grouped
     counts, score = one join), so it's exactly oracle-checkable."""
-    return text.bigram_lm_score(regime.fan_out(read_table(spark, sf, "documents")))
+    return text.bigram_lm_score(_documents_fanned_out(spark, sf))
 
 
 def q_quality_filtered_sample(spark: SparkSession, sf: str) -> DataFrame:
@@ -770,7 +786,7 @@ def q_quality_filtered_sample(spark: SparkSession, sf: str) -> DataFrame:
     and the whole pipeline remains exactly oracle-checkable — the
     composition property that makes the catalog an engine rather than a
     list of demos."""
-    scored = text.bigram_lm_score(regime.fan_out(read_table(spark, sf, "documents")))
+    scored = text.bigram_lm_score(_documents_fanned_out(spark, sf))
     kept = scored.filter(F.col("cross_entropy") <= F.lit(3.4))
     return relational.deterministic_sample(kept, "doc_id", 50)
 
@@ -1115,7 +1131,7 @@ def q_corr_by_flag(spark: SparkSession, sf: str) -> DataFrame:
 def q_top_tokens(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus heavy hitters: token explode → count → top 20 (count desc,
     token asc). Explode + two-phase agg; the sort is on the tiny agg."""
-    docs = regime.fan_out(read_table(spark, sf, "documents"))
+    docs = _documents_fanned_out(spark, sf)
     tokens = docs.select(
         F.explode(text.ws_tokens(text.ascii_lower(F.col("text")))).alias("token")
     ).filter(F.col("token") != "")
@@ -1128,7 +1144,7 @@ def q_top_tokens(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
-    return text.tfidf_top_terms(regime.fan_out(read_table(spark, sf, "documents")), k=1)
+    return text.tfidf_top_terms(_documents_fanned_out(spark, sf), k=1)
 
 
 def q_left_join_zero_counts(spark: SparkSession, sf: str) -> DataFrame:
@@ -1364,6 +1380,10 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
     oo = o.select("o_orderkey", "o_custkey")
     li = li.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
     gate = regime.BROADCAST_BYTES
+    # Re-won fresh, sf0.1, 20 pairs of 3-call means: 0.587 vs 0.747 CPU-s
+    # and 0.355 vs 0.403 s wall (lower in 18 on both). Marginal: two other
+    # runs were lower in 14-18 of 20 with the gap under the IQR; bench.py
+    # timed the fallback 10-20 % slower on q5 in three of three runs.
     if c2_est < gate:
         oo = oo.join(
             F.broadcast(c2), F.col("o_custkey") == F.col("c_custkey")
@@ -1375,10 +1395,9 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
             # small-estimate orders side (bypassing the bucket metadata).
             oo = oo.hint("merge")
         elif regime.plan_bytes(o.select("o_orderkey", "o_custkey")) * frac < gate:
+            # Re-won fresh, sf0.1, 20 pairs of 3-call means: 0.537 vs 0.805
+            # CPU-s and 0.356 vs 0.420 s wall (lower in 19 on both).
             oo = F.broadcast(oo)
-            # all probe sides broadcast → a fused-small lineitem stream side
-            # makes the whole five-way join one fresh-build stage
-            li = regime.fuse(li)
         # The co-location predicate is spelled (a - b) == 0, NOT a == b: a
         # plain equality would be extracted as a SECOND equi-join key,
         # turning the merge keys into (nationkey, orderkey) — which the
@@ -1403,20 +1422,17 @@ def q_tpch_q5_local_revenue(spark: SparkSession, sf: str) -> DataFrame:
             sums={"revenue": "(l_extendedprice * (1 - l_discount))"},
         )
     # Fallback above the gate (customer too big even region-pruned —
-    # the honest shuffle-join shape; gates and rationale unchanged from r8:
-    # measured at the 30x replica an over-eager orders broadcast cost
-    # 3.55 s vs 1.6 s with the shuffle join).
-    cc = F.broadcast(c) if regime.plan_bytes(c) < gate else c
+    # the honest shuffle-join shape; measured at the 30x replica an
+    # over-eager orders broadcast cost 3.55 s vs 1.6 s with the shuffle
+    # join). No size gate here: past the region-pruned customer bound, the
+    # whole customer table, the orders projection (~10x customer's rows)
+    # and lineitem are all past every broadcast and single-task bound.
     if _orderkey_colocated(spark, sf):
         oo = oo.hint("merge")
-    else:
-        if regime.plan_bytes(oo) < gate:
-            oo = F.broadcast(oo)
-        li = regime.fuse(li)
     return two_tier_dec_agg(
         li.join(F.broadcast(asian_sup), li.l_suppkey == F.col("s_suppkey"))
         .join(oo, li.l_orderkey == F.col("o_orderkey"))
-        .join(cc, (F.col("o_custkey") == c.c_custkey) & (c.c_nationkey == F.col("s_nationkey"))),
+        .join(c, (F.col("o_custkey") == c.c_custkey) & (c.c_nationkey == F.col("s_nationkey"))),
         ["n_name"],
         sums={"revenue": "(l_extendedprice * (1 - l_discount))"},
     )
@@ -1533,7 +1549,7 @@ def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     array column crashes its ``sort_values``; VERDICT r2 #3)."""
     from airflow_etl_elt_spark.plans.corpus import pack_sequences
 
-    counted = text.token_count(regime.fan_out(read_table(spark, sf, "documents")))
+    counted = text.token_count(_documents_fanned_out(spark, sf))
     packed = pack_sequences(counted, max_tokens=512)
     return packed.select(
         "pack_id",
@@ -1689,13 +1705,10 @@ def q_deterministic_sample(spark: SparkSession, sf: str) -> DataFrame:
 def q_rolling_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     """Order-sensitive rolling-hash fingerprint per document (north-star text
     analysis) — engine-portable recurrence, exact DuckDB twin."""
-    # min_bytes=0: the per-byte work here is an INTERPRETED HOF fold
-    # (~0.25 s/MB single-threaded, 25x fan_out's default light-work gate
-    # constant) — gating the fan-out off regressed this key 0.16 -> 0.45 s
-    # at sf0.1 (r13 mid-bench), so the call site opts out of the gate.
-    return text.rolling_fingerprint(
-        regime.fan_out(read_table(spark, sf, "documents"), min_bytes=0)
-    )
+    # the per-byte work here is an INTERPRETED HOF fold (~0.25 s/MB
+    # single-threaded): gating the fan-out off regressed this key
+    # 0.16 -> 0.45 s at sf0.1 (r13 mid-bench).
+    return text.rolling_fingerprint(_documents_fanned_out(spark, sf))
 
 
 def q_array_agg_statuses(spark: SparkSession, sf: str) -> DataFrame:
@@ -1798,11 +1811,9 @@ def q_ann_pq(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf: str) -> DataFrame:
-    # min_bytes=0: downstream decodes JPEGs in Python (the heaviest
-    # per-row work in the catalog) — always worth every core.
-    media = multimodal.documents_as_media(
-        regime.fan_out(read_table(spark, sf, "documents"), min_bytes=0)
-    )
+    # downstream decodes JPEGs in Python (the heaviest per-row work in the
+    # catalog) — always worth every core.
+    media = multimodal.documents_as_media(_documents_fanned_out(spark, sf))
     return multimodal.extract_media_features(media, with_dims_check=True)
 
 
@@ -1945,11 +1956,10 @@ def q_tpch_q10(spark: SparkSession, sf: str) -> DataFrame:
     # broadcast shape faster (0.49 s vs 0.63 s forced-merge). At real scale
     # 7% of orders outgrows the broadcast gate below and the shuffle join
     # stands, so the scale story needs no bucket hint here.
+    # Re-won fresh, sf0.1, 20 pairs: 0.442 vs 0.561 s wall (lower in 20).
     if regime.plan_bytes(oo) < regime.BROADCAST_BYTES:
         oo_small = True
         oo = F.broadcast(oo)
-        # broadcast probe + fused-small stream side = one fresh-build stage
-        li = regime.fuse(li)
     else:
         oo_small = False
     # Aggregate BEFORE the wide customer join (r9, the agg-through-join
@@ -2521,8 +2531,7 @@ def q_segment_dedup(spark: SparkSession, sf: str) -> DataFrame:
     rule at 10-token-window granularity): per-doc kept/duplicate segment
     stats, first occurrence by (doc_id, seg_idx) wins. Digest-only shuffles;
     exactly oracle-checkable."""
-    docs = read_table(spark, sf, "documents")
-    return dedup.segment_dedup(regime.fan_out(docs), window=10)
+    return dedup.segment_dedup(_documents_fanned_out(spark, sf), window=10)
 
 
 def q_boilerplate_segments(spark: SparkSession, sf: str) -> DataFrame:
@@ -2530,8 +2539,9 @@ def q_boilerplate_segments(spark: SparkSession, sf: str) -> DataFrame:
     documents are flagged EVERYWHERE they occur (corpus-global scope here;
     the operator also supports per-source scoping). Per-doc boilerplate
     fraction; exactly oracle-checkable."""
-    docs = read_table(spark, sf, "documents")
-    return dedup.boilerplate_segments(regime.fan_out(docs), window=10, min_docs=2)
+    return dedup.boilerplate_segments(
+        _documents_fanned_out(spark, sf), window=10, min_docs=2
+    )
 
 
 def q_pii_redact(spark: SparkSession, sf: str) -> DataFrame:

@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame
 
 from airflow_etl_elt_spark import memo
 
-#: Single-task bound: ``fuse``, ``fan_out``'s light-work gate, grouped_stats'
-#: numpy regime, the MinHash broadcasts and cosine_topk's coalesce (~1-2M
-#: numeric rows). fan_out's crossover, measured r13 at sf0.1 (isolated noop
+#: Single-task bound: ``fuse``, ``fan_out``'s light-work gate and
+#: grouped_stats' numpy regime (~1-2M numeric rows). fan_out's crossover,
+#: measured r13 at sf0.1 (isolated noop
 #: A/B, 3 samples each): scan+fan_out 0.21 s; a TRIVIAL pandas_udf over the
 #: fanned-out input 0.53-0.68 s vs the full lang_id WITHOUT fan_out
 #: 0.28-0.41 s — the Arrow crossing costs ~10 ms x 32 tasks while the RE2
@@ -42,12 +42,6 @@ SMALL_BYTES = 4 * 1024 * 1024
 #: floor (a table under it broadcasts into any join, so co-locating it buys
 #: nothing).
 BROADCAST_BYTES = 16 * 1024 * 1024
-
-#: Buffer bound: below it one exact-median aggregation state (F.median)
-#: holds a whole group, and a shuffle-hash build of the pruned orders side
-#: fits a reducer — 256 MiB of scan is well under a reducer's working memory
-#: even if one group holds every row.
-BUFFER_BYTES = 256 * 1024 * 1024
 
 
 def fresh() -> bool:
@@ -94,7 +88,7 @@ def partitions(df: DataFrame) -> int:
     return memo.get("partition_counts", key, lambda: df.rdd.getNumPartitions())
 
 
-def fuse(df: DataFrame, scale: float = 1.0) -> DataFrame:
+def fuse(df: DataFrame) -> DataFrame:
     """Single-task regime for FRESH builds of small inputs.
 
     The round-3/4 lesson, both halves: which plan shape wins depends on
@@ -112,21 +106,16 @@ def fuse(df: DataFrame, scale: float = 1.0) -> DataFrame:
       exchange and the whole query collapses to one stage (BENCH_r03:
       window_topk 2.14x vs 10.55x after round 4 removed these gates).
 
-    Size gate: ``plan_bytes(df) < SMALL_BYTES x scale``; above it the plan
-    is returned unchanged in both modes. Callers pass the input ALREADY
-    projected so the gate measures what will actually flow; callers whose
-    projection compresses far better than it decodes (all-numeric columns —
-    the estimate is compressed bytes but single-task decode work is ROWS)
-    pass ``scale < 1`` to cross over earlier (hourly_agg at the 10x replica:
-    fused 0.51 s vs distributed 0.42 s at an 11 MB estimate that a
-    text-heavy input of equal work would have crossed long before).
+    Size gate: ``plan_bytes(df) < SMALL_BYTES``; above it the plan is
+    returned unchanged in both modes. Callers pass the input ALREADY
+    projected so the gate measures what will actually flow.
     """
-    if fresh() and plan_bytes(df) < SMALL_BYTES * scale:
+    if fresh() and plan_bytes(df) < SMALL_BYTES:
         return df.coalesce(1)
     return df
 
 
-def fan_out(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     """Round-robin repartition a narrow input so compute-heavy downstream work
     (regex passes, pandas UDFs, per-row vector math) uses every core.
 
@@ -137,18 +126,14 @@ def fan_out(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     layouts it costs one tiny shuffle to unlock N-way parallelism — the same
     guard a production pipeline wants against a few-giant-files layout.
 
-    Cost-gated (OPTIMIZATION r13): inputs whose estimate is under
-    ``min_bytes`` (default ``SMALL_BYTES``, which assumes LIGHT per-byte
-    work) stay on their natural layout. Per-row operators are
-    order-insensitive, so the gate changes plan shape only, never results.
-    Call sites whose downstream is far heavier per byte (interpreted HOF
-    folds, Python image decoding) pass their own ``min_bytes`` (0 = always
-    fan out) — rolling_fingerprint measured 0.16 -> 0.45 s at sf0.1 under
-    the default gate before its override.
+    Call sites whose downstream work is LIGHT per byte pass ``min_bytes``
+    (``SMALL_BYTES``): an input whose estimate is under it stays on its
+    natural layout. Per-row operators are order-insensitive, so the gate
+    changes plan shape only, never results.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if partitions(df) >= target:
         return df
-    if plan_bytes(df) < (SMALL_BYTES if min_bytes is None else min_bytes):
+    if min_bytes and plan_bytes(df) < min_bytes:
         return df
     return df.repartition(target)

@@ -74,24 +74,37 @@ def test_backtick_id_column_in_decontaminate(spark):
 
 @pytest.mark.parametrize("sql_text", [True, False])
 def test_backtick_names_in_aggregate_builders(spark, sql_text):
+    """SQL-text sums/counts take quoted backtick names; a Column value is
+    rejected up front with the builder named (the grid-sum builders take
+    SQL text only)."""
     from pyspark.sql import functions as F
 
     plain = _frame(spark)
     odd = _frame(spark, "g`x", "v`al", "id")
 
-    def expr(c):  # sums/counts values are SQL text or Columns
-        return quote_ident(c) if sql_text else F.col(quote_ident(c))
+    if not sql_text:
+        col = F.col(quote_ident("v`al"))
+        with pytest.raises(TypeError, match="guarded_long_sum_agg"):
+            guarded_long_sum_agg(odd, ["g`x"], {"s`um": col})
+        with pytest.raises(TypeError, match="two_tier_dec_agg"):
+            two_tier_dec_agg(odd, ["g`x"], sums={"s`um": col})
+        with pytest.raises(TypeError, match="two_tier_dec_agg"):
+            two_tier_dec_agg(
+                odd, ["g`x"], sums={"s`um": quote_ident("v`al")}, counts={"n`": col}
+            )
+        return
 
-    got = guarded_long_sum_agg(odd, ["g`x"], {"s`um": expr("v`al")})
+    q = quote_ident
+    got = guarded_long_sum_agg(odd, ["g`x"], {"s`um": q("v`al")})
     assert got.columns == ["g`x", "s`um"]
-    assert _rows(got) == _rows(guarded_long_sum_agg(plain, ["g"], {"s": expr("x")}))
+    assert _rows(got) == _rows(guarded_long_sum_agg(plain, ["g"], {"s": q("x")}))
 
     got = two_tier_dec_agg(
-        odd, ["g`x"], sums={"s`um": expr("v`al")}, counts={"n`": expr("v`al")},
+        odd, ["g`x"], sums={"s`um": q("v`al")}, counts={"n`": q("v`al")},
         count_star="c`",
     )
     assert got.columns == ["g`x", "s`um", "c`", "n`"]
     want = two_tier_dec_agg(
-        plain, ["g"], sums={"s": expr("x")}, counts={"n": expr("x")}, count_star="c"
+        plain, ["g"], sums={"s": q("x")}, counts={"n": q("x")}, count_star="c"
     )
     assert _rows(got) == _rows(want)

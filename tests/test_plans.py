@@ -238,6 +238,22 @@ def test_fuse_gate_modes(spark, monkeypatch):
     assert "Coalesce 1" in _plan(regime.fuse(df))
 
 
+def test_cosine_topk_fuses_only_in_fresh_builds(spark, monkeypatch):
+    """cosine_topk's single-task BLAS scoring runs through ``regime.fuse``:
+    a prepared plan keeps the distributed JVM shape (no ``Coalesce 1``, no
+    Python UDF); a fresh build of the same small corpus still fuses to one
+    BLAS scoring task."""
+    build = QUERIES["knn_cosine"].__wrapped__  # the builder, past the plan cache
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "1")
+    prepared = _plan(build(spark, SF_CORRECT))
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    fresh = _plan(build(spark, SF_CORRECT))
+    assert "Coalesce 1" not in prepared
+    assert "ArrowEvalPython" not in prepared
+    assert "Coalesce 1" in fresh
+    assert "ArrowEvalPython" in fresh
+
+
 def test_window_topk_fresh_fuses_to_single_stage(spark):
     """Fresh-build mode, small input: the whole top-k plan is one stage —
     no Exchange anywhere (SinglePartition satisfies the window's
@@ -265,8 +281,8 @@ def test_knn_batch_prereduces_before_exchange(spark):
     """Batch KNN (VERDICT r5 next-step 4): the exchange feeding the final
     per-query rank window must read the MapInPandas PRE-REDUCED rows
     (O(q*k*batches)), never the raw q x corpus score rows, and the plan
-    must contain no nested-loop join. Forced multi-partition so the
-    single-task coalesce gate can't hide the exchange."""
+    must contain no nested-loop join. Forced multi-partition so the merge
+    runs across partitions."""
     import numpy as np
 
     from airflow_etl_elt_spark.operators.similarity import cosine_topk_batch

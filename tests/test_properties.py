@@ -467,11 +467,9 @@ def test_exact_median_histogram_regimes(spark, monkeypatch):
     bootstrap, no-stats fallback, deliberately WRONG bounds (must stay
     exact — bounds are planning hints, membership/ranks never depend on
     them), and forced multi-level refinement."""
-    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators import aggregates
     from airflow_etl_elt_spark.sources.readers import read_table, table_column_stats
 
-    monkeypatch.setattr(regime, "BUFFER_BYTES", 1)  # force large
     li = read_table(spark, "/root/testdata/sf0.001", "lineitem")
     g, v = "l_returnflag", "l_extendedprice"
     truth = {
@@ -503,17 +501,15 @@ def test_exact_median_histogram_regimes(spark, monkeypatch):
 
 
 def test_exact_median_histogram_edge_shapes(spark, monkeypatch):
-    """Edge distributions through the forced-large histogram median: even
+    """Edge distributions through the histogram median: even
     counts (interpolation), singletons, all-tie groups (zero-width exit),
     NULLs (excluded), NaN (ranks above +inf, Spark sort order), and a
     near-tie packing that exhausts refinement yet stays exact via the
     value-compressed selection."""
     import math
 
-    from airflow_etl_elt_spark import regime
     from airflow_etl_elt_spark.operators import aggregates
 
-    monkeypatch.setattr(regime, "BUFFER_BYTES", 1)
     monkeypatch.setattr(aggregates, "_SELECT_MAX_ROWS", 2)
     rows = (
         [("even", float(x)) for x in (1, 2, 3, 4)]
