@@ -13,6 +13,8 @@ Reference parity:
 One keyed-merge core (``_one_per_key``, ``_by_name``, ``_merged``) serves
 ``insert_ignore_by_name``, ``upsert_by_key`` and ``sources.txn.TxnTable.merge``;
 ``upsert_by_key`` swaps its rewrite into a plain parquet directory crash-safely.
+Every count these writes return is an ``Observation`` on the write itself (no
+cache, no second job), and caller column names are quoted (``quote_ident``).
 
 Scale notes: the anti-join in ``insert_ignore_by_name`` shuffles both sides on
 the key. At 100 TB the "existing" side should be key-bucketed at rest so the
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_etl_elt_spark import memo
+from airflow_etl_elt_spark.operators.relational import quote_ident
 
 def write_partitioned(
     df: DataFrame,
@@ -86,9 +89,10 @@ def _one_per_key(batch: DataFrame, key: str, order_col: str | None = None) -> Da
     deterministic row (reference PK semantics only require at-most-once)."""
     if order_col is None:
         return batch.dropDuplicates([key])
-    return batch.groupBy(key).agg(
-        *[F.max_by(c, order_col).alias(c) for c in batch.columns if c != key]
-    ).select(*batch.columns)
+    by = quote_ident(order_col)
+    return batch.groupBy(quote_ident(key)).agg(
+        *[F.max_by(quote_ident(c), by).alias(c) for c in batch.columns if c != key]
+    ).select(*map(quote_ident, batch.columns))
 
 
 def _by_name(batch: DataFrame, columns: list[str]) -> DataFrame:
@@ -97,17 +101,21 @@ def _by_name(batch: DataFrame, columns: list[str]) -> DataFrame:
     missing = set(columns) - set(batch.columns)
     if missing:
         raise ValueError(f"batch missing target columns: {sorted(missing)}")
-    return batch.select(*columns)
+    return batch.select(*map(quote_ident, columns))
 
 
-def _merged(
-    existing: DataFrame, batch: DataFrame, key: str, obs: Observation | None = None
-) -> DataFrame:
+def _merged(existing: DataFrame, batch: DataFrame, key: str):
     """``MERGE INTO`` as one rewrite: the stored rows whose key the (one row
-    per key) batch does not carry, plus the batch, whose row count the
-    rewrite records in ``obs`` when one is given."""
-    rows = batch if obs is None else batch.observe(obs, F.count(F.lit(1)).alias("n"))
-    return existing.join(batch.select(key), key, "left_anti").unionByName(rows)
+    per key) batch does not carry, plus the batch; and a function giving,
+    once it has run, ``(stored rows replaced, batch rows)`` as it observed
+    them. Replaced rows are counted above the join that flags them: adaptive
+    execution drops the join of an empty table, with all below it."""
+    replaced, added = Observation(), Observation()
+    hit = f"__hit_{uuid.uuid4().hex}"  # a flag no stored column can share
+    flagged = existing.join(batch.select(quote_ident(key), F.lit(1).alias(hit)), key, "left")
+    kept = flagged.observe(replaced, F.count(hit).alias("n")).filter(F.col(hit).isNull())
+    merged = kept.drop(hit).unionByName(batch.observe(added, F.count(F.lit(1)).alias("n")))
+    return merged, lambda: (replaced.get["n"], added.get["n"])
 
 
 def _write_counted(df: DataFrame, path: str) -> int:
@@ -118,12 +126,7 @@ def _write_counted(df: DataFrame, path: str) -> int:
     return obs.get["n"]
 
 
-def insert_ignore_by_name(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    key: str = "id",
-) -> int:
+def insert_ignore_by_name(spark: SparkSession, batch: DataFrame, path: str, key: str = "id") -> int:
     """Idempotent keyed append: the Spark restatement of DuckDB's
     ``INSERT OR IGNORE ... BY NAME`` (etl_elt_wine.py:216).
 
@@ -134,38 +137,41 @@ def insert_ignore_by_name(
          we project the batch to the target's column order by name),
       3. duplicate keys *within the batch* keep one row (``_one_per_key``).
 
-    Returns the number of rows actually appended.
+    Returns the number of rows appended, observed by the one write. It goes
+    to a sibling staging directory whose part files move into ``path`` only
+    if it holds rows: a batch of old keys adds no file, a reader never sees
+    a half-written one, and the next call removes a crashed call's stage.
     """
+    _recover(path)
     if not os.path.exists(path):
         return _write_counted(_one_per_key(batch, key), path)
 
     existing = spark.read.parquet(path)
-    # Only the key column of the existing table is scanned (column pruning).
     new_rows = _one_per_key(_by_name(batch, existing.columns), key).join(
-        existing.select(key), on=key, how="left_anti"
+        existing.select(quote_ident(key)), on=key, how="left_anti"
     )
-    # Parquet append is not atomic w.r.t. concurrent readers; the reference's
-    # Airflow concurrency=1 guard (etl_elt_wine.py:72,94) is mirrored by the
-    # pipeline runner's single-run lock.
-    new_rows.persist()
-    try:
-        n = new_rows.count()
-        if n:
-            new_rows.write.mode("append").parquet(path)
-            memo.invalidate_path(path)  # memoized listings don't see new files
-    finally:
-        new_rows.unpersist()
+    # A multi-file append is not atomic w.r.t. concurrent readers; the reference's
+    # concurrency=1 guard (etl_elt_wine.py:72,94) is the pipeline runner's lock.
+    stage = f"{path}.__insert_{uuid.uuid4().hex[:8]}"
+    n = _write_counted(new_rows, stage)
+    if n:
+        for f in os.listdir(stage):
+            if not f.lstrip(".").startswith("_"):  # part files and their .crc
+                os.replace(os.path.join(stage, f), os.path.join(path, f))
+        memo.invalidate_path(path)  # memoized listings don't see new files
+    shutil.rmtree(stage)
     return n
 
 
-def _recover_upsert(path: str) -> None:
-    """Undo a crashed ``upsert_by_key`` swap: put a set-aside table back
-    when ``path`` is missing, and delete every other leftover directory."""
+def _recover(path: str) -> None:
+    """Undo a crashed keyed write: put a table that ``upsert_by_key`` set
+    aside back when ``path`` is missing, and delete every other leftover
+    ``__upsert_*`` or ``__insert_*`` sibling directory."""
     parent, name = os.path.split(os.path.abspath(path))
     for n in sorted(os.listdir(parent)) if os.path.isdir(parent) else []:
         if n.startswith(f"{name}.__upsert_old_") and not os.path.exists(path):
             os.replace(os.path.join(parent, n), path)
-        elif n.startswith(f"{name}.__upsert_"):
+        elif n.startswith((f"{name}.__upsert_", f"{name}.__insert_")):
             shutil.rmtree(os.path.join(parent, n))
 
 
@@ -179,7 +185,11 @@ def upsert_by_key(
     """Keyed upsert — ``MERGE INTO`` semantics for a parquet target:
     WHEN MATCHED the batch row replaces the stored row, WHEN NOT MATCHED it
     inserts. The ELT complement of ``insert_ignore_by_name`` (which never
-    updates). Returns ``(n_updated, n_inserted)``.
+    updates). Returns ``(n_updated, n_inserted)``, observed by the rewrite:
+    the stored rows replaced (SQL ``MERGE``'s affected-row count) and the
+    batch keys minus those. On tables these sinks built, keys are unique and
+    these are the matched and the new keys; on a target storing key 1 twice,
+    a batch of keys {1, 2} returns ``(2, 0)``, the net growth as inserts.
 
     - Columns match by NAME (batch projected to target order; missing
       columns raise — same BY NAME contract as insert_ignore).
@@ -205,16 +215,13 @@ def upsert_by_key(
     Concurrent readers or writers belong on ``sources.txn.TxnTable`` — the
     same merge core behind a version log with atomic commits and retry.
     """
-    _recover_upsert(path)
+    _recover(path)
     one_per_key = _one_per_key(batch, key, order_col)
     if not os.path.exists(path):
         return 0, _write_counted(one_per_key, path)
 
     existing = spark.read.parquet(path)
-    aligned = _by_name(one_per_key, existing.columns)
-    n_updated = aligned.join(existing.select(key), on=key, how="left_semi").count()
-    obs = Observation()
-    merged = _merged(existing, aligned, key, obs)
+    merged, counts = _merged(existing, _by_name(one_per_key, existing.columns), key)
 
     tag = uuid.uuid4().hex[:8]
     tmp, old = f"{path}.__upsert_tmp_{tag}", f"{path}.__upsert_old_{tag}"
@@ -223,7 +230,8 @@ def upsert_by_key(
     os.replace(tmp, path)
     shutil.rmtree(old)
     memo.invalidate_path(path)
-    return n_updated, obs.get["n"] - n_updated
+    n_updated, n_batch = counts()
+    return n_updated, n_batch - n_updated
 
 
 def write_bucketed(

@@ -9,7 +9,9 @@ from first principles:
 
 - ``<path>/_log/<version 20d>.json`` — one manifest per committed version,
   listing the data directories that make up that snapshot, plus the
-  operation and a schema fingerprint.
+  operation, the schema (``StructType`` JSON, passed to every read so none
+  infers it; older simpleString manifests still read, by inference) and
+  per-directory min/max stats that the write observes as it goes.
 - ``<path>/data/<uuid>/`` — immutable parquet directories; a writer always
   writes NEW directories, never touches existing ones.
 - Commit = ``os.open(manifest, O_CREAT | O_EXCL)``: the filesystem's
@@ -42,13 +44,19 @@ containing touched keys) composes with this log unchanged.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import os
+import shutil
+import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from airflow_etl_elt_spark.operators.relational import quote_ident
 from airflow_etl_elt_spark.sources.sinks import _merged, _one_per_key
 
 
@@ -71,12 +79,10 @@ class TxnTable:
     def latest_version(self) -> int:
         """-1 when the table does not exist yet."""
         try:
-            names = [
-                n for n in os.listdir(self.log_dir) if n.endswith(".json")
-            ]
+            names = os.listdir(self.log_dir)
         except FileNotFoundError:
             return -1
-        return max((int(n[:-5]) for n in names), default=-1)
+        return max((int(n[:-5]) for n in names if n.endswith(".json")), default=-1)
 
     def _read_manifest(self, version: int) -> dict:
         with open(self._manifest_path(version)) as fh:
@@ -102,9 +108,7 @@ class TxnTable:
         df.write.mode("error").parquet(os.path.join(self.data_dir, rel))
         return rel
 
-    def _write_version(
-        self, op: str, data, keep_base: bool = False, max_retries: int = 3
-    ) -> int:
+    def _write_version(self, op: str, data, keep_base: bool = False, max_retries: int = 3) -> int:
         """The commit loop of every write: read the base version, write one
         new data directory, commit ``base + 1`` listing it (after the base's
         directories when ``keep_base``), and on a lost race re-read the base
@@ -122,19 +126,28 @@ class TxnTable:
                 df = data(base, m) if callable(data) else data
                 if df is None:
                     return base
-                rel = self._write_data(df)
-                rel_stats = self._dir_stats(df.sparkSession, rel)
+                observed, dir_stats = self._observed(df)
+                rel = self._write_data(observed)
+                rel_stats = dir_stats()
             dirs = (m["dirs"] if keep_base else []) + [rel]
-            schema = m.get("schema") or df.schema.simpleString()
+            schema = self._schema(m.get("schema", "") if keep_base else "", df)
             stats = {**(m.get("stats", {}) if keep_base else {}), rel: rel_stats}
             try:
-                self._commit(
-                    base + 1, {"op": op, "dirs": dirs, "schema": schema, "stats": stats}
-                )
+                self._commit(base + 1, {"op": op, "dirs": dirs, "schema": schema, "stats": stats})
                 return base + 1
             except ConcurrentWriteError as exc:
                 last_exc = exc
         raise last_exc
+
+    @staticmethod
+    def _schema(base: str, df: DataFrame) -> str:
+        """The manifest schema of ``df`` written over a kept ``base`` schema
+        (or ""): the base's columns, then those ``df`` adds. A simpleString
+        base from before JSON schemas stays as it is."""
+        if base and not base.startswith("{"):
+            return base
+        old = StructType.fromJson(json.loads(base)) if base else StructType()
+        return StructType(old.fields + [f for f in df.schema if f.name not in old.names]).json()
 
     # ---- table operations -------------------------------------------------
 
@@ -142,9 +155,16 @@ class TxnTable:
         v = self.latest_version() if version is None else version
         if v < 0:
             raise FileNotFoundError(f"no committed version at {self.path}")
-        m = self._read_manifest(v)
-        dirs = [os.path.join(self.data_dir, r) for r in m["dirs"]]
-        return spark.read.parquet(*dirs)
+        return self._read(spark, self._read_manifest(v))
+
+    def _read(self, spark: SparkSession, m: dict, dirs: list[str] | None = None) -> DataFrame:
+        """The parquet scan of ``dirs`` (default: all of manifest ``m``'s),
+        with ``m``'s stored schema, so no job infers it from a footer."""
+        reader = spark.read
+        if m.get("schema", "").startswith("{"):
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        dirs = m["dirs"] if dirs is None else dirs
+        return reader.parquet(*[os.path.join(self.data_dir, r) for r in dirs])
 
     def create(self, df: DataFrame) -> int:
         """Commit version 0. Fails if the table already exists."""
@@ -179,7 +199,7 @@ class TxnTable:
         batch = _one_per_key(batch, key, order_col)
         return self._write_version(
             "merge",
-            lambda base, m: _merged(self.snapshot(spark, base), batch, key),
+            lambda base, m: _merged(self.snapshot(spark, base), batch, key)[0],
             max_retries=max_retries,
         )
 
@@ -198,9 +218,6 @@ class TxnTable:
         subsequently committed manifest reference missing data (silent data
         loss; ADVICE r5). Directories younger than the horizon are skipped;
         pass 0 only when no concurrent writers can exist."""
-        import shutil
-        import time
-
         latest = self.latest_version()
         if latest < 0 or not os.path.isdir(self.data_dir):
             return 0
@@ -238,26 +255,21 @@ class TxnTable:
         VERSION, so time travel to pre-compaction versions keeps working
         until ``vacuum`` reclaims them.
 
-        This is the maintenance operation an append-heavy 100 TB table
-        needs: each streaming micro-batch commit adds a directory, and a
-        thousand tiny directories turn every snapshot scan into a
-        file-listing storm. Optimistic-concurrency like ``merge``: a racing
-        writer costs a retry against the fresh snapshot, never a torn table.
+        An append-heavy table needs it: each micro-batch commit adds a
+        directory, and a thousand tiny ones turn every scan into a listing
+        storm. A racing writer costs a retry, as in ``merge``.
         """
         def rewrite(base: int, m: dict) -> DataFrame | None:
-            # No-op only when there is genuinely nothing to gain: one data
-            # directory whose parquet file count is already at/below the
-            # target (a single directory can still hold hundreds of small
-            # files from a wide writer) and no re-sort requested.
+            # No-op only for one directory already at/below the target file
+            # count (a wide writer's one directory can hold many) and no sort.
             if len(m["dirs"]) <= 1 and sort_cols is None:
                 only = os.listdir(os.path.join(self.data_dir, m["dirs"][0]))
                 if sum(f.endswith(".parquet") for f in only) <= target_partitions:
                     return None
-            current = self.snapshot(spark, base)
+            current = self._read(spark, m)
             if sort_cols:
-                return current.repartitionByRange(
-                    target_partitions, *sort_cols
-                ).sortWithinPartitions(*sort_cols)
+                by = [quote_ident(c) for c in sort_cols]
+                return current.repartitionByRange(target_partitions, *by).sortWithinPartitions(*by)
             return current.coalesce(target_partitions)
 
         return self._write_version("compact", rewrite, max_retries=max_retries)
@@ -275,36 +287,25 @@ class TxnTable:
         the two snapshots rather than stored per-commit.
 
         Diff shape: a single full-outer join ON THE KEY classifies every
-        row; unchanged rows (null-safe struct equality over the non-key
-        columns) drop out. Both row structs ride the join anyway — deletes
-        need the old row's values, inserts/updates the new — so change
-        detection compares them directly with ``eqNullSafe`` rather than a
-        hash. (An earlier draft hashed the value struct; Spark's hash
-        functions SKIP null fields — a null leaves the seed unchanged — so
-        ``(a=5, b=NULL)`` and ``(a=NULL, b=5)`` collide and a null-position
-        move would silently vanish from the feed. The struct comparison has
-        no such blind spot: nulls compare positionally.) O(|old| + |new|)
-        with one exchange per side at any scale; an append-only table could
-        shortcut to reading just the directories added between the
-        manifests — left as the documented optimization because the general
-        form must exist anyway (merge and replace rewrite directories
-        wholesale).
+        row; unchanged rows drop out by ``eqNullSafe`` over the non-key
+        value struct, not a hash (Spark's hashes skip null fields, so
+        ``(a=5, b=NULL)`` and ``(a=NULL, b=5)`` would collide). O(|old| +
+        |new|) with one exchange per side; an append-only table could read
+        just the directories added between the manifests, but merge and
+        replace rewrite directories wholesale, so the general form stays.
         """
         to_v = self.latest_version() if to_version is None else to_version
         old = self.snapshot(spark, from_version)
         new = self.snapshot(spark, to_v)
         cols = new.columns
         val_cols = [c for c in cols if c != key]
-        vals = F.struct(*[F.col(c) for c in val_cols])
+        vals = F.struct(*[F.col(quote_ident(c)) for c in val_cols])
+        whole = F.struct(*[F.col(quote_ident(c)) for c in cols])
         o = old.select(
-            F.col(key).alias("__ok"),
-            vals.alias("__ov"),
-            F.struct(*[F.col(c) for c in cols]).alias("__orow"),
+            F.col(quote_ident(key)).alias("__ok"), vals.alias("__ov"), whole.alias("__orow")
         )
         n = new.select(
-            F.col(key).alias("__nk"),
-            vals.alias("__nv"),
-            F.struct(*[F.col(c) for c in cols]).alias("__nrow"),
+            F.col(quote_ident(key)).alias("__nk"), vals.alias("__nv"), whole.alias("__nrow")
         )
         joined = o.join(n, o["__ok"] == n["__nk"], "full_outer")
         change = (
@@ -336,43 +337,36 @@ class TxnTable:
 
     @staticmethod
     def _json_stat(v):
-        import datetime as _dt
-        import decimal as _dec
-
-        if isinstance(v, (_dt.datetime, _dt.date)):
+        if isinstance(v, (datetime.datetime, datetime.date)):
             return v.isoformat()
-        if isinstance(v, _dec.Decimal):
+        if isinstance(v, decimal.Decimal):
             return float(v)
         return v
 
-    def _dir_stats(self, spark: SparkSession, rel: str) -> dict:
-        """Per-directory min/max for every atomic-typed column, read back
-        from the FRESHLY WRITTEN parquet (columnar local scan of one batch)
-        rather than re-executing the possibly-expensive upstream plan —
-        the Delta add-file-stats idea at directory granularity: manifests
-        list directories, so stats ride along at commit-count scale, and a
-        predicate read can skip whole directories without touching their
-        footers."""
-        df = spark.read.parquet(os.path.join(self.data_dir, rel))
-        cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() in self._STATS_ATOMIC
-        ]
+    def _observed(self, df: DataFrame):
+        """``df`` observed for the min/max of every atomic-typed column, and
+        a function returning them once ``df`` is written (none for an
+        all-null column): the Delta add-file-stats idea at directory
+        granularity. Manifests list directories, so stats ride along at
+        commit-count scale, and a predicate read can skip whole directories
+        without touching their footers."""
+        cols = [f.name for f in df.schema.fields if f.dataType.typeName() in self._STATS_ATOMIC]
         if not cols:
-            return {}
+            return df, lambda: {}
+        obs = Observation()
         aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        row = df.agg(*aggs).first()
-        out = {}
-        for c in cols:
-            mn, mx = row[f"__mn_{c}"], row[f"__mx_{c}"]
-            if mn is None:
-                continue  # all-null column: no skipping possible
-            out[c] = [self._json_stat(mn), self._json_stat(mx)]
-        return out
+        for i, c in enumerate(cols):
+            aggs += [F.min(quote_ident(c)).alias(f"mn{i}"), F.max(quote_ident(c)).alias(f"mx{i}")]
+
+        def stats() -> dict:
+            row = obs.get
+            return {
+                c: [self._json_stat(row[f"mn{i}"]), self._json_stat(row[f"mx{i}"])]
+                for i, c in enumerate(cols)
+                if row[f"mn{i}"] is not None
+            }
+
+        return df.observe(obs, *aggs), stats
 
     def snapshot_where(
         self,
@@ -432,17 +426,13 @@ class TxnTable:
             if not disjoint:
                 keep.append(rel)
         if keep:
-            df = spark.read.parquet(
-                *[os.path.join(self.data_dir, r) for r in keep]
-            )
+            df = self._read(spark, m, keep)
         else:  # every directory pruned: empty frame, correct schema
-            df = spark.read.parquet(
-                os.path.join(self.data_dir, m["dirs"][0])
-            ).filter(F.lit(False))
+            df = self._read(spark, m, m["dirs"][:1]).filter(F.lit(False))
         cond = F.lit(True)
         for c, (clo, chi) in preds.items():
             if clo is not None:
-                cond = cond & (F.col(c) >= F.lit(clo))
+                cond = cond & (F.col(quote_ident(c)) >= F.lit(clo))
             if chi is not None:
-                cond = cond & (F.col(c) <= F.lit(chi))
+                cond = cond & (F.col(quote_ident(c)) <= F.lit(chi))
         return df.filter(cond)

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -19,6 +20,26 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_session(app_name="tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` and returns ``(result, jobs)``: the
+    number of Spark jobs the call launched, read from its own job group
+    through ``statusTracker().getJobIdsForGroup``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -10,7 +10,7 @@ import shutil
 import pytest
 
 from airflow_etl_elt_spark.sources import sinks
-from airflow_etl_elt_spark.sources.sinks import insert_ignore_by_name
+from airflow_etl_elt_spark.sources.sinks import insert_ignore_by_name, upsert_by_key
 
 
 def _batch(spark, rows, cols=("id", "v")):
@@ -183,25 +183,146 @@ def test_rewriting_sinks_invalidate_relation_cache(spark, tmp_path):
     assert read_table(spark, str(tmp_path), "t").count() == 2
 
 
-def test_upsert_into_existing_table_job_count(spark, tmp_path):
-    """Bookkeeping pin: besides the schema read and the rewrite, an upsert
-    into an existing table runs one count (matched keys); the batch row
-    count comes from an Observation on the rewrite, not a second count."""
-    from airflow_etl_elt_spark.sources.sinks import upsert_by_key
+def _events(spark, tmp_path, name, lo, hi):
+    """Rows ``lo..hi-1`` of a small keyed event table, written to parquet
+    and read back, as a scheduled batch arrives."""
+    from pyspark.sql import functions as F
 
+    path = str(tmp_path / name)
+    spark.range(lo, hi).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 7).alias("user_id"),
+        (F.col("id") * 0.5).alias("value"),
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_upsert_into_existing_table_job_count(spark, tmp_path, count_jobs):
+    """Bookkeeping pin: an upsert into an existing table runs the schema
+    read and the rewrite, nothing else; both returned counts are observed
+    by the rewrite. A separate batch count made 13 jobs, a separate
+    matched-key count 10; the rewrite's AQE stages each run as a job."""
     path = str(tmp_path / "u")
     upsert_by_key(spark, _batch(spark, [(1, "a"), (2, "b")]), path)
-    sc = spark.sparkContext
-    sc.setJobGroup("upsert-job-count", "upsert into an existing table")
-    try:
-        assert upsert_by_key(spark, _batch(spark, [(2, "x"), (3, "c")]), path) == (1, 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("upsert-job-count")
-    # 1 schema read, 4 for the matched-key count, 5 for the rewrite (each
-    # AQE query stage runs as its own job); a separate batch count made 13
-    assert len(jobs) == 10, sorted(jobs)
+    got, jobs = count_jobs(lambda: upsert_by_key(spark, _batch(spark, [(2, "x"), (3, "c")]), path))
+    assert got == (1, 1)
+    assert jobs <= 6, jobs
+
+
+def test_keyed_sink_job_ceilings(spark, tmp_path, count_jobs):
+    """Job ceilings of the keyed sinks on a batch that half overlaps the
+    table: insert_ignore is a schema read plus one observed write (no cache,
+    no count), upsert a schema read plus its observed rewrite."""
+    base = _events(spark, tmp_path, "base", 0, 400)
+    batch = _events(spark, tmp_path, "batch", 300, 500)
+    ignore, upsert = str(tmp_path / "ignore"), str(tmp_path / "upsert")
+    insert_ignore_by_name(spark, base, ignore, key="event_id")
+    upsert_by_key(spark, base, upsert, key="event_id")
+    n, jobs = count_jobs(lambda: insert_ignore_by_name(spark, batch, ignore, key="event_id"))
+    assert n == 100 and jobs <= 4, jobs
+    counts, jobs = count_jobs(lambda: upsert_by_key(spark, batch, upsert, key="event_id"))
+    assert counts == (100, 100) and jobs <= 5, jobs
+
+
+def test_insert_ignore_writes_one_file_and_no_op_adds_none(spark, tmp_path):
+    """An append of new keys adds one part file (the write's partitions
+    coalesce; a cached frame kept one file per shuffle partition), and
+    re-running the same batch leaves the table's file listing unchanged,
+    with no staging directory left beside it."""
+    base = _events(spark, tmp_path, "base", 0, 400)
+    batch = _events(spark, tmp_path, "batch", 300, 500)
+    path = str(tmp_path / "t")
+    insert_ignore_by_name(spark, base, path, key="event_id")
+    before = set(os.listdir(path))
+    assert insert_ignore_by_name(spark, batch, path, key="event_id") == 100
+    added = set(os.listdir(path)) - before
+    assert len([f for f in added if f.endswith(".parquet")]) == 1, added
+    listing = sorted(os.listdir(path))
+    assert insert_ignore_by_name(spark, batch, path, key="event_id") == 0
+    assert sorted(os.listdir(path)) == listing
+    assert sorted(os.listdir(tmp_path)) == ["base", "batch", "t"]
+    assert spark.read.parquet(path).count() == 500
+
+
+def test_insert_ignore_crash_before_move_leaves_table_unchanged(spark, tmp_path, monkeypatch):
+    """Fault injection: a crash after the staged write but before its files
+    move in leaves the table as it was; the next call removes the staging
+    directory and appends the rows."""
+    path = str(tmp_path / "t")
+    insert_ignore_by_name(spark, _batch(spark, [(1, "a")]), path)
+    listing = sorted(os.listdir(path))
+
+    def crash(*args, **kwargs):
+        raise OSError("injected crash")
+
+    monkeypatch.setattr(sinks.os, "replace", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        insert_ignore_by_name(spark, _batch(spark, [(2, "b")]), path)
+    monkeypatch.undo()
+    assert sorted(os.listdir(path)) == listing
+    assert any("__insert_" in n for n in os.listdir(tmp_path))
+    assert insert_ignore_by_name(spark, _batch(spark, [(2, "b")]), path) == 1
+    assert os.listdir(tmp_path) == ["t"]
+    assert {r["id"]: r["v"] for r in spark.read.parquet(path).collect()} == {1: "a", 2: "b"}
+
+
+@pytest.mark.parametrize("key", ["a.b", "c d", "g`x"])
+def test_keyed_sinks_take_any_key_name(spark, tmp_path, key):
+    """A key named with a dot, a space or a backtick works on every call,
+    not only the one that creates the table (names are quoted before they
+    reach the DataFrame API)."""
+    cols = (key, "v", "t s")
+    ignore, upsert = str(tmp_path / "i"), str(tmp_path / "u")
+    first = _batch(spark, [(1, "a", 1), (2, "b", 1)], cols)
+    second = _batch(spark, [(2, "x", 2), (2, "y", 3), (3, "c", 2)], cols)
+    assert insert_ignore_by_name(spark, first, ignore, key=key) == 2
+    assert insert_ignore_by_name(spark, second, ignore, key=key) == 1
+    assert upsert_by_key(spark, first, upsert, key=key, order_col="t s") == (0, 2)
+    assert upsert_by_key(spark, second, upsert, key=key, order_col="t s") == (1, 1)
+    got = {r[key]: r["v"] for r in spark.read.parquet(upsert).collect()}
+    assert got == {1: "a", 2: "y", 3: "c"}
+    assert {r[key] for r in spark.read.parquet(ignore).collect()} == {1, 2, 3}
+
+
+def test_upsert_into_an_empty_table(spark, tmp_path):
+    """A table created from an empty batch takes later upserts: adaptive
+    execution drops the join of an empty table from the plan, and the
+    counts must not be observed below it."""
+    empty = spark.createDataFrame([], "id bigint, v string")
+    path = str(tmp_path / "u")
+    assert upsert_by_key(spark, empty, path) == (0, 0)
+    assert upsert_by_key(spark, _batch(spark, [(1, "a")]), path) == (0, 1)
+    assert upsert_by_key(spark, empty, path) == (0, 0)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "a")]
+
+
+def test_upsert_counts_on_a_duplicate_key_target(spark, tmp_path):
+    """A target that stores a key twice (not one these sinks built): each
+    stored copy is a replaced row, as in SQL MERGE's affected-row count, and
+    n_inserted is the batch rows minus that, the table's net growth."""
+    path = str(tmp_path / "u")
+    _batch(spark, [(1, "a"), (1, "b"), (5, "e")]).write.parquet(path)
+    assert upsert_by_key(spark, _batch(spark, [(1, "x"), (2, "y")]), path) == (2, 0)
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "x"), (2, "y"), (5, "e")]
+
+
+def test_upsert_counts_equal_matched_keys_randomized(spark, tmp_path):
+    """On tables these sinks built, the observed (replaced, inserted) counts
+    equal the matched-key count of a separate semi-join and the new keys."""
+    import random
+
+    rng = random.Random(5)
+    path = str(tmp_path / "u")
+    insert_ignore_by_name(spark, _batch(spark, [(k, "s") for k in range(0, 40, 3)]), path)
+    for step in range(4):
+        rows = [(rng.randrange(60), f"v{step}") for _ in range(rng.randrange(1, 25))]
+        batch = _batch(spark, rows)
+        stored = {r["id"] for r in spark.read.parquet(path).select("id").collect()}
+        keys = {k for k, _ in rows}
+        assert upsert_by_key(spark, batch, path) == (
+            len(keys & stored), len(keys - stored)
+        ), step
 
 
 @pytest.mark.parametrize("step", ["rename_aside", "rename_in", "delete_old"])

@@ -527,3 +527,159 @@ def test_snapshot_where_type_mismatch_keeps_directory(spark, table):
     # cast) still applies
     got = table.snapshot_where(spark, "id", lo="100", hi=None)
     assert sorted(r["id"] for r in got.collect()) == [100]
+
+
+def _manifest_schema(t, v=None):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    m = t._read_manifest(t.latest_version() if v is None else v)
+    return StructType.fromJson(json.loads(m["schema"]))
+
+
+def test_manifest_schema_follows_each_rewrite(spark, table):
+    """Every write that does not keep the base records the schema it wrote:
+    reads use the manifest's schema, so a stale one would null the new
+    columns. An append keeps the base's."""
+    table.replace(
+        spark.createDataFrame([(1, 0.5, "t")], "id bigint, score double, tag string")
+    )
+    assert _manifest_schema(table).fieldNames() == ["id", "score", "tag"]
+    assert _rows(table.snapshot(spark)) == [(1, 0.5, "t")]
+    table.append(spark.createDataFrame([(2, 1.5, "u")], "id bigint, score double, tag string"))
+    assert _manifest_schema(table).fieldNames() == ["id", "score", "tag"]
+    table.merge(
+        spark, spark.createDataFrame([(2, 2.5, "m")], "id int, score double, tag string"), "id"
+    )
+    assert _rows(table.snapshot(spark)) == [(1, 0.5, "t"), (2, 2.5, "m")]
+    table.compact(spark)
+    assert _manifest_schema(table).simpleString() == "struct<id:bigint,score:double,tag:string>"
+    assert _rows(table.snapshot(spark)) == [(1, 0.5, "t"), (2, 2.5, "m")]
+
+
+def test_append_with_an_added_column_keeps_it(spark, table):
+    """An append keeps the base's schema and adds the columns its frame
+    brings; rows of older directories read null there."""
+    table.append(
+        spark.createDataFrame([(3, "c", 30.0, "x")], "id bigint, name string, v double, w string")
+    )
+    assert _manifest_schema(table).fieldNames() == ["id", "name", "v", "w"]
+    assert _rows(table.snapshot(spark)) == [
+        (1, "a", 10.0, None), (2, "b", 20.0, None), (3, "c", 30.0, "x")
+    ]
+
+
+def test_manifest_schema_round_trips_any_name(spark, tmp_path):
+    """The JSON schema keeps names that a simpleString cannot parse back."""
+    t = TxnTable(str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, "a")], "`n x` bigint, `a,b:c` string"))
+    assert _manifest_schema(t).fieldNames() == ["n x", "a,b:c"]
+    assert _rows(t.snapshot(spark)) == [(1, "a")]
+
+
+def test_legacy_simple_string_manifest_still_reads(spark, table):
+    """Manifests written before JSON schemas carry a simpleString: reads
+    fall back to inferring the schema, and later writes keep working."""
+    import json
+
+    m = table._read_manifest(0)
+    m["schema"] = "struct<id:bigint,name:string,v:double>"
+    with open(table._manifest_path(0), "w") as fh:
+        json.dump(m, fh)
+    assert _rows(table.snapshot(spark)) == [(1, "a", 10.0), (2, "b", 20.0)]
+    table.append(spark.createDataFrame([(3, "c", 30.0)], "id bigint, name string, v double"))
+    assert len(_rows(table.snapshot_where(spark, "id", 2, 3))) == 2
+    table.merge(spark, spark.createDataFrame([(1, "z", 1.0)], "id bigint, name string, v double"), "id")
+    assert _rows(table.snapshot(spark))[0] == (1, "z", 1.0)
+
+
+def test_observed_stats_equal_read_back(spark, tmp_path):
+    """The stats a write observes equal the min/max read back from the
+    directory it wrote, for every atomic type; an all-null column and an
+    empty frame record none, and a nested column is never a stat."""
+    import datetime as dt
+    import decimal
+
+    schema = (
+        "by tinyint, sh smallint, i int, l bigint, f float, d double, "
+        "dec decimal(12,3), s string, dt date, ts timestamp, tn timestamp_ntz, "
+        "b boolean, nul string, arr array<int>"
+    )
+    rows = [
+        (
+            int(k % 100), k * 3, -k, k * 10**9, k / 3, -k / 7,
+            decimal.Decimal(k) / 8, f"s{k:03d}", dt.date(2020, 1, 1) + dt.timedelta(days=k),
+            dt.datetime(2021, 3, 4, 5) + dt.timedelta(hours=k * 7),
+            dt.datetime(2022, 1, 1) + dt.timedelta(minutes=k), k % 2 == 0, None, [k],
+        )
+        for k in (5, 1, 9, 3)
+    ]
+    t = TxnTable(str(tmp_path / "t"))
+    assert set(TxnTable._STATS_ATOMIC) == {
+        "byte", "short", "integer", "long", "float", "double", "decimal",
+        "string", "date", "timestamp", "timestamp_ntz", "boolean",
+    }
+    t.create(spark.createDataFrame(rows, schema))
+    t.append(spark.createDataFrame([], schema))
+    v0, v1 = t._read_manifest(0), t._read_manifest(1)
+    (rel,), empty = v0["dirs"], v1["dirs"][1]
+    back = spark.read.parquet(os.path.join(t.data_dir, rel))
+    cols = [f.name for f in back.schema.fields if f.dataType.typeName() in TxnTable._STATS_ATOMIC]
+    row = back.agg(*[F.min(F.col(c)) for c in cols], *[F.max(F.col(c)) for c in cols]).first()
+    want = {
+        c: [TxnTable._json_stat(row[i]), TxnTable._json_stat(row[len(cols) + i])]
+        for i, c in enumerate(cols)
+        if row[i] is not None
+    }
+    assert v0["stats"][rel] == want
+    assert set(want) == set(cols) - {"nul"} and "arr" not in want
+    assert v1["stats"][empty] == {}
+    assert spark.read.parquet(os.path.join(t.data_dir, empty)).count() == 0
+
+
+@pytest.mark.parametrize("name", ["a.b", "c d", "g`x"])
+def test_txn_takes_any_column_name(spark, tmp_path, name):
+    """Columns named with a dot, a space or a backtick: create observes
+    their stats, merge keys on them, snapshot_where and change_feed filter
+    and diff on them, and compact sorts by them."""
+    schema = "`" + name.replace("`", "``") + "` bigint, v string"
+    t = TxnTable(str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    assert t._read_manifest(0)["stats"][t._read_manifest(0)["dirs"][0]][name] == [1, 2]
+    t.merge(spark, spark.createDataFrame([(2, "x"), (3, "c")], schema), key=name)
+    assert _rows(t.snapshot(spark)) == [(1, "a"), (2, "x"), (3, "c")]
+    assert _rows(t.snapshot_where(spark, name, 2, 3)) == [(2, "x"), (3, "c")]
+    feed = {r[name]: r["_change_type"] for r in t.change_feed(spark, name, 0).collect()}
+    assert feed == {2: "update_postimage", 3: "insert"}
+    t.compact(spark, sort_cols=[name])
+    assert _rows(t.snapshot(spark)) == [(1, "a"), (2, "x"), (3, "c")]
+
+
+def test_txn_job_ceilings(spark, tmp_path, count_jobs):
+    """Job ceilings of the transaction log at a small fixture: a write is
+    one observed job (the stats ride along), a read infers no schema, and
+    merge is the rewrite's AQE stages."""
+    def frame(lo, hi):
+        path = str(tmp_path / f"b{lo}")
+        spark.range(lo, hi).select(
+            F.col("id").alias("event_id"), (F.col("id") * 0.5).alias("value")
+        ).write.parquet(path)
+        return spark.read.parquet(path)
+
+    log, keyed = TxnTable(str(tmp_path / "log")), TxnTable(str(tmp_path / "keyed"))
+    base = frame(0, 400)
+    log.create(base)
+    keyed.create(base)
+    batch = frame(300, 500)
+    assert count_jobs(lambda: log.append(batch)) == (1, 1)
+    assert count_jobs(lambda: log.compact(spark))[1] <= 1
+    assert count_jobs(lambda: keyed.merge(spark, batch, "event_id"))[1] <= 4
+    agg, jobs = count_jobs(
+        lambda: keyed.snapshot(spark).agg(F.count(F.lit(1)), F.sum("event_id")).collect()
+    )
+    assert tuple(agg[0]) == (500, sum(range(500))) and jobs <= 2, jobs
+    got, jobs = count_jobs(
+        lambda: len(log.snapshot_where(spark, "event_id", 450, 460).collect())
+    )
+    assert got == 11 and jobs <= 1, jobs
