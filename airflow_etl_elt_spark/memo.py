@@ -4,7 +4,9 @@ Prepared catalog plans, resolved table relations, Catalyst size and
 partition-count estimates, parquet footer stats, small dimension lookups and
 ``pandas_udf`` objects are all pure functions of (session, immutable
 fixture files), and re-deriving them costs tens of milliseconds of driver
-time per query build. They all live here, under one policy:
+time per query build. They all live here, beside the one piece of mutable
+state bound to the same session (``operators._cache.rotate_persist``'s live
+frames per tag), under one policy:
 
 - **Lifetime.** Entries belong to the live ``SparkContext``. A call that
   finds a different active context first drops the whole store, so nothing
@@ -20,7 +22,8 @@ time per query build. They all live here, under one policy:
   catalog key resolves to (``sources.layout`` overrides) calls
   ``clear("plans")``.
 
-Values are plan metadata and code objects, never table data.
+Values are plan metadata, code objects and persisted-frame handles, never
+table data.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ CAPS: dict[str, int] = {
     "partition_counts": 4096,  # semanticHash -> planned partitions
     "udfs": 64,  # (name, *params) -> pandas_udf object
     "lookups": 64,  # (name, sf) -> small query-parameter lookup
+    "persist": 256,  # rotate_persist tag -> its live persisted frames
 }
 
 _lock = threading.Lock()
@@ -74,6 +78,19 @@ def get(ns: str, key: Hashable, compute: Callable[[], T]) -> T:
     with _lock:
         entries = _entries(ns)
         entries[key] = value
+        entries.move_to_end(key)
+        while len(entries) > CAPS[ns]:
+            entries.popitem(last=False)
+    return value
+
+
+def update(ns: str, key: Hashable, fn: Callable[[T | None], T]) -> T:
+    """Store and return ``fn(old)`` under ``key`` in ``ns`` (``old`` is None
+    on a miss) as one step under the lock, so no concurrent caller's update
+    interleaves with it. ``fn`` must be quick and must not call the memo."""
+    with _lock:
+        entries = _entries(ns)
+        entries[key] = value = fn(entries.get(key))
         entries.move_to_end(key)
         while len(entries) > CAPS[ns]:
             entries.popitem(last=False)

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_LIVE: dict[str, list[DataFrame]] = {}
+from airflow_etl_elt_spark import memo
 
 
 def rotate_persist(
@@ -47,16 +47,25 @@ def rotate_persist(
     shares its plan with ``df`` or with a frame that stays live: unpersisting
     it would uncache them too. ``df`` is persisted only if its plan is not
     cached already, which would be a no-op that Spark warns about ("Asked
-    to cache already cached data")."""
-    live = _LIVE.setdefault(tag, [])
-    stay = live[max(0, len(live) - keep + 1):]
-    for prev in live[: len(live) - len(stay)]:
+    to cache already cached data").
+
+    The live frames of each tag are a ``memo`` namespace: the rotation is
+    one update under the memo lock, and its state ends with its context."""
+    evict: list[DataFrame] = []
+
+    def rotate(live: list[DataFrame] | None) -> list[DataFrame]:
+        live = live or []
+        stay = live[max(0, len(live) - keep + 1):]
+        evict[:] = live[: len(live) - len(stay)]
+        return [*stay, df]
+
+    stay = memo.update("persist", tag, rotate)[:-1]
+    for prev in evict:
         try:
             if not any(prev.sameSemantics(f) for f in (*stay, df)):
                 prev.unpersist()
         except Exception:
             pass  # session may be gone; nothing to free
-    live[:] = [*stay, df]
     level = df.storageLevel
     if not (level.useMemory or level.useDisk):
         df.persist()

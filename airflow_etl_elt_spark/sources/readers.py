@@ -17,10 +17,12 @@ write-side counterpart.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from airflow_etl_elt_spark import memo
 
@@ -76,6 +78,66 @@ def _footer_stats(path: str, column: str) -> tuple[float, float, int] | None:
     except Exception:
         res = None
     return res
+
+
+#: the footer key under which Spark's parquet writer stores the frame's
+#: schema as JSON; Spark's own schema inference reads it back
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema_rows(path: str) -> tuple[StructType | None, int | None]:
+    """``(schema, rows)`` of the parquet directory ``path`` from one
+    driver-side pass over its part-file footers, so a caller that passes
+    the schema to ``spark.read.schema`` launches no inference job.
+
+    Files whose names start with ``_`` or ``.`` (``_SUCCESS``, ``.crc``) or
+    end in ``._COPYING_`` are skipped, as Spark's file index skips them.
+    ``schema`` is the Spark schema stored in every footer, made nullable as
+    a parquet read makes it; it is None when a footer lacks it (a file
+    written by another writer) or two footers store different schemas.
+    Both are None when the listing holds anything but plain part files
+    (partition directories, ``_metadata`` summaries) or a footer cannot be
+    read: the caller then lets Spark infer the schema and count the rows,
+    and Spark reports whatever is wrong with the table."""
+    try:
+        import pyarrow.parquet as pq
+
+        names = sorted(os.listdir(path))
+        parts = [n for n in names if not (n.startswith(("_", ".")) or n.endswith("._COPYING_"))]
+        if any(not os.path.isfile(os.path.join(path, n)) for n in parts) or any(
+            n.startswith(("_metadata", "_common_metadata")) for n in names
+        ):
+            return None, None
+        schemas, rows = set(), 0
+        for n in parts:
+            md = pq.read_metadata(os.path.join(path, n))
+            rows += md.num_rows
+            stored = (md.metadata or {}).get(SPARK_ROW_METADATA.encode())
+            schemas.add(stored and json.dumps(_as_nullable(json.loads(stored))))
+        if len(schemas) != 1 or None in schemas:
+            return None, rows
+        return StructType.fromJson(json.loads(schemas.pop())), rows
+    except Exception:
+        return None, None
+
+
+def _as_nullable(t):
+    """A Spark JSON data type with every field, element and value nullable
+    (Scala's ``StructType.asNullable``, which a parquet read applies)."""
+    if not isinstance(t, dict):
+        return t
+    if t.get("type") == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])} for f in t["fields"]
+        ]}
+    if t.get("type") == "array":
+        return {**t, "containsNull": True, "elementType": _as_nullable(t["elementType"])}
+    if t.get("type") == "map":
+        return {
+            **t, "valueContainsNull": True,
+            "keyType": _as_nullable(t["keyType"]), "valueType": _as_nullable(t["valueType"]),
+        }
+    return t
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:

@@ -10,11 +10,18 @@ Reference parity:
 - Dataset outlets (``dags/etl_elt_wine.py:195,223``) → commit-marker files,
   consumed by plans.pipeline's dataset-trigger gate.
 
-One keyed-merge core (``_one_per_key``, ``_by_name``, ``_merged``) serves
+One keyed-merge core (``_one_per_key``, ``_by_name``, ``_kept``) serves
 ``insert_ignore_by_name``, ``upsert_by_key`` and ``sources.txn.TxnTable.merge``;
 ``upsert_by_key`` swaps its rewrite into a plain parquet directory crash-safely.
-Every count these writes return is an ``Observation`` on the write itself (no
-cache, no second job), and caller column names are quoted (``quote_ident``).
+A rewrite is the stored rows whose key the raw batch lacks (a left anti-join
+whose build side broadcasts straight off the batch scan) unioned with the
+one-row-per-key batch, so the batch is deduplicated and shuffled once. The
+target's schema and stored row count come from its part-file footers
+(``readers.footer_schema_rows``), so no job infers them; every other count
+these writes return is an ``Observation`` on the write itself (no cache, no
+second job). Each keyed write is thus three jobs: the batch-dedup shuffle,
+the broadcast and the write. A hive-partitioned target keeps its partition
+directories. Caller column names are quoted (``quote_ident``).
 
 Scale notes: the anti-join in ``insert_ignore_by_name`` shuffles both sides on
 the key. At 100 TB the "existing" side should be key-bucketed at rest so the
@@ -36,6 +43,7 @@ from pyspark.sql import functions as F
 
 from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators.relational import quote_ident
+from airflow_etl_elt_spark.sources.readers import footer_schema_rows
 
 def write_partitioned(
     df: DataFrame,
@@ -104,25 +112,52 @@ def _by_name(batch: DataFrame, columns: list[str]) -> DataFrame:
     return batch.select(*map(quote_ident, columns))
 
 
-def _merged(existing: DataFrame, batch: DataFrame, key: str):
-    """``MERGE INTO`` as one rewrite: the stored rows whose key the (one row
-    per key) batch does not carry, plus the batch; and a function giving,
-    once it has run, ``(stored rows replaced, batch rows)`` as it observed
-    them. Replaced rows are counted above the join that flags them: adaptive
-    execution drops the join of an empty table, with all below it."""
-    replaced, added = Observation(), Observation()
-    hit = f"__hit_{uuid.uuid4().hex}"  # a flag no stored column can share
-    flagged = existing.join(batch.select(quote_ident(key), F.lit(1).alias(hit)), key, "left")
-    kept = flagged.observe(replaced, F.count(hit).alias("n")).filter(F.col(hit).isNull())
-    merged = kept.drop(hit).unionByName(batch.observe(added, F.count(F.lit(1)).alias("n")))
-    return merged, lambda: (replaced.get["n"], added.get["n"])
+def _kept(existing: DataFrame, batch: DataFrame, key: str) -> DataFrame:
+    """The stored rows whose ``key`` the batch does not carry: the half of
+    ``MERGE INTO`` that a rewrite keeps beside the one-row-per-key batch.
+    A left anti-join ignores duplicate keys, so its build side needs no
+    dedup and broadcasts straight off the raw batch scan; the batch's only
+    dedup and shuffle is the one-row-per-key frame the caller unions in."""
+    return existing.join(batch.select(quote_ident(key)), key, "left_anti")
 
 
-def _write_counted(df: DataFrame, path: str) -> int:
-    """Overwrite ``path`` with ``df``; the row count is observed by the
-    write itself instead of re-running the lineage in a second job."""
+def _counted(df: DataFrame, obs: Observation) -> DataFrame:
+    """``df`` with its row count observed into ``obs`` as ``n``."""
+    return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+
+def _read_target(spark: SparkSession, path: str) -> tuple[DataFrame, int | None]:
+    """The stored table at ``path`` and its row count, both from its part
+    files' footers (``readers.footer_schema_rows``), so reading it infers
+    no schema in a job. A footer without Spark's schema (another writer's
+    file) falls back to inference; a listing with partition directories
+    also returns no count."""
+    schema, rows = footer_schema_rows(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path), rows
+
+
+def _partition_cols(path: str) -> list[str]:
+    """The hive partition columns of the table at ``path``, outermost
+    first, read off its first chain of ``name=value`` directories."""
+    cols = []
+    while True:
+        sub = [
+            n for n in sorted(os.listdir(path))
+            if "=" in n and not n.startswith(".") and os.path.isdir(os.path.join(path, n))
+        ]
+        if not sub:
+            return cols
+        cols.append(sub[0].split("=", 1)[0])
+        path = os.path.join(path, sub[0])
+
+
+def _write_counted(df: DataFrame, path: str, partition_by: list[str] | tuple = ()) -> int:
+    """Overwrite ``path`` with ``df``, hive-partitioned by ``partition_by``;
+    the row count is observed by the write itself instead of re-running the
+    lineage in a second job."""
     obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    _counted(df, obs).write.partitionBy(*partition_by).mode("overwrite").parquet(path)
     return obs.get["n"]
 
 
@@ -146,18 +181,21 @@ def insert_ignore_by_name(spark: SparkSession, batch: DataFrame, path: str, key:
     if not os.path.exists(path):
         return _write_counted(_one_per_key(batch, key), path)
 
-    existing = spark.read.parquet(path)
+    existing, _ = _read_target(spark, path)
     new_rows = _one_per_key(_by_name(batch, existing.columns), key).join(
         existing.select(quote_ident(key)), on=key, how="left_anti"
     )
     # A multi-file append is not atomic w.r.t. concurrent readers; the reference's
     # concurrency=1 guard (etl_elt_wine.py:72,94) is the pipeline runner's lock.
     stage = f"{path}.__insert_{uuid.uuid4().hex[:8]}"
-    n = _write_counted(new_rows, stage)
+    n = _write_counted(new_rows, stage, _partition_cols(path))
     if n:
-        for f in os.listdir(stage):
-            if not f.lstrip(".").startswith("_"):  # part files and their .crc
-                os.replace(os.path.join(stage, f), os.path.join(path, f))
+        for root, _, files in os.walk(stage):
+            dest = os.path.join(path, os.path.relpath(root, stage))
+            for f in files:
+                if not f.lstrip(".").startswith("_"):  # part files and their .crc
+                    os.makedirs(dest, exist_ok=True)
+                    os.replace(os.path.join(root, f), os.path.join(dest, f))
         memo.invalidate_path(path)  # memoized listings don't see new files
     shutil.rmtree(stage)
     return n
@@ -185,11 +223,22 @@ def upsert_by_key(
     """Keyed upsert — ``MERGE INTO`` semantics for a parquet target:
     WHEN MATCHED the batch row replaces the stored row, WHEN NOT MATCHED it
     inserts. The ELT complement of ``insert_ignore_by_name`` (which never
-    updates). Returns ``(n_updated, n_inserted)``, observed by the rewrite:
-    the stored rows replaced (SQL ``MERGE``'s affected-row count) and the
-    batch keys minus those. On tables these sinks built, keys are unique and
-    these are the matched and the new keys; on a target storing key 1 twice,
-    a batch of keys {1, 2} returns ``(2, 0)``, the net growth as inserts.
+    updates). Returns ``(n_updated, n_inserted)``: the stored rows replaced
+    (SQL ``MERGE``'s affected-row count) and the batch keys minus those. On
+    tables these sinks built, keys are unique and these are the matched and
+    the new keys; on a target storing key 1 twice, a batch of keys {1, 2}
+    returns ``(2, 0)``, the net growth as inserts.
+
+    Shape: the rewrite is the stored rows whose key the raw batch lacks (a
+    left anti-join, broadcast off the batch scan) unioned with the
+    one-row-per-key batch, the batch's only dedup and shuffle. The write
+    observes the kept rows and the batch rows above the join, and
+    ``n_updated`` is the stored rows minus the kept ones. The stored count
+    and the schema come from the target's footers, so the call is three
+    jobs; a target whose footers lack Spark's schema is read by inference,
+    and one with partition directories is also counted by a job. Counting
+    the stored rows outside the plan keeps the counts right on an empty
+    target, whose join adaptive execution drops with all below it.
 
     - Columns match by NAME (batch projected to target order; missing
       columns raise — same BY NAME contract as insert_ignore).
@@ -220,18 +269,23 @@ def upsert_by_key(
     if not os.path.exists(path):
         return 0, _write_counted(one_per_key, path)
 
-    existing = spark.read.parquet(path)
-    merged, counts = _merged(existing, _by_name(one_per_key, existing.columns), key)
+    existing, stored = _read_target(spark, path)
+    if stored is None:
+        stored = existing.count()
+    kept, added = Observation(), Observation()
+    merged = _counted(_kept(existing, batch, key), kept).unionByName(
+        _counted(_by_name(one_per_key, existing.columns), added)
+    )
 
     tag = uuid.uuid4().hex[:8]
     tmp, old = f"{path}.__upsert_tmp_{tag}", f"{path}.__upsert_old_{tag}"
-    merged.write.mode("overwrite").parquet(tmp)
+    merged.write.partitionBy(*_partition_cols(path)).mode("overwrite").parquet(tmp)
     os.replace(path, old)
     os.replace(tmp, path)
     shutil.rmtree(old)
     memo.invalidate_path(path)
-    n_updated, n_batch = counts()
-    return n_updated, n_batch - n_updated
+    n_updated = stored - kept.get["n"]
+    return n_updated, added.get["n"] - n_updated
 
 
 def write_bucketed(

@@ -57,7 +57,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from airflow_etl_elt_spark.operators.relational import quote_ident
-from airflow_etl_elt_spark.sources.sinks import _merged, _one_per_key
+from airflow_etl_elt_spark.sources.readers import _as_nullable
+from airflow_etl_elt_spark.sources.sinks import _kept, _one_per_key
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -122,15 +123,15 @@ class TxnTable:
         for _ in range(max_retries):
             base = -1 if op == "create" else self.latest_version()
             m = self._read_manifest(base) if base >= 0 else {}
+            df = data(base, m) if callable(data) else data
+            if df is None:
+                return base
+            schema = self._schema(m.get("schema", "") if keep_base else "", df)
             if rel is None or callable(data):
-                df = data(base, m) if callable(data) else data
-                if df is None:
-                    return base
                 observed, dir_stats = self._observed(df)
                 rel = self._write_data(observed)
                 rel_stats = dir_stats()
             dirs = (m["dirs"] if keep_base else []) + [rel]
-            schema = self._schema(m.get("schema", "") if keep_base else "", df)
             stats = {**(m.get("stats", {}) if keep_base else {}), rel: rel_stats}
             try:
                 self._commit(base + 1, {"op": op, "dirs": dirs, "schema": schema, "stats": stats})
@@ -142,11 +143,22 @@ class TxnTable:
     @staticmethod
     def _schema(base: str, df: DataFrame) -> str:
         """The manifest schema of ``df`` written over a kept ``base`` schema
-        (or ""): the base's columns, then those ``df`` adds. A simpleString
-        base from before JSON schemas stays as it is."""
+        (or ""): the base's columns, then those ``df`` adds. A column both
+        hold must keep its type (nullability aside), or every later read of
+        the snapshot would fail on the new directory: ValueError, raised
+        before anything is written. A simpleString base from before JSON
+        schemas stays as it is."""
         if base and not base.startswith("{"):
             return base
         old = StructType.fromJson(json.loads(base)) if base else StructType()
+        for f in df.schema:
+            if f.name in old.names:
+                stored = old[f.name].dataType
+                if _as_nullable(stored.jsonValue()) != _as_nullable(f.dataType.jsonValue()):
+                    raise ValueError(
+                        f"column {f.name!r} is {f.dataType.simpleString()} in the frame "
+                        f"but {stored.simpleString()} in the table"
+                    )
         return StructType(old.fields + [f for f in df.schema if f.name not in old.names]).json()
 
     # ---- table operations -------------------------------------------------
@@ -196,10 +208,10 @@ class TxnTable:
         another writer commits first, the attempt discards its directory
         reference and recomputes against the new snapshot — no torn state
         is ever visible because only the manifest create is a commit."""
-        batch = _one_per_key(batch, key, order_col)
+        one_per_key = _one_per_key(batch, key, order_col)
         return self._write_version(
             "merge",
-            lambda base, m: _merged(self.snapshot(spark, base), batch, key)[0],
+            lambda base, m: _kept(self.snapshot(spark, base), batch, key).unionByName(one_per_key),
             max_retries=max_retries,
         )
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airflow_etl_elt_spark.operators.relational import surrogate_key
 from airflow_etl_elt_spark.sources.readers import read_table
 
 # bump to invalidate previously staged drop directories after a layout change
@@ -73,6 +74,21 @@ def _stage_dir(sf_dir: str, variant: str, src_table: str = "events") -> str:
         f"{_STAGE_VERSION}|{source_identity(sf_dir, src_table)}|{variant}".encode()
     ).hexdigest()[:16]
     return os.path.join(_STAGE_ROOT, key)
+
+
+def _ntile(df: DataFrame, n: int, order_by: list[str]) -> DataFrame:
+    """``df`` with ``__drop = ntile(n) OVER (ORDER BY order_by)``, without
+    the single-task global window: ntile's bucket formula (the first
+    ``rows % n`` buckets hold one row more) over the dense global row number
+    that ``surrogate_key`` builds from range partitions and per-partition
+    counts. The stagers collect the result at once; its persisted frame
+    then takes one of the two live slots of ``surrogate_key``'s persist
+    rotation until later calls rotate it out."""
+    q, r = divmod(df.count(), n)
+    i = F.col("__drop") - 1  # 0-based global position
+    big = r * (q + 1)  # rows in the first r buckets
+    bucket = F.when(i < big, F.floor(i / (q + 1))).otherwise(r + F.floor((i - big) / max(q, 1)))
+    return surrogate_key(df, order_by, "__drop").withColumn("__drop", (bucket + 1).cast("int"))
 
 
 def _publish_staged(out: str, write_files) -> str:
@@ -126,14 +142,10 @@ def stage_event_drops(
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    # rows with null ts cannot be ordered into drops; put them in drop 0
+    # rows with null ts cannot be ordered into drops; put them in drop 1
     # (they are either filtered by the operator under test or time-agnostic)
-    bucket = F.when(
-        F.col("ts").isNull(), F.lit(1)
-    ).otherwise(
-        F.ntile(n_drops).over(Window.orderBy(F.col("ts"), F.col("event_id")))
-    )
-    ev = ev.withColumn("__drop", bucket)
+    ev = _ntile(ev, n_drops, ["ts", "event_id"])
+    ev = ev.withColumn("__drop", F.when(F.col("ts").isNull(), F.lit(1)).otherwise(F.col("__drop")))
 
     if variant == "dups":
         dups = ev.filter(F.col("event_id") % 10 == 0)  # same-drop duplicates
@@ -233,8 +245,8 @@ def stage_document_drops(spark: SparkSession, sf_dir: str, n_drops: int = 4) -> 
         read_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id", "text")
-        .withColumn("__drop", F.ntile(n_drops).over(Window.orderBy("doc_id")))
     )
+    docs = _ntile(docs, n_drops, ["doc_id"])
 
     import pyarrow as pa
     import pyarrow.parquet as pq

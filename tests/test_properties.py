@@ -415,13 +415,15 @@ def test_surrogate_key_distributed_two_live_results(spark):
 def test_rotate_persist_keep_bounds_live_cache(spark):
     """The rotation still bounds the live cache: under keep=1 a third call
     leaves exactly one persisted frame under the tag; under keep=2, two."""
-    from airflow_etl_elt_spark.operators._cache import _LIVE, rotate_persist
+    from airflow_etl_elt_spark import memo
+    from airflow_etl_elt_spark.operators._cache import rotate_persist
 
     for tag, keep, want in (("__t_k1", 1, 1), ("__t_k2", 2, 2)):
         for i in range(3):
             rotate_persist(tag, spark.range(i + 1), keep=keep)
-        assert len(_LIVE[tag]) == want
-        for df in _LIVE.pop(tag):
+        live = memo.get("persist", tag, list)
+        assert len(live) == want
+        for df in live:
             df.unpersist()
 
 
@@ -430,7 +432,8 @@ def test_rotate_persist_repeated_plan_stays_cached(spark):
     older frame must not unpersist the entry the returned frame (and, under
     keep=2, the frame before it) still reads: keep=1's second identical
     call and keep=2's last two of three come back cached."""
-    from airflow_etl_elt_spark.operators._cache import _LIVE, rotate_persist
+    from airflow_etl_elt_spark import memo
+    from airflow_etl_elt_spark.operators._cache import rotate_persist
 
     def cached(df):
         level = df.storageLevel
@@ -444,8 +447,25 @@ def test_rotate_persist_repeated_plan_stays_cached(spark):
         ]
         assert all(cached(df) for df in frames[-keep:])
         assert sorted(r["x"] for r in frames[-1].collect()) == [3 * i for i in range(7)]
-        for df in _LIVE.pop(tag):
+        for df in memo.get("persist", tag, list):
             df.unpersist()
+
+
+def test_rotate_persist_state_ends_with_its_context(spark, monkeypatch):
+    """The rotation state is a ``memo`` namespace: a new SparkContext starts
+    with no live frames under any tag, so its first call evicts nothing a
+    stopped context persisted."""
+    from pyspark import SparkContext
+
+    from airflow_etl_elt_spark import memo
+    from airflow_etl_elt_spark.operators._cache import rotate_persist
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    df = rotate_persist("__t_ctx", spark.range(5), materialize=False)
+    assert memo.get("persist", "__t_ctx", list) == [df]
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    assert memo.get("persist", "__t_ctx", list) == []
+    df.unpersist()
 
 
 def test_dedup_minhash_second_fresh_build_reads_cached_signatures(spark, monkeypatch):

@@ -570,6 +570,24 @@ def test_append_with_an_added_column_keeps_it(spark, table):
     ]
 
 
+def test_append_of_a_changed_column_type_is_rejected(spark, table):
+    """An append whose shared column has another type (``id string`` into
+    an ``id bigint`` table) raises before it writes a data directory: the
+    latest version stays, and the table still reads. Nullability alone is
+    no change."""
+    dirs = sorted(os.listdir(table.data_dir))
+    bad = spark.createDataFrame([("3", "c", 30.0)], "id string, name string, v double")
+    with pytest.raises(ValueError, match=r"'id' is string in the frame but bigint"):
+        table.append(bad)
+    assert table.latest_version() == 0
+    assert sorted(os.listdir(table.data_dir)) == dirs
+    assert _rows(table.snapshot(spark)) == [(1, "a", 10.0), (2, "b", 20.0)]
+    strict = spark.range(3, 4).selectExpr("id", "'c' AS name", "30.0D AS v")
+    assert not strict.schema["id"].nullable
+    assert table.append(strict) == 1
+    assert _rows(table.snapshot(spark))[-1] == (3, "c", 30.0)
+
+
 def test_manifest_schema_round_trips_any_name(spark, tmp_path):
     """The JSON schema keeps names that a simpleString cannot parse back."""
     t = TxnTable(str(tmp_path / "t"))
@@ -659,7 +677,8 @@ def test_txn_takes_any_column_name(spark, tmp_path, name):
 def test_txn_job_ceilings(spark, tmp_path, count_jobs):
     """Job ceilings of the transaction log at a small fixture: a write is
     one observed job (the stats ride along), a read infers no schema, and
-    merge is the rewrite's AQE stages."""
+    merge is the rewrite's AQE stages at their floor: the batch-dedup
+    shuffle, the broadcast of the batch keys and the write."""
     def frame(lo, hi):
         path = str(tmp_path / f"b{lo}")
         spark.range(lo, hi).select(
@@ -674,7 +693,7 @@ def test_txn_job_ceilings(spark, tmp_path, count_jobs):
     batch = frame(300, 500)
     assert count_jobs(lambda: log.append(batch)) == (1, 1)
     assert count_jobs(lambda: log.compact(spark))[1] <= 1
-    assert count_jobs(lambda: keyed.merge(spark, batch, "event_id"))[1] <= 4
+    assert count_jobs(lambda: keyed.merge(spark, batch, "event_id"))[1] <= 3
     agg, jobs = count_jobs(
         lambda: keyed.snapshot(spark).agg(F.count(F.lit(1)), F.sum("event_id")).collect()
     )
