@@ -17,6 +17,7 @@ columns by name before hashing values.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,13 +79,28 @@ def _documents_fanned_out(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-WINE_CSV = "/root/reference/data/winequality-white.csv"
+REFERENCE_WINE_CSV = "/root/reference/data/winequality-white.csv"
+FIXTURE_WINE_CSV = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "data", "winequality-white-fixture.csv"
+)
+
+
+def wine_csv() -> str:
+    """The wine CSV that ``csv_scan`` and its oracle read: the reference's
+    UCI file wherever it exists, else the committed wine-shaped fixture
+    (FIXTURES.md §1; made by ``scripts/make_wine_fixture.py``). The
+    fixture path is absolute, so the driver contract works from any cwd."""
+    return REFERENCE_WINE_CSV if os.path.isfile(REFERENCE_WINE_CSV) else FIXTURE_WINE_CSV
+
+
+WINE_CSV = wine_csv()
 
 
 def q_csv_scan(spark: SparkSession, sf: str) -> DataFrame:
     """SURVEY §2 rows 1/9 — `;`-CSV scan with header + inferred types +
-    space→underscore column normalization (utils.py:31-32). Runs on the
-    reference's own wine CSV (input data, not fixture-dir-dependent)."""
+    space→underscore column normalization (utils.py:31-32). Reads
+    ``WINE_CSV``: the reference's wine CSV where present, the committed
+    fixture otherwise (input data, not fixture-dir-dependent)."""
     from airflow_etl_elt_spark.sources.readers import read_csv_normalized
 
     df = read_csv_normalized(spark, WINE_CSV)
@@ -3336,11 +3352,11 @@ def _lang_id_oracle() -> str:
 
 
 ORACLE_SQL: dict[str, str] = {
-    "csv_scan": """
+    "csv_scan": f"""
         SELECT CAST(quality AS INTEGER) AS quality,
                CAST(alcohol AS DOUBLE) AS alcohol,
                CAST("fixed acidity" AS DOUBLE) AS fixed_acidity
-        FROM read_csv('/root/reference/data/winequality-white.csv',
+        FROM read_csv('{WINE_CSV.replace("'", "''")}',
                       delim=';', header=true)
     """,
     "table_scan_project": "SELECT o_orderkey, o_totalprice FROM orders",
