@@ -26,6 +26,10 @@ first result's correctness hangs on (ADVICE r5). The constraint is then "at
 most ``keep`` results of that operator live at once" — documented at the
 call sites; interleaving more concurrent unconsumed results than ``keep``
 re-opens the lineage-pinning hazard this module exists to close.
+
+Nothing here changes session conf: the materializing count runs under the
+caller's own settings, adaptive execution included, so threads sharing the
+session (``plans.pipeline.fan_out``) never observe a flipped conf.
 """
 
 from __future__ import annotations
@@ -38,9 +42,9 @@ from airflow_etl_elt_spark import memo
 def rotate_persist(
     tag: str, df: DataFrame, materialize: bool = True, keep: int = 1
 ) -> DataFrame:
-    """Persist ``df`` (optionally materializing it with a count) after
-    unpersisting all but the newest ``keep - 1`` frames previously
-    registered under ``tag``.
+    """Persist ``df`` (optionally materializing it with a plain
+    ``df.count()`` under the session's conf) after unpersisting all but the
+    newest ``keep - 1`` frames previously registered under ``tag``.
 
     Spark keeps ONE cache entry per plan, shared by every frame whose plan
     ``sameSemantics`` it. So eviction comes first, and skips a frame that
@@ -70,40 +74,6 @@ def rotate_persist(
     if not (level.useMemory or level.useDisk):
         df.persist()
     if materialize:
-        no_aqe_count(df)
+        df.count()
     return df
 
-
-def _without_aqe(df: DataFrame, action):
-    """Run ``action`` (a bound action of ``df``) with adaptive execution
-    OFF — for driver-side bookkeeping actions (cache materialization,
-    convergence probes) whose plans are fixed: AQE submits each internal shuffle map stage as its
-    OWN job before the result job, paying one scheduling round-trip per
-    stage for re-optimization the action can't use (OPTIMIZATION r13 —
-    measured: dedup_minhash's sig materialization 2 jobs -> 1,
-    grouped_stats' box-prefilter action 4 -> 1). The conf is restored
-    before returning, so the QUERY plans consumers build stay adaptive.
-
-    Contract: ``spark.sql.adaptive.enabled`` is a SESSION-wide conf, so
-    for the duration of the action every query on the session plans
-    without AQE. This is safe only while no other thread plans or runs a
-    query on the same session; callers that share one session across
-    threads (``plans.pipeline.fan_out`` with ``max_parallel > 1``) must
-    not reach these helpers concurrently."""
-    conf = df.sparkSession.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        return action()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def no_aqe_count(df: DataFrame) -> int:
-    """``df.count()`` with adaptive execution off — see ``_without_aqe``."""
-    return _without_aqe(df, df.count)
-
-
-def no_aqe_first(df: DataFrame):
-    """``df.first()`` with adaptive execution off — see ``_without_aqe``."""
-    return _without_aqe(df, df.first)

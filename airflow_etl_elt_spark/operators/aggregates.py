@@ -51,12 +51,6 @@ _SELECT_MAX_ROWS = 1 << 17
 # selection is exact over whatever bracket the loop last produced.
 _MAX_HIST_LEVELS = 6
 
-#: input rows below which the selection's literal bounding-box pre-filter
-#: (and its extra driver job) is a net loss — breakeven measured between the
-#: 10x (6M-row, loss) and 100x (60M-row, 2x win) replicas; see
-#: _exact_median_from_bounds.
-_BOX_PREFILTER_MIN_ROWS = 20_000_000
-
 
 #: Fixed-point addend type for order-independent float aggregation: the
 #: 1e-6-grid integers land in DECIMAL(18,0) whose Spark sum buffer
@@ -370,7 +364,6 @@ def grouped_exact_median(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    accuracy: int = 1000,
     value_bounds: tuple[float, float] | None = None,
     total_rows: int | None = None,
 ) -> DataFrame:
@@ -420,11 +413,8 @@ def grouped_exact_median(
     zero width; adversarial near-tie packings exhaust ``_MAX_HIST_LEVELS``)
     still gets an exact, value-compressed selection. NULL group keys are
     not supported (bracket join drops them); filter upstream if present.
-    ``accuracy`` is retained for API compatibility and ignored — the
-    bracket is now exact-count-driven rather than GK-error-driven.
     Returns (group_col, median_val).
     """
-    del accuracy
     vals = df.filter(F.col(value_col).isNotNull()).select(
         group_col, F.col(value_col).cast("double").alias("__v")
     )
@@ -439,7 +429,6 @@ def grouped_exact_median(
             tag=tag,
             levels_done=1,
             depth=_depth_for(total_rows),
-            input_rows=total_rows,
         )
     vd = F.col("__v")
     pre = vals.groupBy(group_col).agg(
@@ -678,8 +667,6 @@ def _exact_median_from_bounds(
     tag: str,
     levels_done: int = 0,
     depth: int | None = None,
-    input_rows: int | None = None,
-    co_materialize: DataFrame | None = None,
 ) -> DataFrame:
     """Refinement levels + tie-compressed selection of the histogram-
     bracketed exact median (see ``grouped_exact_median``). ``vals`` is
@@ -688,8 +675,10 @@ def _exact_median_from_bounds(
     membership entries already in its arrays. ``depth`` = how many MORE
     levels to run; None pays one ONE-row convergence aggregate (max
     unconverged bracket size → levels at ~B-fold shrink per level) — the
-    only driver action in the whole operator, and none at all when the
-    caller sized depth from engine stats. Returns (group_col, median_val).
+    only driver action in the whole operator, a plain ``.first()`` under
+    the session's conf, and none at all when the caller sized depth from
+    engine stats. The selection scan joins every input row to the broadcast
+    brackets. Returns (group_col, median_val).
 
     Every per-level frame is #groups rows, broadcast-joined and pinned via
     ``rotate_persist``; eviction by later calls only ever costs a
@@ -698,12 +687,7 @@ def _exact_median_from_bounds(
     nlevels = levels_done
     bounds = rotate_persist(f"{tag}:l{nlevels}", bounds, materialize=False)
     if depth is None:
-        from airflow_etl_elt_spark.operators._cache import no_aqe_first
-
-        # non-adaptive driver probe (OPTIMIZATION r13): AQE splits this
-        # fixed one-row convergence aggregate into one job per internal
-        # stage — see _cache.no_aqe_count
-        worst = no_aqe_first(bounds.filter(~F.col("__done")).agg(F.max("__inb")))[0]
+        worst = bounds.filter(~F.col("__done")).agg(F.max("__inb")).first()[0]
         depth = (
             0
             if worst is None or worst <= _SELECT_MAX_ROWS
@@ -715,73 +699,8 @@ def _exact_median_from_bounds(
         bounds = _refine_level(vals, group_col, bounds, nlevels)
         nlevels += 1
         bounds = rotate_persist(f"{tag}:l{nlevels}", bounds, materialize=False)
-    # Literal bounding-box pre-filter for the selection scan (r8; measured
-    # at the 100x replica: the full-input BroadcastHashJoin + element_at
-    # bucket chain ran ~90 ns/row over 60M rows = 5.6 s of the key's 7.9 s,
-    # vs ~22 ns/row for a bare codegen scan). The union of the last level's
-    # per-group brackets, widened by ONE FULL CELL per side (>> any FP
-    # boundary rounding), is a VALUE-LITERAL range — two double compares in
-    # the scan stage, no join — and a strict superset of every group's
-    # members, so the exact per-group `_level_member` check after the join
-    # only ever sees bracket-sized input. Sides where any group's bracket
-    # touches a clamp cell (0 or B-1: unbounded tails, NaN at the top) or
-    # has a non-finite cell width (a converged group's +inf padding) are
-    # left unbounded. Cost: one driver .first() over the persisted
-    # #groups-row bounds frame — the same bounded-action precedent as the
-    # depth=None convergence collect, and it materializes a frame the
-    # selection's broadcast needs anyway.
-    #
-    # SIZE-GATED (r8, measured at the 10x replica): the extra driver job
-    # costs one scheduling floor AND serializes the bounds scan ahead of
-    # stages that previously ran concurrently under the single final
-    # action — a net LOSS below ~4M input rows (grouped_stats at 6M rows:
-    # 2.6 -> 3.7 s ungated on a drifting box) and a 2x win at 60M. Callers
-    # that know the input cardinality (engine footer stats) pass it;
-    # unknown-N callers keep the join-only plan. `co_materialize` lets the
-    # caller hitch an independent same-input frame (grouped_stats' base
-    # aggregate) onto the pre-filter job, so the job's floor buys that
-    # stage's materialization too instead of pushing it behind the bounds.
-    sel_input = vals
-    if nlevels >= 1 and input_rows and input_rows >= _BOX_PREFILTER_MIN_ROWS:
-        _B = float(_HIST_BUCKETS)
-        _w = F.element_at("__ws", nlevels)
-        _lo = F.element_at("__los", nlevels)
-        _blo = F.element_at("__blos", nlevels)
-        _bhi = F.element_at("__bhis", nlevels)
-        _finite = ~F.isnan(_w) & (_w > 0) & (_w < float("inf"))
-        box = bounds.agg(
-            F.max(
-                F.when(_finite & (_blo > 0), F.lit(0)).otherwise(F.lit(1))
-            ).alias("lo_open"),
-            F.min(F.when(_finite & (_blo > 0), _lo + (_blo - 1) * _w)).alias(
-                "glo"
-            ),
-            F.max(
-                F.when(_finite & (_bhi < _B - 1), F.lit(0)).otherwise(F.lit(1))
-            ).alias("hi_open"),
-            F.max(
-                F.when(_finite & (_bhi < _B - 1), _lo + (_bhi + 2) * _w)
-            ).alias("ghi"),
-        )
-        if co_materialize is not None:
-            box = box.crossJoin(
-                co_materialize.agg(F.count(F.lit(1)).alias("__com_n"))
-            )
-        from airflow_etl_elt_spark.operators._cache import no_aqe_first
-
-        # non-adaptive (OPTIMIZATION r13): this fixed bookkeeping action
-        # ran as FOUR AQE stage-jobs at the 100x replica; one suffices
-        box = no_aqe_first(box)
-        pre = None
-        if box["lo_open"] == 0 and box["glo"] is not None:
-            pre = v >= float(box["glo"])
-        if box["hi_open"] == 0 and box["ghi"] is not None:
-            hi_pred = v <= float(box["ghi"])
-            pre = hi_pred if pre is None else (pre & hi_pred)
-        if pre is not None:
-            sel_input = vals.filter(pre)
     sel = (
-        sel_input.join(F.broadcast(bounds), group_col)
+        vals.join(F.broadcast(bounds), group_col)
         .filter(_level_member(v, nlevels))
         .groupBy(group_col, "__v")
         .agg(
@@ -834,7 +753,9 @@ def grouped_stats(
       whole-stage codegen — the 100 TB path (``F.median`` buffers one task
       per group: measured 22 s at 6M rows; the r5 GK-sketch variant spent
       4.1 s of its 4.9 s in ObjectHashAggregate — SCALING.md r6 addendum
-      5). Under the catalog plan cache the bounds/bracket frames persist at
+      5). The selection scan reads the whole input through the broadcast
+      bracket join, and every action runs under the session's conf. Under
+      the catalog plan cache the bounds/bracket frames persist at
       first execution, so steady-state re-execution is a single selection
       scan (measured 0.028 s prepared at 6M rows).
     """
@@ -1036,8 +957,6 @@ def grouped_stats(
             tag=tag,
             levels_done=1,
             depth=_depth_for(total_rows),
-            input_rows=total_rows,
-            co_materialize=pre,
         )
     else:
         med = _exact_median_from_bounds(

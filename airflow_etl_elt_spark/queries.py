@@ -2872,12 +2872,12 @@ def q_txn_merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
 # the cohort carrying the oldest driver evidence.
 QUERIES: dict[str, QueryFn] = {
     # --- r13 driver window (VERDICT r12 next-step 8): lead with THIS
-    # round's touched keys — the minhash/dedup family (AQE-off
+    # round's touched keys — the minhash/dedup family (persisted signature
     # materialization + fan_out gate + SQL-text bands + appId-keyed UDF
     # memo), the fan_out-gated text/corpus keys, the SQL-texted
     # window/session/q6/knn builders, grouped_stats (argsort Arrow pass +
-    # non-adaptive probes), q5 (uniqueness assert) and surrogate_key
-    # (rotate_persist rides the non-adaptive count) — then the r10-cohort
+    # median probes), q5 (uniqueness assert) and surrogate_key
+    # (rotate_persist's materializing count) — then the r10-cohort
     # remainder (streaming/txn tiers + the TPC-H long tail, last
     # driver-checked in r10). Keys past 50 are still re-verified every
     # round by scripts/sweep_oracle.py on all committed axes. ---

@@ -1,42 +1,45 @@
 """End-to-end wine pipelines against the reference's golden values
 (BASELINE.md / FIXTURES.md §1, computed from the reference dataset).
 
-The fixture CSV is synthesized wine-shaped data unless the reference CSV is
-present, in which case the exact golden values are pinned:
-4,898 rows; quality>=7 → 1,060; total_sulfur_dioxide<125 → 2,005;
-mean(alcohol): q7=11.3679, q8=11.6360, q9=12.1800.
+The CSV is ``queries.WINE_CSV``: the reference CSV where present, in which
+case the exact golden values are pinned — 4,898 rows; quality>=7 → 1,060;
+total_sulfur_dioxide<125 → 2,005; mean(alcohol): q7=11.3679, q8=11.6360,
+q9=12.1800 — else the committed 500-row fixture, whose expected values are
+recomputed from the file with the stdlib ``csv`` module.
 """
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
 import os
+import statistics
 
 import pytest
 
-REF_CSV = "/root/reference/data/winequality-white.csv"
+from airflow_etl_elt_spark.queries import REFERENCE_WINE_CSV, WINE_CSV
 
 
 @pytest.fixture(scope="module")
-def wine_csv(tmp_path_factory):
-    if os.path.exists(REF_CSV):
-        return REF_CSV
-    # synthesize a deterministic wine-shaped CSV with spaces in headers
-    import random
+def wine_csv():
+    return WINE_CSV
 
-    rng = random.Random(7)
-    path = tmp_path_factory.mktemp("wine") / "wine.csv"
-    cols = [
-        "fixed acidity", "volatile acidity", "citric acid", "residual sugar",
-        "chlorides", "free sulfur dioxide", "total sulfur dioxide", "density",
-        "pH", "sulphates", "alcohol", "quality",
-    ]
-    with open(path, "w") as f:
-        f.write(";".join(cols) + "\n")
-        for _ in range(1000):
-            feats = [round(rng.uniform(0, 200), 3) for _ in range(11)]
-            f.write(";".join(map(str, feats)) + f";{rng.randint(3, 9)}\n")
-    return str(path)
+
+def _expected_from_file(path):
+    """Raw rows, quality>=7 rows, total_sulfur_dioxide<125 rows and the
+    per-quality alcohol means of the quality>=7 rows, read without Spark."""
+    with open(path, newline="") as f:
+        rows = list(csv.DictReader(f, delimiter=";"))
+    high = [r for r in rows if int(r["quality"]) >= 7]
+    by_quality = {}
+    for r in high:
+        by_quality.setdefault(int(r["quality"]), []).append(float(r["alcohol"]))
+    return (
+        len(rows),
+        len(high),
+        sum(float(r["total sulfur dioxide"]) < 125 for r in rows),
+        {q: statistics.fmean(v) for q, v in by_quality.items()},
+    )
 
 
 def test_wine_etl_elt_end_to_end(spark, wine_csv, tmp_path):
@@ -67,15 +70,19 @@ def test_wine_etl_elt_end_to_end(spark, wine_csv, tmp_path):
     elt_out = res["transform_wine_data_from_postgresql"].value
     stats = res["print_loaded_wine"].value.collect()
 
-    if wine_csv == REF_CSV:
+    if wine_csv == REFERENCE_WINE_CSV:
         assert raw_count == 4898
         assert loaded.count() == 1060  # quality >= 7 (BASELINE.md)
         assert elt_out.count() == 2005  # total_sulfur_dioxide < 125
         means = {r["quality"]: round(r["mean_val"], 4) for r in stats}
         assert means[7] == 11.3679 and means[8] == 11.6360 and means[9] == 12.1800
     else:
-        assert raw_count == 1000
-        assert loaded.count() > 0
+        n_raw, n_high, n_low_so2, want_means = _expected_from_file(wine_csv)
+        assert raw_count == n_raw
+        assert loaded.count() == n_high
+        assert elt_out.count() == n_low_so2
+        means = {r["quality"]: r["mean_val"] for r in stats}
+        assert means == pytest.approx(want_means, rel=1e-12)
 
     # idempotent re-load: running the ETL again must append 0 rows
     n_before = loaded.count()
