@@ -22,8 +22,8 @@ frames per tag), under one policy:
   catalog key resolves to (``sources.layout`` overrides) calls
   ``clear("plans")``.
 
-Values are plan metadata, code objects and persisted-frame handles, never
-table data.
+Values are plan metadata, code objects, persisted-frame handles and child
+session handles, never table data.
 """
 
 from __future__ import annotations
@@ -47,6 +47,7 @@ CAPS: dict[str, int] = {
     "udfs": 64,  # (name, *params) -> pandas_udf object
     "lookups": 64,  # (name, sf) -> small query-parameter lookup
     "persist": 256,  # rotate_persist tag -> its live persisted frames
+    "sessions": 1,  # name -> child session (streaming.catalog.stream_session)
 }
 
 _lock = threading.Lock()

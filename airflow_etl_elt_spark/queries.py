@@ -566,51 +566,33 @@ _MINHASH_IDX_VERSION = "v1"
 
 
 def _minhash_index_dir(sf: str) -> str:
-    """Identity-keyed cache dir for the persisted corpus signature index —
-    the SAME size+mtime identity derivation as the streaming drop stagers
-    (one implementation, streaming.catalog.source_identity, so a future
-    identity-scheme fix invalidates every derived /tmp cache at once)."""
-    import hashlib
-    import os
-    import tempfile
+    """Identity-keyed cache dir for the persisted corpus signature index,
+    keyed like the streaming drop stages (``streaming.catalog._stage_dir``)
+    so a fixture rewrite invalidates every derived /tmp cache at once."""
+    from airflow_etl_elt_spark.streaming.catalog import _stage_dir
 
-    from airflow_etl_elt_spark.streaming.catalog import source_identity
-
-    key = hashlib.md5(
-        f"{_MINHASH_IDX_VERSION}|{source_identity(sf, 'documents')}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_minhash_idx", key)
+    return _stage_dir(sf, f"minhash_idx|{_MINHASH_IDX_VERSION}", "documents")
 
 
 def _ensure_minhash_index(spark: SparkSession, sf: str) -> str:
     """Build (once per fixture identity) the corpus-side signature index and
-    return its directory. ATOMIC publish: the index is written to a
-    tmp-suffixed sibling and os.rename'd into place, so a concurrent first
-    caller can never observe (or corrupt) a half-written index — the same
-    recipe as the streaming stage cache; the loser of a publish race
-    discards its copy."""
+    return its directory, published atomically by the drop stagers' own
+    protocol (``streaming.catalog._publish_staged``): a concurrent first
+    caller can never observe (or corrupt) a half-written index."""
     import os
-    import shutil
-    import uuid
+
+    from airflow_etl_elt_spark.streaming.catalog import _publish_staged
 
     idx_dir = _minhash_index_dir(sf)
     if os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
         return idx_dir
     corpus = read_table(spark, sf, "documents").filter(F.col("doc_id") % 10 != 0)
-    tmp = idx_dir + f".tmp-{uuid.uuid4().hex[:8]}"
-    dedup.minhash_index_write(corpus, tmp)
-    os.makedirs(os.path.dirname(idx_dir), exist_ok=True)
-    try:
-        os.rename(tmp, idx_dir)
-    except OSError:
-        # Mirror _publish_staged: the loser of a concurrent-publish race
-        # discards its copy, but a rename failure with NO published winner
-        # (e.g. EXDEV from a cross-device /tmp) re-raises instead of
-        # silently returning a nonexistent index dir (r6 ADVICE).
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
-            raise
-    return idx_dir
+
+    def _write(tmp: str) -> int:
+        dedup.minhash_index_write(corpus, tmp)
+        return 1
+
+    return _publish_staged(idx_dir, _write)
 
 
 def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
@@ -645,18 +627,22 @@ def q_stream_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     one-shot batch key."""
     import glob as _glob
     import os
+    import shutil
     import tempfile
 
     from airflow_etl_elt_spark.streaming import catalog, windowed
 
     idx_dir = _ensure_minhash_index(spark, sf)
     staged = catalog.stage_document_drops(spark, sf)
-    out_dir = tempfile.mkdtemp(prefix="sg_sdi_out_")
+    out_dir = tempfile.mkdtemp(prefix="sg_sdi_out_", dir=catalog.scratch_root())
     ckpt = tempfile.mkdtemp(prefix="sg_sdi_ckpt_")
-    windowed.stream_incremental_dedup(
-        catalog.read_doc_drops(spark, staged), idx_dir, out_dir, ckpt,
-        threshold=0.4,
-    )
+    try:
+        windowed.stream_incremental_dedup(
+            catalog.read_doc_drops(spark, staged), idx_dir, out_dir, ckpt,
+            threshold=0.4,
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     schema = "id_new bigint, id_corpus bigint, est_jaccard double"
     if not _glob.glob(os.path.join(out_dir, "batch_id=*")):
         return spark.createDataFrame([], schema)
@@ -2732,8 +2718,9 @@ def q_stream_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-STREAM as-of join (both sides moving): clicks decorated with
     the user's latest purchase ≤ 1h old, decided by the watermark-gated
     reorder buffer. A far-future sentinel drop (user_id −1 on BOTH sides)
-    ripens every real left row; a second availableNow pass fires the
-    event-time timers the final watermark advance armed."""
+    ripens every real left row. One availableNow pass is enough: it ends
+    with a no-data batch that runs under the watermark the sentinel batch
+    advanced, and the event-time timers that advance armed fire there."""
     from airflow_etl_elt_spark.streaming import catalog, stateful
 
     staged = catalog.stage_event_drops(spark, sf, variant="asof")
@@ -2751,7 +2738,6 @@ def q_stream_asof_join(spark: SparkSession, sf: str) -> DataFrame:
             watermark="1 hour",
         ),
         "append",
-        passes=2,
     )
     return out.filter(F.col("event_id") >= 0).select(
         "event_id", F.col("asof_value").alias("asof_value")

@@ -12,6 +12,16 @@ gated reorder buffers (stream-stream as-of), session-window merges, and
 watermark-scoped dedup state all survive between batches and are exercised
 by the oracle comparison.
 
+Every stream runs on ONE child session per SparkContext
+(:func:`stream_session`), never on the caller's: the child carries the
+stream's own SQL conf (state-store partitions, UTC, ``nanosAsLong``), so a
+build changes no conf another caller of the same session can see.
+:func:`run_bounded` runs each stream in one ``availableNow`` pass into a
+memory sink and leaves nothing behind — no checkpoint directory, no
+registered memory-sink view, no listener on the context's listener bus;
+the returned frame alone holds the rows. So the context gains one
+streaming listener, the child's, however many stream keys are built.
+
 Reference scope: the reference's only stream-shaped feature is dataset-
 driven triggering (dags/etl_elt_wine.py:214-217 — SURVEY.md §2.9); this
 module is north-star surface built on the public Structured Streaming API.
@@ -25,6 +35,8 @@ group key.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import glob
 import hashlib
 import os
@@ -36,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airflow_etl_elt_spark import memo
 from airflow_etl_elt_spark.operators.relational import surrogate_key
 from airflow_etl_elt_spark.sources.readers import read_table
 
@@ -103,7 +116,6 @@ def _publish_staged(out: str, write_files) -> str:
     n_files = write_files(tmp)
     with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
         fh.write(f"{n_files}\n")
-    os.makedirs(_STAGE_ROOT, exist_ok=True)
     try:
         os.rename(tmp, out)
     except OSError:
@@ -212,16 +224,42 @@ def stage_event_drops(
     return _publish_staged(out, _write)
 
 
+#: the stream session's own SQL conf: state-store parallelism for the
+#: bounded fixtures (a production job sizes this to the cluster; it is fixed
+#: at the first checkpoint) and read_table's timestamp pins — window() and
+#: session_window bucket instants in session time, and the DuckDB oracle
+#: computes naive/UTC boundaries.
+_STREAM_CONF = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def _new_stream_session(spark: SparkSession) -> SparkSession:
+    child = spark.newSession()
+    for k, v in _STREAM_CONF.items():
+        child.conf.set(k, v)
+    return child
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The child session every stream here runs on: one per SparkContext,
+    memoized. A child has its own SQL conf and temp views, so nothing a
+    stream sets is seen by ``spark``. It is shared, not made per build,
+    because each session that starts a stream adds a listener to the
+    context's listener bus that is never removed."""
+    return memo.update(
+        "sessions", "stream", lambda old: old or _new_stream_session(spark)
+    )
+
+
 def read_drops(spark: SparkSession, staged: str) -> DataFrame:
     """File-source stream over the staged drops, ONE FILE PER MICRO-BATCH —
     every downstream operator crosses real batch boundaries."""
-    # Session TZ pin, same contract as read_table: window()/session_window
-    # bucket instants in SESSION time, and on a staging cache hit nothing
-    # else has pinned a non-UTC caller session yet (read_table only runs on
-    # a cache miss) — the oracle computes naive/UTC boundaries.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return (
-        spark.readStream.schema(_EVENT_SCHEMA)
+        stream_session(spark)
+        .readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
@@ -284,80 +322,66 @@ def read_doc_drops(spark: SparkSession, staged: str) -> DataFrame:
     """File-source stream over staged document drops, one file per
     micro-batch — each trigger delivers one corpus increment."""
     return (
-        spark.readStream.schema(_DOC_SCHEMA)
+        stream_session(spark)
+        .readStream.schema(_DOC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
 
 
-def run_bounded(
-    stream_df: DataFrame,
-    output_mode: str,
-    passes: int = 1,
-) -> DataFrame:
-    """Run a streaming plan to completion with ``availableNow`` into a
-    memory sink and return the sink as a batch DataFrame.
+def run_bounded(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Run a streaming plan to completion with ONE ``availableNow`` pass
+    into a memory sink and return the sink as a batch DataFrame.
 
-    ``passes=2`` restarts once from the same checkpoint: event-time timers
-    ripened by the LAST data batch's watermark advance fire on the restart's
-    no-data batch (the sentinel pattern the stream-stream as-of needs).
-    Each pass sinks to its OWN memory table — a restarted memory sink
-    starts empty, so accumulating across restarts means unioning the
-    per-pass tables (exactly-once across passes is the checkpoint's job:
-    state already advanced past pass 1's emissions, so pass 2 appends only
-    the timer-flushed remainder). State-store parallelism is pinned to 8
-    for the run (bounded fixtures; a production job sizes this to the
-    cluster) and the caller's setting is restored after.
+    The pass ends with a no-data batch once the data batches are done, so
+    event-time timers that the last watermark advance armed fire inside it
+    (the stream-stream as-of relies on this). The checkpoint is removed,
+    the sink's view dropped and the query's listener released before
+    returning: the returned frame holds the sink's rows, which live exactly
+    as long as it does.
     """
     spark = stream_df.sparkSession
     run_id = uuid.uuid4().hex[:12]
+    name = f"sg_stream_{run_id}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_sg_{run_id}_")
     try:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-    except Exception:
-        old = None
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        if passes == 1:
-            name = f"sg_stream_{run_id}"
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-            return spark.table(name)
-        # multi-pass: the memory sink cannot recover from a checkpoint, so
-        # accumulate through an idempotent foreachBatch parquet sink
-        # (overwrite-own-batch-directory — the stream_asof_enrich recipe);
-        # a replayed batch rewrites identical content
-        out_dir = tempfile.mkdtemp(prefix=f"sink_sg_{run_id}_")
-        schema = stream_df.schema
-
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
-            )
-
-        for _ in range(passes):
-            q = (
-                stream_df.writeStream.foreachBatch(_sink)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-        if not glob.glob(os.path.join(out_dir, "batch_id=*")):
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(
-            os.path.join(out_dir, "batch_id=*")
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
+        q.awaitTermination()
+        q.stop()
+        _release_listener(spark, q)
+        out = spark.table(name)
+        spark.catalog.dropTempView(name)
+        return out
     finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _release_listener(spark: SparkSession, q) -> None:
+    """Take a stopped query's own listener off the context's listener bus.
+    Each query runs its batches on a clone of its session, and a stateful
+    operator makes that clone build its StreamingQueryManager, whose
+    listener bus joins the context's and is never removed: one listener
+    more per stateful run, for the life of the context. Nothing else uses
+    the clone once the query has stopped."""
+    mgr = q._jsq.streamingQuery().sparkSessionForStream().streams()
+    field = mgr.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    spark.sparkContext._jsc.sc().listenerBus().removeListener(field.get(mgr))
+
+
+@functools.cache
+def scratch_root() -> str:
+    """This process's one directory for stream outputs that a returned
+    frame still reads, so they cannot go when the build returns; an
+    ``atexit`` hook removes it. Two first callers racing may each make
+    one, and each is removed at exit."""
+    root = tempfile.mkdtemp(prefix="sg_stream_out_")
+    atexit.register(shutil.rmtree, root, True)
+    return root

@@ -20,6 +20,8 @@ for a streaming query — size it up front (it is fixed at first checkpoint).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,13 +110,7 @@ def stream_insert_ignore(
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
         insert_ignore_by_name(batch_df.sparkSession, batch_df, path, key=key_col)
 
-    (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_foreach_batch(stream_df, write_batch, checkpoint_dir)
 
 
 def stream_merge_txn(
@@ -142,13 +138,7 @@ def stream_merge_txn(
             return
         table.merge(batch_df.sparkSession, batch_df, key=key_col, order_col=order_col)
 
-    (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_foreach_batch(stream_df, write_batch, checkpoint_dir)
 
 
 def run_available_now(stream_df: DataFrame, checkpoint_dir: str, query_name: str) -> list:
@@ -203,25 +193,16 @@ def stream_asof_enrich(
     (the standard idempotent-foreachBatch recipe; the sibling sinks get
     the same property from keyed anti-joins / value-level MERGE).
     """
-    import os as _os
-
     from airflow_etl_elt_spark.operators.asof import asof_join
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = asof_join(
+    _write_batch_dirs(
+        stream_df,
+        lambda batch_df: asof_join(
             batch_df, right, on=on, left_ts=left_ts, right_ts=right_ts,
             right_values=right_values, strict=False,
-        )
-        out.write.mode("overwrite").parquet(
-            _os.path.join(out_path, f"batch_id={batch_id}")
-        )
-
-    (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        out_path,
+        checkpoint_dir,
     )
 
 
@@ -250,26 +231,42 @@ def stream_incremental_dedup(
     Effectively-once: same overwrite-own-batch-directory recipe as
     ``stream_asof_enrich`` above — a replayed batch rewrites identical
     content."""
-    import os as _os
-
     from airflow_etl_elt_spark.operators.dedup import minhash_incremental_pairs
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = minhash_incremental_pairs(
+    _write_batch_dirs(
+        stream_docs,
+        lambda batch_df: minhash_incremental_pairs(
             batch_df.sparkSession,
             index_path,
             batch_df,
             threshold=threshold,
             broadcast_increment=True,
-        )
-        out.write.mode("overwrite").parquet(
-            _os.path.join(out_path, f"batch_id={batch_id}")
-        )
+        ),
+        out_path,
+        checkpoint_dir,
+    )
 
+
+def _run_foreach_batch(stream_df: DataFrame, write_batch, checkpoint_dir: str) -> None:
+    """Run ``write_batch(batch_df, batch_id)`` on every micro-batch of
+    everything available now, then stop."""
     (
-        stream_docs.writeStream.foreachBatch(write_batch)
+        stream_df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
+
+
+def _write_batch_dirs(stream_df: DataFrame, transform, out_path: str, checkpoint_dir: str) -> None:
+    """foreachBatch sink that writes ``transform(batch_df)`` OVERWRITING its
+    own ``<out_path>/batch_id=<n>`` directory: a batch replayed after a
+    retry rewrites identical content instead of appending a second copy."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        transform(batch_df).write.mode("overwrite").parquet(
+            os.path.join(out_path, f"batch_id={batch_id}")
+        )
+
+    _run_foreach_batch(stream_df, write_batch, checkpoint_dir)

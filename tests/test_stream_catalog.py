@@ -117,3 +117,46 @@ def test_stream_incremental_dedup_matches_batch_key(spark):
         for r in QUERIES["dedup_incremental"](spark, SF_SMOKE).collect()
     )
     assert stream_rows == batch_rows and stream_rows
+
+
+def _temp_views(session) -> set[str]:
+    return {t.name for t in session.catalog.listTables() if t.isTemporary}
+
+
+def test_stream_builds_leave_no_dirs_or_views(spark, monkeypatch):
+    """Fresh builds leave no checkpoint, sink or foreachBatch directory in
+    the temp dir, and no memory-sink view in the caller or in the stream
+    session; the returned frames still fetch their rows."""
+    import tempfile
+
+    from airflow_etl_elt_spark.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    tmp = tempfile.gettempdir()
+
+    def dirs() -> set[str]:
+        return {
+            p
+            for pat in ("ckpt_*", "sink_sg_*", "sg_sdi_*")
+            for p in glob.glob(os.path.join(tmp, pat))
+        }
+
+    before = dirs(), _temp_views(spark)
+    for key in ("stream_events_hourly", "stream_asof_join", "stream_dedup_incremental"):
+        assert QUERIES[key](spark, SF_SMOKE).collect(), key
+    assert (dirs(), _temp_views(spark)) == before
+    assert _temp_views(catalog.stream_session(spark)) == set()
+
+
+def test_stream_builds_add_at_most_one_listener(spark, monkeypatch):
+    """Four stream builds add at most one listener (the stream session's
+    own) to the context's listener bus, though each stateful run makes a
+    session clone with a listener of its own."""
+    from airflow_etl_elt_spark.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    n0 = bus.listeners().size()
+    for key in ("stream_events_hourly", "stream_dedup", "stream_sessionize", "stream_events_hourly"):
+        assert QUERIES[key](spark, SF_SMOKE).collect(), key
+    assert bus.listeners().size() - n0 <= 1
